@@ -1,7 +1,12 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.util.control.NonFatal
 
 /** The reference's `analytics` subcommand as a library call: computes the
   * ten summary tables (/root/reference/src/analytics.rs:7-32,41-198) from
@@ -208,7 +213,21 @@ object AnalyticsRunner {
   /** Run all ten summary families PLUS the three star dims
     * (docs/SCHEMA.md:190-262 — declared-only in the reference) and
     * materialize them under `outDir` — the full `analytics` subcommand
-    * (analytics.rs:7-32) with the schema actually completed. */
+    * (analytics.rs:7-32) with the schema actually completed.
+    *
+    * The reference refreshes its tables one after another; each table
+    * here is a small job chain over the same fact (about two tasks a
+    * job), so a sequential loop leaves most cores idle and pays every
+    * job's driver-side planning and commit in series. The writes are
+    * instead submitted up to `defaultParallelism` at a time, from a pool
+    * made per call: its threads are created by the caller's thread, so
+    * they inherit its Spark local properties (job group, scheduler
+    * pool). Each table's row count is an [[Observation]] on its own
+    * write plan — no read-back listing, footer read or count job.
+    *
+    * The first write to fail is rethrown naming its table; tables not
+    * yet started are cancelled, running ones are waited for, and no
+    * partial map is ever returned. */
   def runAll(spark: SparkSession, fact: DataFrame, anchor: java.sql.Timestamp,
       outDir: String, blocks: Option[DataFrame] = None): Map[String, Long] = {
     // fact_program_events / fact_token_transfers (SCHEMA.md:85-154) are
@@ -221,7 +240,12 @@ object AnalyticsRunner {
       Seq("fact_program_events" -> graft.ingest.Parse.factProgramEvents(b),
         "fact_token_transfers" -> graft.ingest.Parse.factTokenTransfers(b))
     }
-    val tables: Seq[(String, DataFrame)] = typedFacts ++ Seq(
+    // program_trends goes first: it is the longest table (two fact scans
+    // and a broadcast semi-join), so starting it last would stretch the
+    // refresh, and its broadcast relation would still be live when the
+    // call returns instead of collectable.
+    val tables: Seq[(String, DataFrame)] =
+      ("analytics_program_trends" -> programTrends(fact, anchor)) +: (typedFacts ++ Seq(
       "analytics_transaction_volume" -> transactionVolume(fact, anchor),
       "analytics_hourly_volume" -> hourlyVolume(fact, anchor),
       "analytics_active_programs" -> activePrograms(fact),
@@ -231,7 +255,6 @@ object AnalyticsRunner {
       "analytics_top_errors" -> topErrors(fact),
       "analytics_wallet_activity" -> walletActivity(fact, anchor),
       "analytics_top_wallets" -> topWallets(fact),
-      "analytics_program_trends" -> programTrends(fact, anchor),
       "dim_wallets" -> dimWallets(fact),
       "dim_programs" -> dimPrograms(fact),
       "dim_tokens" -> dimTokens(fact),
@@ -241,10 +264,49 @@ object AnalyticsRunner {
       // when the fact stream carries no telemetry events, exactly the
       // state a reference deployment's table is in today; fills as soon
       // as a Parse.parseTelemetry feed is unioned into the fact.
-      "fact_telemetry" -> factTelemetry(fact))
-    tables.map { case (name, df) =>
-      df.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$name")
-      name -> spark.read.parquet(s"$outDir/$name").count()
-    }.toMap
+      "fact_telemetry" -> factTelemetry(fact)))
+
+    val threads = new AtomicInteger()
+    val pool = Executors.newFixedThreadPool(spark.sparkContext.defaultParallelism, { r =>
+      val t = new Thread(r, s"analytics-refresh-${threads.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+    try {
+      val done = new ExecutorCompletionService[(String, Long)](pool)
+      val writes = tables.map { case (name, df) =>
+        done.submit(() => writeCounted(name, df, s"$outDir/$name"))
+      }
+      tables.map { _ =>
+        try done.take().get()
+        catch {
+          case e: ExecutionException =>
+            writes.foreach(_.cancel(false))
+            throw e.getCause
+        }
+      }.toMap
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
   }
+
+  /** The longest the listener bus may take to report a finished write's
+    * observed row count before the refresh fails instead of waiting on. */
+  private val ObservedWithin = 5.minutes
+
+  /** Overwrite `path` with `df` and return its row count, observed on the
+    * write plan itself. The observation is read only after the write has
+    * returned (it completes off the listener bus when the query ends),
+    * and within [[ObservedWithin]]; any failure names the table. */
+  private def writeCounted(name: String, df: DataFrame, path: String): (String, Long) =
+    try {
+      val rows = Observation(name)
+      df.observe(rows, count(lit(1)).as("rows"))
+        .write.mode(SaveMode.Overwrite).parquet(path)
+      name -> Await.result(rows.future, ObservedWithin).getAs[Long]("rows")
+    } catch {
+      case NonFatal(e) =>
+        throw new RuntimeException(s"analytics refresh failed on $name: ${e.getMessage}", e)
+    }
 }

@@ -148,7 +148,11 @@ object TrainPrep extends QueryModule {
     * reached neither the model fold nor the scored output before
     * either (the oracle's UNNEST drops them the same way). Guide §1.2:
     * the tokenizer regexp was the dominant map cost and ran 4× (plans
-    * showed 8 scans across the two dump sections); it now runs once. */
+    * showed 8 scans across the two dump sections); it now runs once.
+    *
+    * Invariant: `doc_id` is unique in `d`. [[labOf]] groups by doc_id
+    * alone, so a doc_id shared by two rows (say, two sources) would get
+    * one label from their pooled token count instead of one per row. */
   private def bucketTf(d: DataFrame, withSource: Boolean): DataFrame = {
     val keys =
       if (withSource) Seq(col("doc_id"), col("source")) else Seq(col("doc_id"))
@@ -158,7 +162,9 @@ object TrainPrep extends QueryModule {
       .agg(count(lit(1)).as("tf"))
   }
 
-  /** The weak label from the tf aggregate: y = [Σ occurrences ≥ 60]. */
+  /** The weak label from the tf aggregate: y = [Σ occurrences ≥ 60].
+    * Equal to the per-row `size(tokens) >= 60` label only while `doc_id`
+    * is unique in the documents frame (see [[bucketTf]]). */
   private def labOf(tf: DataFrame): DataFrame =
     tf.groupBy(col("doc_id"))
       .agg((sum(col("tf")) >= 60L).cast("long").as("y"))

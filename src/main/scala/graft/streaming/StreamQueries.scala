@@ -343,14 +343,24 @@ object StreamQueries extends QueryModule {
     * their mtime-ordered staging names exactly as before. An EMPTY
     * chunk (possible on degenerate fixtures — dirty-data runs) writes
     * no dir; it falls back to the old per-chunk empty write so the
-    * staged file set, and therefore the batch cadence, is unchanged. */
-  private def stageChunks(s: SparkSession, staged: DataFrame, staging: String,
+    * staged file set, and therefore the batch cadence, is unchanged.
+    * A chunk value outside [from, n) — NULL included — would be written
+    * to scratch and then deleted with it, so the rows would never reach
+    * a micro-batch: the staging fails instead, naming the values. */
+  private[streaming] def stageChunks(s: SparkSession, staged: DataFrame, staging: String,
       n: Int, baseMs: Long, from: Int = 0): Unit = {
     val fs = new org.apache.hadoop.fs.Path(staging)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     val scratch = s"$staging/.write-chunks-$from"
     staged.repartition(n - from, col("chunk"))
       .write.partitionBy("chunk").parquet(scratch)
+    val outside = fs.listStatus(new org.apache.hadoop.fs.Path(scratch))
+      .map(_.getPath.getName).filter(_.startsWith("chunk="))
+      .map(_.stripPrefix("chunk="))
+      .filterNot(v => v.toIntOption.exists(c => c >= from && c < n))
+    require(outside.isEmpty,
+      s"staged chunk values ${outside.sorted.mkString(", ")} fall outside " +
+        s"[$from, $n); their rows would never be delivered")
     (from until n).foreach { c =>
       val dir = new org.apache.hadoop.fs.Path(scratch, s"chunk=$c")
       val name = f"chunk-$c%04d.parquet"

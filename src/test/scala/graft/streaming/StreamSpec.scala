@@ -860,4 +860,25 @@ class StreamSpec extends SparkSpec {
       .select("k", "v").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(preReplay == state().map(identity).toSet)
   }
+
+  test("stageChunks stages one file per chunk and fails on chunk values outside [from, n)") {
+    def frame(chunk: org.apache.spark.sql.Column) =
+      spark.range(0, 30).select(col("id").as("event_id"), chunk.as("chunk"))
+    val ok = Files.createTempDirectory("graft_stage_ok").toString
+    StreamQueries.stageChunks(spark, frame(col("id") % 3), ok, n = 3, baseMs = 0L)
+    val staged = new java.io.File(ok).list().filter(_.endsWith(".parquet")).sorted.toSeq
+    assert(staged == Seq("chunk-0000.parquet", "chunk-0001.parquet", "chunk-0002.parquet"))
+    assert(spark.read.parquet(ok).count() == 30)
+
+    val bad = frame(when(col("id") === 29, 5L).when(col("id") === 28, lit(null))
+      .otherwise(col("id") % 3))
+    val e = intercept[IllegalArgumentException](StreamQueries.stageChunks(spark, bad,
+      Files.createTempDirectory("graft_stage_bad").toString, n = 3, baseMs = 0L))
+    assert(e.getMessage.contains("5, __HIVE_DEFAULT_PARTITION__ fall outside [0, 3)"),
+      e.getMessage)
+    val below = intercept[IllegalArgumentException](StreamQueries.stageChunks(spark,
+      frame(col("id") % 3), Files.createTempDirectory("graft_stage_from").toString,
+      n = 3, baseMs = 0L, from = 1))
+    assert(below.getMessage.contains("values 0 fall outside [1, 3)"), below.getMessage)
+  }
 }
