@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** CLI mirroring the reference's four subcommands
   * (/root/reference/src/main.rs:13-37) so a reference user can switch:
@@ -40,9 +39,9 @@ object Main {
         "(parquet | orc | json | postgres | jdbc)")
     }
 
-  private def sinkCount(spark: SparkSession, out: String,
-      env: Map[String, String]): Long =
-    sinkFor(out, env).readIfAny(spark).map(_.count()).getOrElse(0L)
+  private def sinkCount(spark: SparkSession,
+      sink: ingest.Backfill.EventSink): Long =
+    sink.readIfAny(spark).map(_.count()).getOrElse(0L)
 
   def main(args: Array[String]): Unit = args.toList match {
     // optional trailing arg = etl_checkpoints path: the run is then
@@ -65,54 +64,27 @@ object Main {
       // and sizes it for resume granularity, not row-update parity.
       val segInterval = EtlConfig.explicitLong(
         sys.env, "ETL_CHECKPOINT_INTERVAL", cfg.checkpointInterval)
+      val sink = sinkFor(out, sys.env)
       val spark = session()
       rest.headOption match {
         case Some(ckpt) =>
-          // the guard and the selector must share ONE parser: matching on
-          // sinkFor (not a re-read of sys.env) means a sink type added
-          // there can never silently bypass this refusal — and the
-          // FileSink's format rides into runTracked, so WAREHOUSE_TYPE=
-          // orc/json is honored (not silently written as parquet)
-          sinkFor(out, sys.env) match {
-            case ingest.Backfill.JdbcSink(_) =>
-              // segmented checkpointing commits per-segment FILE writes;
-              // refuse a database sink rather than silently writing parquet
-              usageExit("tracked backfill (etl_checkpoints) supports file " +
-                "sinks only; run untracked for a JDBC warehouse")
-            case ingest.Backfill.FileSink(path, fmt) =>
-              ingest.Checkpoints.runTracked(spark, ckpt, s"bf_${start}_$end",
-                startL, endL, workersI, path,
-                format = fmt,
-                checkpointInterval = segInterval,
-                chunkSize = Some(cfg.backfillChunkSize))
-          }
+          ingest.Checkpoints.runTracked(spark, ckpt, s"bf_${start}_$end",
+            startL, endL, workersI, sink, checkpointInterval = segInterval,
+            chunkSize = Some(cfg.backfillChunkSize))
         case None =>
-          ingest.Backfill.runTo(spark, startL, endL, workersI,
-            sinkFor(out, sys.env), chunkSize = Some(cfg.backfillChunkSize))
+          ingest.Backfill.runTo(spark, startL, endL, workersI, sink,
+            chunkSize = Some(cfg.backfillChunkSize))
       }
-      println(s"backfill complete: ${sinkCount(spark, out, sys.env)} events")
+      println(s"backfill complete: ${sinkCount(spark, sink)} events")
       spark.stop()
 
     case "incremental" :: src :: sink :: ckpt :: rest =>
       val intervalSec = rest.headOption
         .map(s => num("incremental", "intervalSec", s)(_.toLong))
+      val target = sinkFor(sink, sys.env)
       val spark = session()
-      val q = sinkFor(sink, sys.env) match {
-        // WAREHOUSE_TYPE=postgres/jdbc: the reference's actual
-        // incremental deployment — micro-batch upserts into the DB
-        case ingest.Backfill.JdbcSink(wh) =>
-          val raw = spark.readStream
-            .schema(model.Schemas.rawBlockSchema).json(src)
-          ingest.Incremental.startFromRawToJdbc(raw, wh, ckpt,
-            triggerFor(intervalSec, sys.env))
-        // the FileSink's format threads through to BOTH the guard read
-        // and the append — WAREHOUSE_TYPE=orc/json is honored, and the
-        // terminal sinkCount (which reads via the same sinkFor) agrees
-        case ingest.Backfill.FileSink(path, fmt) =>
-          ingest.Incremental.start(spark, src, path, ckpt,
-            triggerFor(intervalSec, sys.env), fmt)
-      }
-      q.awaitTermination()
+      ingest.Incremental.start(spark, src, target, ckpt,
+        triggerFor(intervalSec, sys.env)).awaitTermination()
       spark.stop()
 
     // incremental from the native block source: slots are the streaming
@@ -129,6 +101,7 @@ object Main {
         case Right(v) => v
         case Left(err) => usageExit(s"incremental-blocks: $err")
       }
+      val target = sinkFor(sink, sys.env)
       val spark = session()
       val raw0 = spark.readStream.format("graft.sources.BlockSource")
         .option("startSlot", startL).option("tipSlot", tipL)
@@ -138,14 +111,9 @@ object Main {
         // incremental.rs:68) becomes the per-trigger slot admission
         .option("maxSlotsPerTrigger", EtlConfig().batchSize)
       val raw = endpoint.fold(raw0)(u => raw0.option("endpoint", u)).load()
-      val q = sinkFor(sink, sys.env) match {
-        case ingest.Backfill.JdbcSink(wh) =>
-          ingest.Incremental.startFromRawToJdbc(raw, wh, ckpt)
-        case ingest.Backfill.FileSink(path, fmt) =>
-          ingest.Incremental.startFromRaw(raw, path, ckpt, format = fmt)
-      }
-      q.awaitTermination()
-      println(s"incremental-blocks complete: ${sinkCount(spark, sink, sys.env)} events")
+      ingest.Incremental.startFromRaw(raw, target, ckpt,
+        org.apache.spark.sql.streaming.Trigger.AvailableNow()).awaitTermination()
+      println(s"incremental-blocks complete: ${sinkCount(spark, target)} events")
       spark.stop()
 
     case "analytics" :: fact :: out :: rest =>
@@ -195,12 +163,7 @@ object Main {
       // ping returns Err (health.rs:22-31) — reported as one JSON line
       // + nonzero exit, never an uncaught stack trace: the verdict
       // matters most exactly when the warehouse is broken.
-      val tip = try sinkFor(fact, sys.env).readIfAny(spark) match {
-        case Some(sink) =>
-          val row = sink.agg(max(col("slot"))).collect()(0)
-          if (row.isNullAt(0)) -1L else row.getLong(0)
-        case None => -1L
-      } catch {
+      val tip = try sinkFor(fact, sys.env).tipSlot(spark) catch {
         case scala.util.control.NonFatal(e) =>
           println(s"""{"status":"sink_failed","error":${
             jsonString(String.valueOf(e.getMessage))}}""")

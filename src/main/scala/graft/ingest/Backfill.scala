@@ -1,7 +1,6 @@
 package graft.ingest
 
-import graft.model.Schemas
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Parallel historical range loader — the reference's `backfill`
@@ -13,9 +12,10 @@ import org.apache.spark.sql.functions._
   * + parse → dedup on the deterministic id → date-partitioned parquet
   * write (SURVEY.md §3.2): chunking/concurrency = partitioning, semaphore
   * = executor cores, per-chunk connections = per-partition writers, and
-  * the per-event upsert becomes dropDuplicates + a slot-level anti-join
-  * against the sink before an append (the reference's is_slot_processed
-  * guard, S11/J3, as one distributed pass).
+  * the per-event upsert becomes dropDuplicates + [[EventSink.write]]'s
+  * event-level anti-join against the sink's slot span before an append
+  * (the reference's is_slot_processed guard, S11/J3, as one distributed
+  * pass).
   *
   * At cluster scale the fetcher partition count bounds concurrent RPC
   * load exactly like the reference's `--workers` (rate limiting is a
@@ -79,52 +79,63 @@ object Backfill {
       .toDF("slot", "block_json")
   }
 
-  /** Reads the sink if it has data; None for absent/empty sinks (a dir
-    * holding only _SUCCESS would make the read throw). Shared by every
-    * sink probe in the package — the caught-exception set must not
-    * diverge between the backfill guard, the incremental guard, and the
-    * lag probe. */
-  private[ingest] def readSinkIfAny(spark: SparkSession, path: String,
-      format: String = "parquet"): Option[DataFrame] =
-    try Some(spark.read.format(format).load(path))
-    catch { case _: org.apache.spark.sql.AnalysisException => None }
-
-  /** Full backfill: fetch → parse → dedup → date-partitioned APPEND,
-    * guarded by an EVENT-level anti-join over the re-run's slot range.
-    * Event granularity (not slot — see [[filterProcessed]]) is what
-    * makes a crashed run heal: the append is a plain parquet write, NOT
-    * atomic, so a kill mid job-commit can leave a slot PARTIALLY
-    * visible in the sink — a slot-level guard would then skip that
-    * slot's missing events on every replay, forever. Pruning the sink
-    * read to the re-run's slot span first (pushed to parquet row-group
-    * stats) keeps the guard's cost range-sized, not sink-sized, at any
-    * table size. Identical replays are no-ops; overlapping or partial
-    * re-runs add exactly the missing events. (A partition-overwrite
-    * write would delete previously loaded slots sharing a date
-    * partition with the re-run range.) */
   /** The warehouse-dispatch axis (S13, warehouse.rs:30-39's backend
-    * factory): the backfill pipeline shape is sink-agnostic — a sink
-    * supplies the replay-guard probe and the append. File formats
-    * (parquet, orc, …) and JDBC databases plug in as values. */
+    * factory): the ingest pipelines are sink-agnostic — a sink supplies
+    * the replay-guard probe and the append, and [[write]] is the one
+    * idempotent landing both verbs share (the reference's
+    * `insert_events`, warehouse.rs:201-249). File formats (parquet,
+    * orc, …) and JDBC databases plug in as values. */
   sealed trait EventSink extends Serializable {
     /** Current sink rows, or None when the sink does not exist yet. */
     def readIfAny(spark: SparkSession): Option[DataFrame]
     def append(events: DataFrame): Unit
+
+    /** Guarded APPEND: drop every event whose `event_id` the sink
+      * already holds within `span`, then append the rest. The guard is
+      * EVENT-level, not slot-level, and that is what makes a crashed
+      * run heal: a plain parquet append is NOT atomic, so a kill mid
+      * job-commit can leave a slot PARTIALLY visible in the sink — a
+      * slot-level guard would then skip that slot's missing events on
+      * every replay, forever. `span` prunes the sink read to what the
+      * incoming events can collide with (a backfill's slot range, an
+      * incremental batch's dates), pushed to parquet row-group stats,
+      * the partition index or a database's WHERE, so the guard's cost
+      * is batch-sized, not sink-sized, at any table size. Identical
+      * replays are no-ops; overlapping or partial re-runs add exactly
+      * the missing events — first write wins per `event_id`, and
+      * colliding ids are byte-equal replays (the id is a pure function
+      * of slot, signature, index and type). (A partition-overwrite
+      * write would delete previously loaded slots sharing a date
+      * partition with the re-run range.) */
+    def write(events: DataFrame, span: Column): Unit =
+      append(readIfAny(events.sparkSession).fold(events)(existing =>
+        events.join(existing.filter(span).select("event_id"),
+          Seq("event_id"), "left_anti")))
+
+    /** Highest slot landed, -1 when the sink is absent or empty — the
+      * sink side of the chain-tip lag (ST11, health.rs:51-54). The lag
+      * probe matters most in the startup window where the sink may not
+      * exist yet, so that must read as a big lag, never a stack trace. */
+    def tipSlot(spark: SparkSession): Long =
+      readIfAny(spark).map(_.agg(max(col("slot"))).head())
+        .filterNot(_.isNullAt(0)).fold(-1L)(_.getLong(0))
   }
 
-  /** Date-partitioned file sink (parquet, orc, …). */
+  /** Date-partitioned file sink (parquet, orc, …). A directory holding
+    * only `_SUCCESS` reads as absent: the load would throw. */
   case class FileSink(path: String, format: String = "parquet")
       extends EventSink {
     def readIfAny(spark: SparkSession): Option[DataFrame] =
-      readSinkIfAny(spark, path, format)
+      try Some(spark.read.format(format).load(path))
+      catch { case _: org.apache.spark.sql.AnalysisException => None }
     def append(events: DataFrame): Unit =
       events.write.mode(SaveMode.Append).partitionBy("block_date")
         .format(format).save(path)
   }
 
   /** SQL-database sink — the reference's REAL warehouse (Postgres,
-    * warehouse.rs:41-139) via [[graft.sources.JdbcWarehouse]]. The slot
-    * predicate of the replay guard pushes down to the database's WHERE;
+    * warehouse.rs:41-139) via [[graft.sources.JdbcWarehouse]]. The
+    * guard's span predicate pushes down to the database's WHERE;
     * `block_date` rides as a plain column (databases index, files
     * partition). */
   case class JdbcSink(warehouse: graft.sources.JdbcWarehouse)
@@ -148,23 +159,6 @@ object Backfill {
     val events = Parse.parse(
       fetchRange(spark, startSlot, endSlot, workers, fetcher, chunkSize))
       .withColumn("block_date", to_date(col("block_time")))
-    val toWrite = sink.readIfAny(spark) match {
-      case Some(existing) => events.join(
-        existing.filter(col("slot").between(startSlot, endSlot - 1))
-          .select(col("event_id")),
-        Seq("event_id"), "left_anti")
-      case None => events
-    }
-    sink.append(toWrite)
+    sink.write(events, col("slot").between(startSlot, endSlot - 1))
   }
-
-  /** Slot-dedup probe (S11/J3, warehouse.rs:287-299): drop slots
-    * already present in the sink via a left-anti join — one distributed
-    * pass instead of the reference's per-slot COUNT(*) probe. This is
-    * the reference's WORKLIST shape (which ranges still need fetching);
-    * [[run]]'s write guard deliberately does NOT use it — slot
-    * granularity assumes a slot is all-or-nothing in the sink, which a
-    * non-atomic append cannot promise after a crash. */
-  def filterProcessed(incoming: DataFrame, existing: DataFrame): DataFrame =
-    incoming.join(existing.select(col("slot")).distinct(), Seq("slot"), "left_anti")
 }

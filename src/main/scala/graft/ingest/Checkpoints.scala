@@ -57,9 +57,10 @@ object Checkpoints {
     * each N-slot segment lands fully before its progress row commits,
     * so a crash resumes from `last_processed_slot + 1` instead of
     * re-running the whole range — the failed row carries the true
-    * high-water mark, and Backfill.run's event-level anti-join makes
-    * the re-run of the crashed segment itself converge. None keeps the
-    * single-segment behavior (one in_progress → one terminal row).
+    * high-water mark, and the sink's event-level guarded write makes
+    * the re-run of the crashed segment itself converge, on files and
+    * JDBC databases alike. None keeps the single-segment behavior (one
+    * in_progress → one terminal row).
     *
     * Size the interval for RESUME GRANULARITY, not row-update parity:
     * each segment is a full pipeline run (fetch + parse + sink-pruned
@@ -69,9 +70,9 @@ object Checkpoints {
     * work you are willing to refetch after a crash — so a 1M-slot
     * range stays tens of segments, never ten thousand. */
   def runTracked(spark: SparkSession, ckptPath: String, checkpointId: String,
-      startSlot: Long, endSlot: Long, workers: Int, outPath: String,
+      startSlot: Long, endSlot: Long, workers: Int, sink: Backfill.EventSink,
       fetcher: Backfill.BlockFetcher = Backfill.syntheticBlock,
-      format: String = "parquet", checkpointInterval: Option[Long] = None,
+      checkpointInterval: Option[Long] = None,
       chunkSize: Option[Long] = None): Unit = {
     record(spark, ckptPath, checkpointId, startSlot, endSlot, startSlot - 1, InProgress)
     val step = checkpointInterval.filter(_ > 0).getOrElse(endSlot - startSlot)
@@ -79,7 +80,7 @@ object Checkpoints {
     try {
       while (done < endSlot) {
         val segEnd = math.min(done + step, endSlot)
-        Backfill.run(spark, done, segEnd, workers, outPath, fetcher, format, chunkSize)
+        Backfill.runTo(spark, done, segEnd, workers, sink, fetcher, chunkSize)
         done = segEnd
         val status = if (done >= endSlot) Completed else InProgress
         record(spark, ckptPath, checkpointId, startSlot, endSlot, done - 1, status)

@@ -29,38 +29,37 @@ object Incremental {
     *                 stops (testable batch mode); processing-time mirrors
     *                 the reference's 30 s poll loop (config.rs:76-79).
     */
-  def start(spark: SparkSession, srcDir: String, sinkPath: String,
+  def start(spark: SparkSession, srcDir: String, sink: Backfill.EventSink,
       checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      format: String = "parquet"): StreamingQuery = {
-    val raw = spark.readStream
-      .schema(Schemas.rawBlockSchema)
-      .json(srcDir)
-    startFromRaw(raw, sinkPath, checkpointDir, trigger, format)
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    startFromRaw(spark.readStream.schema(Schemas.rawBlockSchema).json(srcDir),
+      sink, checkpointDir, trigger)
+
+  /** [[startFromRaw]] into a parquet [[Backfill.FileSink]] at `sinkPath`. */
+  def startFromRaw(raw: DataFrame, sinkPath: String, checkpointDir: String,
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    startFromRaw(raw, Backfill.FileSink(sinkPath), checkpointDir, trigger)
 
   /** The shared pipeline tail for ANY raw block stream (file drop-dir or
-    * the DataSource V2 block source): streaming-safe parse (no unbounded
-    * dedup state — idempotency is enforced per epoch in foreachBatch),
-    * checkpointed, idempotent date-partitioned append.
-    *
-    * @param format file format of the sink (the S13 axis's file leg) —
-    *               BOTH the guard read and the append must speak it, or
-    *               a WAREHOUSE_TYPE=orc run would write parquet that its
-    *               own replay guard then fails to read back. */
-  def startFromRaw(raw: DataFrame, sinkPath: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      format: String = "parquet"): StreamingQuery =
+    * the DataSource V2 block source) into ANY sink (file formats or a
+    * JDBC database): streaming-safe parse (no unbounded dedup state —
+    * idempotency is enforced per epoch in foreachBatch), checkpointed,
+    * and landed through the same guarded [[Backfill.EventSink.write]]
+    * as a backfill — the reference's poll loop likewise hands every
+    * batch to the one `insert_events` (incremental.rs:55-96), so a
+    * replayed epoch (checkpoint rollback, restart mid-commit) converges
+    * instead of duplicating. */
+  def startFromRaw(raw: DataFrame, sink: Backfill.EventSink,
+      checkpointDir: String, trigger: Trigger): StreamingQuery =
     Parse.parse(raw.select(col("slot"), col("block_json")), dedup = false)
       .withColumn("block_date", to_date(col("block_time")))
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-epoch idempotent upsert: dedup inside the batch, then
-        // anti-join against the sink (warehouse.rs:227-229 semantics —
-        // first write wins per event_id; replays converge).
-        val spark = batch.sparkSession
+        // per-epoch idempotent landing: dedup inside the batch, then the
+        // sink's guarded write (warehouse.rs:227-229 semantics — first
+        // write wins per event_id; replays converge).
         // three consumers below (date probe, anti-join, write): pin so
         // the batch's parse work runs once per trigger
         val deduped = batch.dropDuplicates("event_id")
@@ -88,59 +87,9 @@ object Incremental {
               val in = col("block_date").isin(realDates.toIndexedSeq: _*)
               if (nullDates.nonEmpty) in || col("block_date").isNull else in
             }
-          val toWrite = Backfill.readSinkIfAny(spark, sinkPath, format) match {
-            case Some(existing) => deduped.join(
-              existing.filter(prune).select(col("event_id")),
-              Seq("event_id"), "left_anti")
-            case None => deduped
-          }
-          toWrite.write.mode("append").partitionBy("block_date")
-            .format(format).save(sinkPath)
+          sink.write(deduped, prune)
         } finally deduped.unpersist()
         ()
       }
       .start()
-
-  /** The same incremental pipeline into a SQL database — the
-    * reference's ACTUAL deployment shape (incremental.rs:55-96: the
-    * poll loop accumulates events and calls
-    * `warehouse.insert_events(batch)`, whose per-row
-    * `ON CONFLICT (event_id) DO UPDATE` makes replays converge,
-    * warehouse.rs:201-249). Here each micro-batch lands through
-    * [[graft.sources.JdbcWarehouse.upsert]]: last-write-wins on
-    * event_id inside the batch, then transactional per-partition
-    * DELETE+INSERT — so a replayed epoch (checkpoint rollback, restart
-    * mid-commit) rewrites the same rows instead of duplicating them.
-    * No anti-join guard is needed on this sink: the database upsert IS
-    * the idempotency mechanism, exactly as in the reference. */
-  def startFromRawToJdbc(raw: DataFrame,
-      warehouse: graft.sources.JdbcWarehouse, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    Parse.parse(raw.select(col("slot"), col("block_json")), dedup = false)
-      .withColumn("block_date", to_date(col("block_time")))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // versionCol = slot: an event_id is a pure function of
-        // (slot, sig, index, type), so colliding rows are byte-equal
-        // replays — any total order converges; slot keeps it explicit
-        warehouse.upsert(batch, "event_id", "slot")
-      }
-      .start()
-
-  /** Chain-tip vs sink-tip lag (ST11, health.rs:51-54): trivial batch
-    * query instead of a skipped check. An empty OR NOT-YET-CREATED sink
-    * reports the full distance from slot -1 — the lag probe matters
-    * most in exactly the startup window where the sink may not exist,
-    * so an unreadable path must be a big lag, never a stack trace. */
-  def slotLag(spark: SparkSession, sinkPath: String, chainTip: Long): Long = {
-    val sinkTip = Backfill.readSinkIfAny(spark, sinkPath) match {
-      case Some(sink) =>
-        val row = sink.agg(max(col("slot"))).collect()(0)
-        if (row.isNullAt(0)) -1L else row.getLong(0)
-      case None => -1L
-    }
-    chainTip - sinkTip
-  }
 }

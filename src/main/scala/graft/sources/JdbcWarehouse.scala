@@ -1,10 +1,8 @@
 package graft.sources
 
-import java.sql.DriverManager
 import java.util.Properties
 
-import graft.operators.Upsert
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects, JdbcType}
 import org.apache.spark.sql.types.{DataType, StringType}
 
@@ -22,25 +20,19 @@ import org.apache.spark.sql.types.{DataType, StringType}
   *    pruning on the file path.
   *  - APPENDS use Spark's parallel JDBC writer: one batched INSERT
   *    stream per partition — the reference's per-chunk connection
-  *    (backfill.rs:64-102) as executor-side parallelism.
-  *  - UPSERTS resolve last-write-wins IN SPARK first
-  *    ([[Upsert.lastWriteWins]] — one shuffle, defined tie semantics),
-  *    then land as per-partition DELETE+INSERT transactions: the
-  *    portable spelling of `ON CONFLICT (key) DO UPDATE` (MERGE
-  *    dialects differ across databases; delete-then-insert of a
-  *    key-unique batch is semantically identical and batches cleanly
-  *    through `addBatch`/`executeBatch`). Each partition is ONE
-  *    transaction — a mid-batch failure rolls back, so replays stay
-  *    idempotent (the reference wraps its per-batch upserts in a
-  *    transaction for the same reason, warehouse.rs:209-248).
+  *    (backfill.rs:64-102) as executor-side parallelism. Idempotency
+  *    is the caller's: both ingest verbs land through
+  *    `Backfill.EventSink.write`, whose event-level anti-join stands in
+  *    for the reference's `ON CONFLICT (event_id)` — colliding ids are
+  *    byte-equal replays, so first-write-wins and last-write-wins leave
+  *    the same rows.
   *
   * At 100 TB the analytic store is the lake ([[graft.operators.MergeTable]]);
   * a JDBC warehouse is the serving/metadata-sized sink the reference
   * actually shipped — bounded tables, not the fact corpus. The writer
-  * parallelism (= partitions) is therefore the knob that keeps a real
-  * database from being connection-stormed: [[upsert]] caps itself at
-  * `maxConnections`; [[append]] callers repartition, mirroring
-  * `--workers`.
+  * parallelism (= partitions) is therefore what keeps a real database
+  * from being connection-stormed: [[append]] caps it at
+  * `maxConnections`, whatever the incoming frame's partitioning.
   */
 object JdbcWarehouse {
 
@@ -103,9 +95,9 @@ object JdbcWarehouse {
   *   first-write table creation — for column-precise DDL (e.g.
   *   `"event_id VARCHAR(64)"`) where the dialect default is wider than
   *   a production table wants.
-  * @param maxConnections upsert's connection budget: each partition of
-  *   the resolved batch opens one DB connection, so [[upsert]] caps the
-  *   partition count at this value — a wide micro-batch (partitions =
+  * @param maxConnections the append's connection budget: each written
+  *   partition opens one DB connection, so [[append]] caps the partition
+  *   count at this value — a wide backfill or micro-batch (partitions =
   *   source parallelism) must not connection-storm the database. */
 case class JdbcWarehouse(url: String, table: String,
     user: Option[String] = None, password: Option[String] = None,
@@ -120,11 +112,11 @@ case class JdbcWarehouse(url: String, table: String,
   }
 
   /** The sink's current rows, or None when the table does not exist
-    * yet (first run) — the JDBC twin of `Backfill.readSinkIfAny`.
+    * yet (first run) — the JDBC twin of `Backfill.FileSink.readIfAny`.
     *
     * ONLY table-absence maps to None: a transient error (connection
     * blip, lock timeout, permission change) must PROPAGATE — swallowed
-    * into None it would silently disable Backfill's replay guard and
+    * into None it would silently disable the ingest replay guard and
     * duplicate every replayed event. */
   def readIfAny(spark: SparkSession): Option[DataFrame] =
     try {
@@ -137,73 +129,16 @@ case class JdbcWarehouse(url: String, table: String,
     }
 
   /** Parallel batched append (no conflict handling — callers guard with
-    * the event-level anti-join, as on the file path). */
+    * the event-level anti-join, as on the file path). The writer's
+    * `numPartitions` option coalesces a wider frame down to
+    * `maxConnections` before it opens any connection; coalesce only
+    * ever decreases the count, so a frame inside the budget keeps its
+    * layout. */
   def append(df: DataFrame): Unit = {
     JdbcWarehouse.ensureDialect()
     val w = df.write.mode(SaveMode.Append)
+      .option("numPartitions", math.max(1, maxConnections).toLong)
     createColumnTypes.fold(w)(w.option("createTableColumnTypes", _))
       .jdbc(url, table, props)
-  }
-
-  /** `INSERT … ON CONFLICT (key) DO UPDATE` for a whole batch:
-    * last-write-wins resolution in Spark, then per-partition
-    * DELETE+INSERT in one transaction each. Creates the table (via an
-    * empty append) when absent so first-run and replay share one code
-    * path.
-    *
-    * NULL keys are pure inserts, exactly like SQL `ON CONFLICT` (no
-    * two NULLs conflict — the [[Upsert.lastWriteWins]] contract): a
-    * replayed batch is idempotent for KEYED rows; null-key rows insert
-    * again, as they would under the reference's `ON CONFLICT
-    * (event_id)` against a nullable key. The reference's PK columns
-    * are NOT NULL, so keyed pipelines never hit this edge. */
-  def upsert(batch: DataFrame, key: String, versionCol: String): Unit = {
-    JdbcWarehouse.ensureDialect()
-    // coalesce only ever DECREASES the partition count, so this is a
-    // pure cap: a batch already inside the budget keeps its layout
-    val resolved = Upsert.lastWriteWins(batch, key, versionCol)
-      .coalesce(math.max(1, maxConnections))
-    if (readIfAny(batch.sparkSession).isEmpty)
-      append(resolved.limit(0)) // CREATE TABLE from the schema, no rows
-    val cols = resolved.schema.fieldNames.toSeq
-    // quote identifiers: Spark's writer creates case-exact quoted
-    // columns, so unquoted names would case-fold at the database
-    def q(c: String) = "\"" + c + "\""
-    val insertSql = s"INSERT INTO $table (${cols.map(q).mkString(", ")}) " +
-      s"VALUES (${cols.map(_ => "?").mkString(", ")})"
-    val deleteSql = s"DELETE FROM $table WHERE ${q(key)} = ?"
-    val keyIdx = cols.indexOf(key)
-    require(keyIdx >= 0, s"upsert key '$key' not in batch columns $cols")
-    // capture plain values, not `this` (executor-side serialization);
-    // credentials must ride along — a raw url-only connect would fail
-    // against any authenticated database
-    val u = url
-    val (usr, pwd) = (user, password)
-    resolved.foreachPartition { rows: Iterator[Row] =>
-      if (rows.nonEmpty) {
-        val cp = new Properties()
-        usr.foreach(cp.setProperty("user", _))
-        pwd.foreach(cp.setProperty("password", _))
-        val conn = DriverManager.getConnection(u, cp)
-        try {
-          conn.setAutoCommit(false) // one transaction per partition
-          val del = conn.prepareStatement(deleteSql)
-          val ins = conn.prepareStatement(insertSql)
-          try {
-            rows.foreach { r =>
-              del.setObject(1, r.get(keyIdx))
-              del.addBatch()
-              cols.indices.foreach(i => ins.setObject(i + 1, r.get(i)))
-              ins.addBatch()
-            }
-            del.executeBatch()
-            ins.executeBatch()
-            conn.commit()
-          } catch {
-            case e: Throwable => conn.rollback(); throw e
-          } finally { del.close(); ins.close() }
-        } finally conn.close()
-      }
-    }
   }
 }

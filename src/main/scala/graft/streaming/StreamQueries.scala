@@ -342,8 +342,9 @@ object StreamQueries extends QueryModule {
     * 1-file-per-micro-batch delivery contract). The files then move to
     * their mtime-ordered staging names exactly as before. An EMPTY
     * chunk (possible on degenerate fixtures — dirty-data runs) writes
-    * no dir; it falls back to the old per-chunk empty write so the
-    * staged file set, and therefore the batch cadence, is unchanged.
+    * no dir; it is staged as an empty file of the frame's schema, with
+    * no second scan, so the staged file set, and therefore the batch
+    * cadence, is unchanged.
     * A chunk value outside [from, n) — NULL included — would be written
     * to scratch and then deleted with it, so the rows would never reach
     * a micro-batch: the staging fails instead, naming the values. */
@@ -376,8 +377,13 @@ object StreamQueries extends QueryModule {
         fs.setTimes(dest, baseMs + c * 60000L, -1L)
       } else {
         // empty chunk: stage an empty single file so delivery cadence
-        // (one micro-batch per chunk) survives degenerate corpora
-        writeFileAt(s, staged.filter(col("chunk") === c).drop("chunk"),
+        // (one micro-batch per chunk) survives degenerate corpora. It is
+        // built from the schema alone: re-reading `staged` would rescan
+        // it, and a nondeterministic frame could then disagree with the
+        // partitioned write above
+        writeFileAt(s, s.createDataFrame(
+            java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+            staged.drop("chunk").schema),
           staging, name, baseMs + c * 60000L)
       }
     }

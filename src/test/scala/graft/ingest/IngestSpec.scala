@@ -8,6 +8,19 @@ import java.nio.file.Files
   * stand-in (backfill.rs / incremental.rs semantics). */
 class IngestSpec extends SparkSpec {
 
+  /** Drops synthetic blocks for `slots` into `src` as one JSON-lines
+    * file, the incremental verb's drop-directory shape. */
+  private def dropBlocks(src: String, name: String, slots: Range): Unit = {
+    val lines = slots.flatMap { s =>
+      Backfill.syntheticBlock(s).map { j =>
+        val esc = j.replace("\\", "\\\\").replace("\"", "\\\"")
+        s"""{"slot":$s,"block_json":"$esc"}"""
+      }
+    }
+    Files.write(java.nio.file.Paths.get(s"$src/$name.json"),
+      lines.mkString("\n").getBytes("UTF-8"))
+  }
+
   test("backfill writes date-partitioned events; replay is idempotent") {
     val out = Files.createTempDirectory("graft_backfill").toString + "/events"
     Backfill.run(spark, 1L, 101L, workers = 4, out)
@@ -103,15 +116,6 @@ class IngestSpec extends SparkSpec {
     assert(one.count() > 0 && one.count() < all.count())
   }
 
-  test("filterProcessed drops already-loaded slots (anti-join guard)") {
-    import spark.implicits._
-    val incoming = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("slot", "payload")
-    val existing = Seq(2L).toDF("slot")
-    val kept = Backfill.filterProcessed(incoming, existing)
-      .select("slot").as[Long].collect().sorted
-    assert(kept.toSeq == Seq(1L, 3L))
-  }
-
   test("a partially committed slot heals on backfill replay (event-level guard)") {
     val out = Files.createTempDirectory("graft_partial").toString + "/events"
     Backfill.run(spark, 1L, 101L, workers = 4, out)
@@ -138,10 +142,17 @@ class IngestSpec extends SparkSpec {
     assert(healed.select("event_id").distinct().count() == n)
   }
 
-  test("slotLag on an absent sink reports the full distance, not a crash") {
-    val lag = Incremental.slotLag(spark,
-      s"/tmp/graft-no-such-sink-${System.nanoTime()}", chainTip = 100L)
-    assert(lag == 101L) // sink tip -1: the probe matters most at startup
+  test("tipSlot is -1 on an absent or empty sink, not a crash; orc reads back") {
+    // sink tip -1 (full lag distance): the probe matters most at startup
+    assert(Backfill.FileSink(s"/tmp/graft-no-such-sink-${System.nanoTime()}")
+      .tipSlot(spark) == -1L)
+    val base = Files.createTempDirectory("graft_tip").toString
+    spark.range(0).select(col("id").as("slot")).write.parquet(s"$base/empty")
+    assert(Backfill.FileSink(s"$base/empty").tipSlot(spark) == -1L)
+    // the probe reads the sink in its own format (slot 100 is not a
+    // skipped multiple of 97)
+    Backfill.run(spark, 1L, 101L, workers = 4, s"$base/orc", format = "orc")
+    assert(Backfill.FileSink(s"$base/orc", "orc").tipSlot(spark) == 100L)
   }
 
   test("incremental: AvailableNow drains files; restart picks up new slots only") {
@@ -149,32 +160,21 @@ class IngestSpec extends SparkSpec {
     val src = s"$base/src"; val sink = s"$base/sink"; val ckpt = s"$base/ckpt"
     new java.io.File(src).mkdirs()
 
-    def dropBlocks(name: String, slots: Range): Unit = {
-      val lines = slots.flatMap { s =>
-        Backfill.syntheticBlock(s).map { j =>
-          val esc = j.replace("\\", "\\\\").replace("\"", "\\\"")
-          s"""{"slot":$s,"block_json":"$esc"}"""
-        }
-      }
-      Files.write(java.nio.file.Paths.get(s"$src/$name.json"),
-        lines.mkString("\n").getBytes("UTF-8"))
-    }
-
-    dropBlocks("batch1", 1 to 50)
-    val q1 = Incremental.start(spark, src, sink, ckpt)
+    dropBlocks(src, "batch1", 1 to 50)
+    val q1 = Incremental.start(spark, src, Backfill.FileSink(sink), ckpt)
     q1.awaitTermination()
     val n1 = spark.read.parquet(sink).count()
     assert(n1 > 0)
 
     // second trigger with new + REPLAYED blocks: only new events land
-    dropBlocks("batch2", 40 to 80)
-    val q2 = Incremental.start(spark, src, sink, ckpt)
+    dropBlocks(src, "batch2", 40 to 80)
+    val q2 = Incremental.start(spark, src, Backfill.FileSink(sink), ckpt)
     q2.awaitTermination()
     val after = spark.read.parquet(sink)
     assert(after.count() == after.select("event_id").distinct().count())
     assert(after.agg(max(col("slot"))).collect()(0).getLong(0) == 80L)
 
-    assert(Incremental.slotLag(spark, sink, chainTip = 90L) == 10L)
+    assert(Backfill.FileSink(sink).tipSlot(spark) == 80L)
   }
 
   test("incremental honors a non-parquet sink format: orc writes are orc, " +
@@ -182,26 +182,17 @@ class IngestSpec extends SparkSpec {
     val base = Files.createTempDirectory("graft_inc_orc").toString
     val src = s"$base/src"; val sink = s"$base/sink"; val ckpt = s"$base/ckpt"
     new java.io.File(src).mkdirs()
-    def dropBlocks(name: String, slots: Range): Unit = {
-      val lines = slots.flatMap { s =>
-        Backfill.syntheticBlock(s).map { j =>
-          val esc = j.replace("\\", "\\\\").replace("\"", "\\\"")
-          s"""{"slot":$s,"block_json":"$esc"}"""
-        }
-      }
-      Files.write(java.nio.file.Paths.get(s"$src/$name.json"),
-        lines.mkString("\n").getBytes("UTF-8"))
-    }
-    dropBlocks("batch1", 1 to 20)
-    Incremental.start(spark, src, sink, ckpt, format = "orc").awaitTermination()
+    dropBlocks(src, "batch1", 1 to 20)
+    Incremental.start(spark, src, Backfill.FileSink(sink, "orc"), ckpt)
+      .awaitTermination()
     val n1 = spark.read.orc(sink).count()
     assert(n1 > 0)
     // fresh checkpoint = full replay PLUS new slots: the guard must read
     // the ORC sink (a parquet-formatted guard read would crash here) and
     // admit only the new events
-    dropBlocks("batch2", 15 to 30)
-    Incremental.start(spark, src, sink, s"$base/ckpt2", format = "orc")
-      .awaitTermination()
+    dropBlocks(src, "batch2", 15 to 30)
+    Incremental.start(spark, src, Backfill.FileSink(sink, "orc"),
+      s"$base/ckpt2").awaitTermination()
     val after = spark.read.orc(sink)
     assert(after.count() == after.select("event_id").distinct().count())
     assert(after.agg(max(col("slot"))).collect()(0).getLong(0) == 30L)
@@ -214,41 +205,47 @@ class IngestSpec extends SparkSpec {
     new java.io.File(src).mkdirs()
     val wh = graft.sources.JdbcWarehouse(
       s"jdbc:derby:$base/db;create=true", "events")
+    val sink = Backfill.JdbcSink(wh)
 
-    def dropBlocks(name: String, slots: Range): Unit = {
-      val lines = slots.flatMap { s =>
-        Backfill.syntheticBlock(s).map { j =>
-          val esc = j.replace("\\", "\\\\").replace("\"", "\\\"")
-          s"""{"slot":$s,"block_json":"$esc"}"""
-        }
-      }
-      Files.write(java.nio.file.Paths.get(s"$src/$name.json"),
-        lines.mkString("\n").getBytes("UTF-8"))
-    }
-
-    dropBlocks("batch1", 1 to 30)
-    val raw1 = spark.readStream
-      .schema(graft.model.Schemas.rawBlockSchema).json(src)
-    Incremental.startFromRawToJdbc(raw1, wh, s"$base/ckpt").awaitTermination()
+    dropBlocks(src, "batch1", 1 to 30)
+    Incremental.start(spark, src, sink, s"$base/ckpt").awaitTermination()
     val n1 = wh.readIfAny(spark).get.count()
     assert(n1 > 0)
 
     // a FRESH checkpoint forces full reprocessing of the same files —
-    // the database upsert, not the checkpoint, is what converges
-    val raw2 = spark.readStream
-      .schema(graft.model.Schemas.rawBlockSchema).json(src)
-    Incremental.startFromRawToJdbc(raw2, wh, s"$base/ckpt2").awaitTermination()
+    // the sink's guarded write, not the checkpoint, is what converges
+    Incremental.start(spark, src, sink, s"$base/ckpt2").awaitTermination()
     assert(wh.readIfAny(spark).get.count() == n1)
 
     // new slots through the ORIGINAL checkpoint: only new events land
-    dropBlocks("batch2", 25 to 45)
-    val raw3 = spark.readStream
-      .schema(graft.model.Schemas.rawBlockSchema).json(src)
-    Incremental.startFromRawToJdbc(raw3, wh, s"$base/ckpt").awaitTermination()
+    dropBlocks(src, "batch2", 25 to 45)
+    Incremental.start(spark, src, sink, s"$base/ckpt").awaitTermination()
     val after = wh.readIfAny(spark).get
     assert(after.count() > n1)
     assert(after.count() == after.select("event_id").distinct().count())
     import spark.implicits._
     assert(after.agg(max(col("slot"))).as[Long].head() == 45L)
+  }
+
+  test("cross-verb: backfill, then an overlapping drain, equals one backfill") {
+    // the verbs guard with different spans (slot range vs batch dates);
+    // sharing one sink, each event must still land exactly once
+    val base = Files.createTempDirectory("graft_cross").toString
+    val src = s"$base/src"
+    new java.io.File(src).mkdirs()
+    dropBlocks(src, "drain", 50 until 150)
+    def derby(db: String) = Backfill.JdbcSink(graft.sources.JdbcWarehouse(
+      s"jdbc:derby:$base/$db;create=true", "events"))
+    for ((kind, shared, once) <- Seq(
+        ("parquet", Backfill.FileSink(s"$base/shared"), Backfill.FileSink(s"$base/once")),
+        ("derby", derby("db_shared"), derby("db_once")))) {
+      Backfill.runTo(spark, 1L, 101L, workers = 4, shared)
+      Incremental.start(spark, src, shared, s"$base/ckpt_$kind").awaitTermination()
+      Backfill.runTo(spark, 1L, 150L, workers = 4, once)
+      val got = shared.readIfAny(spark).get
+      val want = once.readIfAny(spark).get
+      assert(got.count() == got.select("event_id").distinct().count(), kind)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, kind)
+    }
   }
 }

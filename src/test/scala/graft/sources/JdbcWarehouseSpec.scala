@@ -39,32 +39,6 @@ class JdbcWarehouseSpec extends SparkSpec {
     assert(ext.agg(max($"slot")).as[Long].head() == 150L)
   }
 
-  test("jdbc upsert = ON CONFLICT DO UPDATE: last-write-wins per key, " +
-      "transactional per partition") {
-    import spark.implicits._
-    // column-precise DDL through the createTableColumnTypes leg of the
-    // axis (a production table pins widths; the dialect default is max)
-    val wh = JdbcWarehouse(derbyUrl(), "kv",
-      createColumnTypes = Some("k VARCHAR(16), payload VARCHAR(64)"))
-    wh.upsert(Seq(("a", 1L, "v1"), ("b", 1L, "v1"))
-      .toDF("k", "version", "payload"), "k", "version")
-    val s1 = wh.readIfAny(spark).get.orderBy("k").collect()
-    assert(s1.map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq ==
-      Seq(("a", 1L, "v1"), ("b", 1L, "v1")))
-    // replay with a CHANGED payload + a new key: conflicting keys take
-    // the newer version, new keys insert — and a batch carrying BOTH
-    // versions of one key resolves before touching the database
-    wh.upsert(Seq(("a", 2L, "v2"), ("a", 1L, "stale"), ("c", 1L, "v1"))
-      .toDF("k", "version", "payload"), "k", "version")
-    val s2 = wh.readIfAny(spark).get.orderBy("k").collect()
-    assert(s2.map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq ==
-      Seq(("a", 2L, "v2"), ("b", 1L, "v1"), ("c", 1L, "v1")))
-    // idempotent re-upsert of the same batch → same state
-    wh.upsert(Seq(("a", 2L, "v2")).toDF("k", "version", "payload"),
-      "k", "version")
-    assert(wh.readIfAny(spark).get.count() == 3)
-  }
-
   test("readIfAny is None for a missing table (first-run probe)") {
     assert(JdbcWarehouse(derbyUrl(), "nope").readIfAny(spark).isEmpty)
   }
@@ -86,29 +60,29 @@ class JdbcWarehouseSpec extends SparkSpec {
     assert(probe.count() == 2)
   }
 
-  test("upsert caps its connection fan-out at maxConnections: a wide " +
-      "micro-batch must not connection-storm the database") {
+  test("append caps its connection fan-out at maxConnections") {
     import spark.implicits._
     val wh = JdbcWarehouse(derbyUrl(), "wide", maxConnections = 2)
     // 32 input partitions = the storm shape (partitions = source
     // parallelism); one connection per partition would open 32
-    val batch = (1 to 64).map(i => (s"k$i", 1L, s"v$i"))
-      .toDF("k", "version", "payload").repartition(32)
-    val group = s"upsert-cap-${System.nanoTime()}"
-    spark.sparkContext.setJobGroup(group, "upsert connection-cap probe")
-    try wh.upsert(batch, "k", "version")
+    val batch = (1 to 64).map(i => (s"e$i", 1L, s"v$i"))
+      .toDF("event_id", "slot", "payload").repartition(32)
+    val group = s"append-cap-${System.nanoTime()}"
+    spark.sparkContext.setJobGroup(group, "append connection-cap probe")
+    try wh.append(batch)
     finally spark.sparkContext.clearJobGroup()
     assert(wh.readIfAny(spark).get.count() == 64)
-    // the write job is the LAST job of the upsert (probe + create-table
-    // jobs precede it); its result stage's task count IS the connection
-    // count — the cap must hold it at maxConnections
+    // the write job is the LAST job of the append; its result stage's
+    // task count IS the connection count — the cap must hold it at
+    // maxConnections
     val tracker = spark.sparkContext.statusTracker
     val writeJob = tracker.getJobIdsForGroup(group).max
     val resultStage = tracker.getJobInfo(writeJob).get.stageIds().max
     val tasks = tracker.getStageInfo(resultStage).get.numTasks()
     assert(tasks <= 2, s"write stage ran $tasks tasks (connections) > cap 2")
-    // replay converges through the same capped path
-    wh.upsert(batch, "k", "version")
+    // a replay through the sink's guarded write converges on the same
+    // capped path
+    Backfill.JdbcSink(wh).write(batch, col("slot") === 1L)
     assert(wh.readIfAny(spark).get.count() == 64)
   }
 }

@@ -10,18 +10,17 @@ import scala.collection.mutable
 /** A minimal in-memory JDBC engine speaking POSTGRES error semantics
   * (`42P01 undefined_table`), for proving [[JdbcWarehouse]]'s dialect
   * portability without a second database in the container: the suite
-  * runs the real `spark.read.jdbc` / `df.write.jdbc` / executor-side
-  * DELETE+INSERT paths against it, so the non-Derby branch of
-  * `TableMissingStates` and the portable upsert protocol execute
-  * end-to-end rather than being asserted on paper.
+  * runs the real `spark.read.jdbc` / `df.write.jdbc` paths against it,
+  * so the non-Derby branch of `TableMissingStates` and the writer's
+  * transactional batches execute end-to-end rather than being asserted
+  * on paper.
   *
-  * Scope: exactly the statement shapes Spark's JDBC relation and
-  * [[JdbcWarehouse.upsert]] issue — schema probe (`WHERE 1=0`),
-  * `CREATE TABLE`, batched `INSERT`/`DELETE` with parameters inside a
-  * transaction, and full-table `SELECT` (incl. the `SELECT 1` count
-  * shape). Anything else throws loudly with the method/SQL in the
-  * message, so a Spark-version drift surfaces as a named gap, never a
-  * silent wrong answer.
+  * Scope: exactly the statement shapes Spark's JDBC relation sends —
+  * schema probe (`WHERE 1=0`), `CREATE TABLE`, batched `INSERT` with
+  * parameters inside a transaction, and full-table `SELECT` (incl. the
+  * `SELECT 1` count shape). Anything else throws loudly with the
+  * method/SQL in the message, so a Spark-version drift surfaces as a
+  * named gap, never a silent wrong answer.
   */
 object MockPg {
 
@@ -89,8 +88,6 @@ object MockPg {
     """(?is)\s*CREATE\s+TABLE\s+(\S+)\s*\((.*)\)\s*""".r
   private val InsertRe =
     """(?is)\s*INSERT\s+INTO\s+(\S+)\s*\((.*?)\)\s*VALUES\s*\((.*?)\)\s*""".r
-  private val DeleteRe =
-    """(?is)\s*DELETE\s+FROM\s+(\S+)\s+WHERE\s+(\S+)\s*=\s*\?\s*""".r
 
   /** A result: column metadata + materialized rows. */
   final case class Result(cols: Seq[Col], rows: Seq[Array[Any]])
@@ -155,15 +152,6 @@ object MockPg {
           s"MockPg: INSERT column order $names != table ${t.cols.map(_.name)}")
         t.rows += params.toArray
         1
-      case DeleteRe(rawTable, rawKey) =>
-        val table = stripQuotes(rawTable)
-        val t = tables.getOrElse(table, missing(table))
-        val ki = t.cols.indexWhere(_.name == stripQuotes(rawKey))
-        require(ki >= 0, s"MockPg: DELETE key ${stripQuotes(rawKey)} not in ${t.cols}")
-        val before = t.rows.size
-        val keep = t.rows.filterNot(r => r(ki) == params.head)
-        t.rows.clear(); t.rows ++= keep
-        before - keep.size
       case other =>
         throw new SQLException(s"MockPg: unsupported update: $other", "0A000")
     }
@@ -268,7 +256,7 @@ object MockPg {
     var autoCommit = true
     // (sql, params) buffered while autoCommit == false; applied on
     // commit under the global lock — one transaction per connection,
-    // exactly the contract JdbcWarehouse.upsert relies on
+    // the contract Spark's JDBC writer relies on
     val pending = mutable.ArrayBuffer.empty[(String, Seq[Any])]
     def exec(sql: String, params: Seq[Any]): Int =
       if (autoCommit) runUpdate(sql, params)

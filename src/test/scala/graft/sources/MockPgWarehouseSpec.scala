@@ -2,12 +2,12 @@ package graft.sources
 
 import graft.SparkSpec
 
-/** JDBC-dialect portability: the container ships only Derby, so the
-  * non-Derby branch of `TableMissingStates` (Postgres `42P01`) and the
-  * portable DELETE+INSERT upsert run against [[MockPg]] — an in-memory
-  * engine speaking Postgres SQLStates — through Spark's REAL jdbc
-  * read/write paths (schema probe, CREATE TABLE, executor batches),
-  * not a unit stub of the classification helper. */
+/** JDBC-dialect portability: the non-Derby branch of
+  * `TableMissingStates` (Postgres `42P01`) and the parallel append run
+  * against [[MockPg]] — an in-memory engine speaking Postgres SQLStates
+  * — through Spark's REAL jdbc read/write paths (schema probe, CREATE
+  * TABLE, executor batches), not a unit stub of the classification
+  * helper. */
 class MockPgWarehouseSpec extends SparkSpec {
 
   private def freshWh(table: String): JdbcWarehouse = {
@@ -36,31 +36,6 @@ class MockPgWarehouseSpec extends SparkSpec {
     assert(!JdbcWarehouse.isTableMissing(new SQLException("no state", null: String)))
     // a non-SQL exception with no cause chain is simply not-missing
     assert(!JdbcWarehouse.isTableMissing(new RuntimeException("a")))
-  }
-
-  test("upsert against a Postgres-semantics engine: create-on-first-write, " +
-      "last-write-wins replay convergence, transactional DELETE+INSERT") {
-    import spark.implicits._
-    MockPg.reset()
-    val wh = freshWh("kv")
-    wh.upsert(Seq(("a", 1L, "v1"), ("b", 1L, "v1"))
-      .toDF("k", "version", "payload"), "k", "version")
-    val s1 = wh.readIfAny(spark).get.orderBy("k").collect()
-    assert(s1.map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq ==
-      Seq(("a", 1L, "v1"), ("b", 1L, "v1")))
-    // conflicting keys take the newer version; a batch carrying both
-    // versions of one key resolves in Spark before touching the engine
-    wh.upsert(Seq(("a", 2L, "v2"), ("a", 1L, "stale"), ("c", 1L, "v1"))
-      .toDF("k", "version", "payload"), "k", "version")
-    val s2 = wh.readIfAny(spark).get.orderBy("k").collect()
-    assert(s2.map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq ==
-      Seq(("a", 2L, "v2"), ("b", 1L, "v1"), ("c", 1L, "v1")))
-    // byte-identical replay is a no-op on row count (the ON CONFLICT
-    // contract the reference's warehouse.rs:227-229 shape promises)
-    wh.upsert(Seq(("a", 2L, "v2"), ("b", 1L, "v1"), ("c", 1L, "v1"))
-      .toDF("k", "version", "payload"), "k", "version")
-    assert(wh.readIfAny(spark).get.count() == 3)
-    assert(MockPg.rowCount("kv") == 3)
   }
 
   test("append + count run through Spark's parallel JDBC writer and the " +

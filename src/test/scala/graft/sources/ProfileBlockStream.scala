@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * `BlockMicroBatchStream` (slot offsets, `maxSlotsPerTrigger` admission)
   * → `Parse.parse` fan-out → per-batch CDC MERGE commits — the
   * reference's incremental loop (incremental.rs:34-105) end-to-end, at
-  * 100× the declared range. What this pins that the batch-parse
-  * rehearsal ([[graft.ingest.ProfileIngestThroughput]]) cannot:
+  * 100× the declared range. What this pins that the batch-parse timings
+  * of the pipeline benchmark (`pipebench backfill --trace 1`:
+  * `ingest.parse_s`, `ingest.dedup_s`) cannot:
   *
   *  - admission cadence holds at depth: N batches of exactly
   *    `maxSlotsPerTrigger` slots, version log length == ceil(slots/cap);

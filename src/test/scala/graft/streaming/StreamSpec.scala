@@ -880,5 +880,17 @@ class StreamSpec extends SparkSpec {
       frame(col("id") % 3), Files.createTempDirectory("graft_stage_from").toString,
       n = 3, baseMs = 0L, from = 1))
     assert(below.getMessage.contains("values 0 fall outside [1, 3)"), below.getMessage)
+
+    // an empty chunk (1 here) still stages one file, empty and of the
+    // frame's schema, without evaluating the frame a second time
+    val evals = spark.sparkContext.longAccumulator("stage-evals")
+    val counted = udf { (c: Long) => evals.add(1); c }
+    val gap = Files.createTempDirectory("graft_stage_gap").toString
+    StreamQueries.stageChunks(spark, frame(counted(col("id") % 2 * 2)), gap, n = 3, baseMs = 0L)
+    assert(new java.io.File(gap).list().filter(_.endsWith(".parquet")).sorted.toSeq == staged)
+    val empty = spark.read.parquet(s"$gap/chunk-0001.parquet")
+    assert(empty.count() == 0 && empty.columns.toSeq == Seq("event_id"))
+    assert(spark.read.parquet(gap).count() == 30)
+    assert(evals.value == 30L, s"frame evaluated ${evals.value} times for 30 rows")
   }
 }
