@@ -24,8 +24,9 @@ private[graft] object LocalSession {
     val spark = SparkSession.builder()
       // analyzer-phase surface (the lake catalog's read/MERGE rewrites)
       // can only be injected at build time; the function registry and
-      // optimizer rules the extension also carries are the same ones
-      // register()/registerRewrite() add post-hoc (both are idempotent)
+      // planner/optimizer additions the extension also carries are the
+      // same ones GraftExtensions.register, TopK.ensureStrategy and
+      // NanosFilter.register add post-hoc (all idempotent)
       .withExtensions(new graft.plans.GraftExtensions)
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
       .appName(appName)

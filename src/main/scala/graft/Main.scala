@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** CLI mirroring the reference's four subcommands
   * (/root/reference/src/main.rs:13-37) so a reference user can switch:
@@ -39,6 +39,23 @@ object Main {
         "(parquet | orc | json | postgres | jdbc)")
     }
 
+  /** The backfill verb's block source: live RPC when `SOLANA_RPC_URL`
+    * is set (the presence rule `incremental-blocks` uses), the
+    * deterministic synthetic block otherwise. */
+  private[graft] def fetcherFor(
+      env: Map[String, String]): ingest.Backfill.BlockFetcher =
+    if (env.contains("SOLANA_RPC_URL"))
+      sources.RpcClient.fetcher(sources.RpcConfig.fromEnv(env))
+    else ingest.Backfill.syntheticBlock
+
+  /** The analytics verb's fact, read through the sink the ingest verbs
+    * wrote. An absent fact fails naming it: a refresh over nothing
+    * would write 14 empty tables. */
+  private[graft] def readFact(spark: SparkSession,
+      sink: ingest.Backfill.EventSink, fact: String): DataFrame =
+    sink.readIfAny(spark).getOrElse(throw new IllegalArgumentException(
+      s"analytics: no fact table at $fact"))
+
   private def sinkCount(spark: SparkSession,
       sink: ingest.Backfill.EventSink): Long =
     sink.readIfAny(spark).map(_.count()).getOrElse(0L)
@@ -65,14 +82,16 @@ object Main {
       val segInterval = EtlConfig.explicitLong(
         sys.env, "ETL_CHECKPOINT_INTERVAL", cfg.checkpointInterval)
       val sink = sinkFor(out, sys.env)
+      val fetcher = fetcherFor(sys.env)
       val spark = session()
       rest.headOption match {
         case Some(ckpt) =>
           ingest.Checkpoints.runTracked(spark, ckpt, s"bf_${start}_$end",
-            startL, endL, workersI, sink, checkpointInterval = segInterval,
+            startL, endL, workersI, sink, fetcher,
+            checkpointInterval = segInterval,
             chunkSize = Some(cfg.backfillChunkSize))
         case None =>
-          ingest.Backfill.runTo(spark, startL, endL, workersI, sink,
+          ingest.Backfill.runTo(spark, startL, endL, workersI, sink, fetcher,
             chunkSize = Some(cfg.backfillChunkSize))
       }
       println(s"backfill complete: ${sinkCount(spark, sink)} events")
@@ -130,9 +149,10 @@ object Main {
           usageExit(s"analytics: malformed anchor timestamp: ${rest.head} " +
             "(want ISO local date-time, e.g. 2024-01-16T00:00:00)")
       }
+      val source = sinkFor(fact, sys.env)
       val spark = session()
       val counts = analytics.AnalyticsRunner.runAll(
-        spark, spark.read.parquet(fact), anchor, out)
+        spark, readFact(spark, source, fact), anchor, out)
       counts.toSeq.sortBy(_._1).foreach { case (t, n) => println(s"$t: $n rows") }
       spark.stop()
 
@@ -382,7 +402,7 @@ object Main {
          |       query <name> <sf_dir> [out_parquet]
          |env:   WAREHOUSE_TYPE=parquet|orc|json|postgres|jdbc (default parquet);
          |       postgres/jdbc reads WAREHOUSE_CONNECTION as the JDBC url and
-         |       treats <out>/<sink> as the table name""".stripMargin)
+         |       treats <out>/<sink>/<fact_path> as the table name""".stripMargin)
     sys.exit(2)
   }
 }

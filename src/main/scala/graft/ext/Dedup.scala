@@ -164,31 +164,16 @@ object Dedup extends QueryModule {
   private def oneExchange(sh: DataFrame): DataFrame =
     sh.repartition(col("shingle"))
 
-  /** Skew posture knob over the one-exchange (guide §2.5): the default
-    * ships the RAW exploded shingle rows through the shared exchange —
-    * one tokenizer pass, but a stopword-grade shingle's rows all land
-    * in ONE partition of that exchange and are df-cap-dropped only
-    * AFTER crossing the wire (every consumer of the exchange scans the
-    * hot partition). With `spark.graft.dedupSkewSafe = true` (or env
-    * `GRAFT_DEDUP_SKEWSAFE=1`) the df cap moves AHEAD of the exchange:
-    * the hot set derives from its own aggregation over the tokenizer
-    * output — a count(*) by shingle whose plan KEEPS map-side partial
-    * aggregation (shingle rows are distinct per doc, so only (shingle,
-    * partial-count) pairs cross, skew-immune) — and the shared
-    * exchange then carries only df-capped rows, where no key exceeds
-    * maxDf rows by construction. Cost: the tokenizer runs twice (hot
-    * pass + main pass), a measured ~15–25 % regression at the test
-    * SFs, which is why the default stays one-pass; a deployment whose
-    * corpus can carry boilerplate shingles at 100 TB flips the knob.
-    * Output-identical by construction (DedupProps pins it). */
-  private[ext] def cappedIndex(sh: DataFrame, maxDf: Int): DataFrame = {
-    val skewSafe = sh.sparkSession.conf
-      .getOption("spark.graft.dedupSkewSafe")
-      .orElse(sys.env.get("GRAFT_DEDUP_SKEWSAFE"))
-      .exists(v => v == "true" || v == "1")
-    if (skewSafe) oneExchange(capShingles(sh, maxDf))
-    else capShingles(oneExchange(sh), maxDf)
-  }
+  /** The df-capped shingle index: [[capShingles]] over [[oneExchange]].
+    * The cap sits AFTER the shared exchange so the tokenizer runs one
+    * corpus pass — the hot-set aggregation reads the same exchange
+    * blocks as every other consumer. Capping ahead of the exchange
+    * would keep a stopword-grade shingle's rows off the wire, but its
+    * hot set needs its own aggregation over the tokenizer output, so
+    * the tokenizer runs twice: measured 15–25 % slower at the test
+    * SFs. */
+  private[ext] def cappedIndex(sh: DataFrame, maxDf: Int): DataFrame =
+    capShingles(oneExchange(sh), maxDf)
 
   /** Bound a scored pair frame to ≤ `k` pairs PER DOCUMENT PER SIDE
     * (≤ 2k total per doc), keeping the highest scores; deterministic
@@ -204,9 +189,12 @@ object Dedup extends QueryModule {
     * query filtered to it.)
     *
     * Scale shape: both cap passes are the row_number-over-window ≤
-    * limit idiom, which [[graft.plans.TopKPerGroup]]'s rule rewrites to
-    * the bounded-heap exec — per-doc state is O(k), never the hot
-    * doc's full pair list. The overflow probe is one linear count per
+    * limit idiom, which Spark plans as its sort-based group limit:
+    * Sort → WindowGroupLimit (Partial, ≤ k rows per doc per input
+    * partition) → Exchange by doc → Sort → WindowGroupLimit (Final) →
+    * Window → Filter. Only k rows per doc per partition cross the
+    * shuffle, and the sorts spill, so a hot doc's full pair list never
+    * has to fit in memory. The overflow probe is one linear count per
     * side filtered to the (tiny, by construction) over-supplied doc
     * set. Caps apply sequentially (side 2 sees side 1's survivors), so
     * both bounds hold exactly on the final output. */
@@ -866,7 +854,6 @@ object Dedup extends QueryModule {
         // sides, and the sizes agg — share the tokenizer output through
         // one shingle-keyed exchange (r16 A/B: 2.9 → 2.5 s at sf0.1;
         // the doc_id-keyed alternative measured SLOWER, 3.1–3.5 s).
-        // cappedIndex honors the dedupSkewSafe posture knob.
         val sh = cappedIndex(shingleRows(s, dir), DefaultMaxShingleDf)
         val bands = bandKeysOf(sh)
         val batch = bands.filter(col("doc_id") % 10 === 9)

@@ -269,15 +269,9 @@ object Parse {
     *
     * Replay-safe like [[toEvents]]: overlapping block ranges collapse on
     * the deterministic event_id (SCHEMA.md's PRIMARY KEY), preserving
-    * the 1:1 canonical-event linkage. `dedup=false` for streaming
-    * callers, same contract as [[toEvents]].
+    * the 1:1 canonical-event linkage.
     */
-  def factProgramEvents(blocks: DataFrame, dedup: Boolean = true): DataFrame = {
-    val fact = factProgramEventsRaw(blocks)
-    if (dedup) fact.dropDuplicates("event_id") else fact
-  }
-
-  private def factProgramEventsRaw(blocks: DataFrame): DataFrame =
+  def factProgramEvents(blocks: DataFrame): DataFrame =
     txBase(blocks)
       .select(col("slot"), col("block_time"), col("sig"),
         col("tx.meta.logMessages").as("log_messages"),
@@ -307,6 +301,7 @@ object Parse {
         to_json(struct(col("ins.programId").as("programId"),
           col("ins.accounts").as("accounts"), col("ins.data").as("data")))
           .as("raw_payload"))
+      .dropDuplicates("event_id")
 
   /** fact_token_transfers (docs/SCHEMA.md:119-154): the typed SPL
     * transfer fact — one row per post-token-balance with a mint and an
@@ -332,14 +327,9 @@ object Parse {
     *
     * Replay-safe like [[toEvents]]: deduplicated on the deterministic
     * event_id so overlapping block ranges cannot violate SCHEMA.md's
-    * PRIMARY KEY. `dedup=false` for streaming callers.
+    * PRIMARY KEY.
     */
-  def factTokenTransfers(blocks: DataFrame, dedup: Boolean = true): DataFrame = {
-    val fact = factTokenTransfersRaw(blocks)
-    if (dedup) fact.dropDuplicates("event_id") else fact
-  }
-
-  private def factTokenTransfersRaw(blocks: DataFrame): DataFrame = {
+  def factTokenTransfers(blocks: DataFrame): DataFrame = {
     val base = txBase(blocks)
 
     def bals(side: String) = base.select(
@@ -398,6 +388,7 @@ object Parse {
           col("bal.owner").as("owner"),
           col("bal.uiTokenAmount.amount").as("amount"),
           col("bal.uiTokenAmount.decimals").as("decimals"))).as("raw_payload"))
+      .dropDuplicates("event_id")
   }
 
   /** Token-transfer netting the reference sketches but never implements

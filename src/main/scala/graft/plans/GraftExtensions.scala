@@ -19,14 +19,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     // whole-operator surface: bounded-heap top-k per group — the
     // strategy plans the explicit TopKPerGroup node (matches nothing
-    // else, so it cannot affect other plans). The optimizer rule CAN
-    // rewrite idiomatic window top-k plans session-wide, but is inert
-    // until spark.graft.topk.rewrite=true (RewriteWindowTopK.EnabledKey)
-    // — injecting this extension just for the SQL functions must not
-    // silently change plans; TopK.registerRewrite flips the conf for
-    // live sessions.
+    // else, so it cannot affect other plans)
     e.injectPlannerStrategy(_ => TopKPerGroupStrategy)
-    e.injectOptimizerRule(_ => RewriteWindowTopK)
     // scan-pushdown restoration for the loader's nanos view of `ts`
     // (pure predicate rewrite, exact integer bounds — safe session-wide)
     e.injectOptimizerRule(_ => NanosFilterRule)

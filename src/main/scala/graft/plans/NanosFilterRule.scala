@@ -162,10 +162,11 @@ object NanosFilterRule extends Rule[LogicalPlan] {
 
 object NanosFilter {
   /** Idempotently attach the rule to a live session (the
-    * `TopK.registerRewrite` pattern — `experimental.extraOptimizations`
-    * runs as the optimizer's final user batch, after predicate pushdown
-    * has substituted the loader's projection into Filter conditions and
-    * before physical planning translates them into parquet filters). */
+    * `TopK.ensureStrategy` pattern on the optimizer side —
+    * `experimental.extraOptimizations` runs as the optimizer's final
+    * user batch, after predicate pushdown has substituted the loader's
+    * projection into Filter conditions and before physical planning
+    * translates them into parquet filters). */
   def register(spark: SparkSession): Unit = synchronized {
     if (!spark.experimental.extraOptimizations.contains(NanosFilterRule))
       spark.experimental.extraOptimizations =

@@ -7,15 +7,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode, Window => LogicalWindow}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode, UnsafeExternalRowSorter}
 import org.apache.spark.sql.types.IntegerType
 
 /** Whole-operator top-k-per-group (SURVEY §7.3 preference (c): custom
-  * `LogicalPlan` + `Rule` + `SparkStrategy` + `SparkPlan`, registered
-  * via `SparkSessionExtensions`).
+  * `LogicalPlan` + `SparkStrategy` + `SparkPlan`, the strategy
+  * registered via `SparkSessionExtensions`). Callers build the node
+  * explicitly through [[TopK.perGroup]]; no optimizer rule rewrites
+  * window plans into it.
   *
   * The idiomatic Spark form — `row_number() OVER (PARTITION BY g ORDER
   * BY o) <= k` — SORTS every partition's full row set before discarding
@@ -42,66 +43,6 @@ case class TopKPerGroup(
   override def maxRows: Option[Long] = child.maxRows
   override protected def withNewChildInternal(newChild: LogicalPlan): TopKPerGroup =
     copy(child = newChild)
-}
-
-/** Optimizer rule rewriting the idiomatic window top-k —
-  * `Filter(row_number() OVER (PARTITION BY … ORDER BY …) <= k, Window)`
-  * — into [[TopKPerGroup]]. Conservative match: exactly one window
-  * expression, plain `row_number` over the default running frame, a
-  * non-empty PARTITION BY (a global top-k belongs to
-  * TakeOrderedAndProject), and a filter that is a single rank-vs-
-  * integer-literal comparison. DOUBLY opt-in: the rule must be
-  * injected ([[GraftExtensions]] / `TopK.registerRewrite`) AND the
-  * [[RewriteWindowTopK.EnabledKey]] conf set — a session built
-  * withExtensions just for the SQL function surface must not silently
-  * get session-wide plan rewrites of every `row_number() <= k` window. */
-object RewriteWindowTopK extends Rule[LogicalPlan] {
-
-  val MaxK = 10000
-
-  /** Session conf enabling the window rewrite once the rule is
-    * injected; `TopK.registerRewrite` sets it. */
-  val EnabledKey = "spark.graft.topk.rewrite"
-
-  private def rankLimit(cond: Expression, rn: ExprId): Option[Int] = cond match {
-    case LessThanOrEqual(a: AttributeReference, Literal(v: Int, IntegerType)) if a.exprId == rn => Some(v)
-    case LessThan(a: AttributeReference, Literal(v: Int, IntegerType)) if a.exprId == rn => Some(v - 1)
-    case GreaterThanOrEqual(Literal(v: Int, IntegerType), a: AttributeReference) if a.exprId == rn => Some(v)
-    case GreaterThan(Literal(v: Int, IntegerType), a: AttributeReference) if a.exprId == rn => Some(v - 1)
-    case EqualTo(a: AttributeReference, Literal(v: Int, IntegerType)) if a.exprId == rn && v == 1 => Some(1)
-    case _ => None
-  }
-
-  /** User-provided rules run AFTER Spark's InferWindowGroupLimit, which
-    * may already have inserted a WindowGroupLimit (sort-based group
-    * limit) below the matched Window for this same spec — the heap
-    * operator subsumes it, so strip it rather than sorting twice. */
-  private def stripGroupLimit(p: LogicalPlan,
-      part: Seq[Expression], ord: Seq[SortOrder]): LogicalPlan = p match {
-    case org.apache.spark.sql.catalyst.plans.logical.WindowGroupLimit(p2, o2, _, _, inner)
-        if p2 == part && o2 == ord =>
-      inner
-    case other => other
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(EnabledKey, "false").toBoolean) return plan
-    plan.transformUp {
-    case f @ org.apache.spark.sql.catalyst.plans.logical.Filter(cond,
-        LogicalWindow(
-          Seq(alias @ Alias(WindowExpression(RowNumber(),
-            WindowSpecDefinition(_, _,
-              SpecifiedWindowFrame(RowFrame, UnboundedPreceding, CurrentRow))), _)),
-          partitionSpec, orderSpec, child, _))
-        if partitionSpec.nonEmpty && orderSpec.nonEmpty =>
-      rankLimit(cond, alias.exprId) match {
-        case Some(k) if k > 0 && k <= MaxK =>
-          TopKPerGroup(k, partitionSpec, orderSpec, alias.toAttribute,
-            stripGroupLimit(child, partitionSpec, orderSpec))
-        case _ => f
-      }
-    }
-  }
 }
 
 /** Plans [[TopKPerGroup]] as a partial/final [[TopKPerGroupExec]] pair;
@@ -167,8 +108,8 @@ case class TopKPerGroupExec(
       val heaps = mutable.HashMap.empty[UnsafeRow, mutable.PriorityQueue[InternalRow]]
       if (!ranked) {
         // PARTIAL: streaming. The heap map is bounded BOTH at maxGroups
-        // live groups AND at maxBuffered total buffered rows (k can be
-        // up to MaxK, so a group bound alone still permits groups·k
+        // live groups AND at maxBuffered total buffered rows (k is
+        // unbounded, so a group bound alone still permits groups·k
         // rows on-heap) — past either cap, rows pass through to the
         // shuffle un-limited (a superset is always correct; the final
         // pass enforces k). Replacements never grow the footprint, so
@@ -332,27 +273,6 @@ object TopK {
     if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ TopKPerGroupStrategy
-
-  /** Opt-in: enable the window-top-k rewrite session-wide — injects
-    * the rule AND flips [[RewriteWindowTopK.EnabledKey]] (the rule is
-    * inert without the conf, so sessions that inject GraftExtensions
-    * only for the function surface keep idiomatic window plans). The
-    * rewrite emits [[TopKPerGroup]] nodes, so the strategy that plans
-    * them must ride along — without it a fresh session would rewrite
-    * into an unplannable node. */
-  def registerRewrite(spark: SparkSession): Unit = {
-    ensureStrategy(spark)
-    spark.conf.set(RewriteWindowTopK.EnabledKey, "true")
-    if (!spark.experimental.extraOptimizations.contains(RewriteWindowTopK))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteWindowTopK
-  }
-
-  def unregisterRewrite(spark: SparkSession): Unit = {
-    spark.conf.set(RewriteWindowTopK.EnabledKey, "false")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == RewriteWindowTopK)
-  }
 
   /** Top-k rows per group, ranked 1..k, via the bounded-heap operator.
     * `orderBy` is (column, ascending) pairs and MUST form a total order

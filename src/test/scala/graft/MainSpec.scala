@@ -1,9 +1,8 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
-/** CLI argument handling (no SparkSession needed). */
-class MainSpec extends AnyFunSuite {
+/** CLI argument handling; the shared session is built only by the
+  * tests that read a sink. */
+class MainSpec extends SparkSpec {
 
   test("health args: absent, chainTip-only (default SLO), explicit maxLag") {
     assert(Main.parseHealthArgs(Nil) == Right(None))
@@ -28,6 +27,22 @@ class MainSpec extends AnyFunSuite {
         "WAREHOUSE_CONNECTION" -> "jdbc:derby:/tmp/x")) ==
       ingest.Backfill.JdbcSink(
         sources.JdbcWarehouse("jdbc:derby:/tmp/x", "events")))
+  }
+
+  test("analytics reads its fact through WAREHOUSE_TYPE's sink; an absent fact fails naming it") {
+    val dir = java.nio.file.Files.createTempDirectory("main_fact").toString
+    val out = s"$dir/fact"
+    ingest.Backfill.runTo(spark, 1L, 41L, 2, ingest.Backfill.FileSink(out, "orc"))
+    val written = spark.read.orc(out).count()
+    val env = Map("WAREHOUSE_TYPE" -> "orc")
+    val fact = Main.readFact(spark, Main.sinkFor(out, env), out)
+    assert(written > 0 && fact.count() == written)
+    // the parquet reader the verb used before cannot read this fact
+    intercept[Exception](spark.read.parquet(out).count())
+    val absent = s"$dir/absent"
+    val e = intercept[IllegalArgumentException](
+      Main.readFact(spark, Main.sinkFor(absent, env), absent))
+    assert(e.getMessage.contains(absent), e.getMessage)
   }
 
   test("ETL_MAX_SLOT_LAG drives the health SLO default (config.rs:80-83)") {

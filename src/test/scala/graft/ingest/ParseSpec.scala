@@ -263,19 +263,17 @@ class ParseSpec extends SparkSpec {
       (EvTokenInstruction, null, null)))
   }
 
-  test("typed facts are replay-safe: overlapping block ranges collapse " +
-      "on event_id (SCHEMA.md PRIMARY KEY), dedup=false opts out") {
+  test("typed facts are replay-safe: replayed blocks collapse on event_id") {
     // the same block arriving twice (replayed/overlapping backfill)
     val twice = rawDF(20L -> transferBlock, 20L -> transferBlock)
     val blocks = Parse.parseBlocks(twice)
+    val once = Parse.parseBlocks(rawDF(20L -> transferBlock))
+    assert(blocks.count() == 2 * once.count())
     val pe = Parse.factProgramEvents(blocks)
     assert(pe.count() == pe.select("event_id").distinct().count())
-    assert(pe.count() ==
-      Parse.factProgramEvents(Parse.parseBlocks(rawDF(20L -> transferBlock))).count())
+    assert(pe.count() == Parse.factProgramEvents(once).count())
     val tt = Parse.factTokenTransfers(blocks)
     assert(tt.count() == tt.select("event_id").distinct().count())
-    // streaming callers keep the unbounded-state opt-out
-    assert(Parse.factProgramEvents(blocks, dedup = false).count() == 2 * pe.count())
-    assert(Parse.factTokenTransfers(blocks, dedup = false).count() == 2 * tt.count())
+    assert(tt.count() > 0 && tt.count() == Parse.factTokenTransfers(once).count())
   }
 }

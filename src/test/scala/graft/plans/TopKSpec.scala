@@ -4,8 +4,8 @@ import graft.{SparkSpec, SparkEntry}
 import org.apache.spark.sql.functions._
 
 /** The custom bounded-heap top-k operator: result parity with the
-  * window form, the partial/final plan shape, and the opt-in window
-  * rewrite rule. */
+  * window form, the partial/final plan shape, the memory bounds and
+  * their sort fallback. */
 class TopKSpec extends SparkSpec {
 
   import spark.implicits._
@@ -107,47 +107,6 @@ class TopKSpec extends SparkSpec {
     }
   }
 
-  test("registerRewrite on a session without the strategy still plans") {
-    val saved = spark.experimental.extraStrategies
-    try {
-      spark.experimental.extraStrategies = Seq.empty
-      TopK.registerRewrite(spark)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_custkey")).orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      val df = graft.Tables.orders(spark, Sf)
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 2)
-      assert(df.count() > 0) // would throw "no plan for TopKPerGroup" unfixed
-    } finally {
-      TopK.unregisterRewrite(spark)
-      spark.experimental.extraStrategies = saved
-    }
-  }
-
-  test("opt-in rewrite: the idiomatic window top-k plans as the heap operator") {
-    TopK.registerRewrite(spark)
-    try {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      def windowForm = graft.Tables.orders(spark, Sf)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-      val df = windowForm
-      df.collect()
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("TopKPerGroup"), p)
-      // neither a Window exec nor a leftover sort-based WindowGroupLimit
-      assert(!p.contains("Window"), p)
-      // and the rewritten plan returns exactly the window-form rows
-      val expect = SparkEntry.queries("rel_top_orders_per_cust")(spark, Sf)
-        .select("o_custkey", "o_orderkey").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val got = df.select(col("o_custkey"), col("o_orderkey")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == expect)
-    } finally TopK.unregisterRewrite(spark)
-  }
-
   private def collectTopK(p: org.apache.spark.sql.execution.SparkPlan)
       : Seq[TopKPerGroupExec] = {
     val here = p match { case t: TopKPerGroupExec => Seq(t); case _ => Nil }
@@ -225,21 +184,6 @@ class TopKSpec extends SparkSpec {
     assert(out.toSet == Set((1L, 3.0, 1)))
   }
 
-  test("injected-but-unconfigured rewrite is inert (function-only extension users)") {
-    // a session that injects GraftExtensions for the SQL functions must
-    // not silently get plan rewrites: rule present, conf unset → no-op
-    val savedOpts = spark.experimental.extraOptimizations
-    spark.conf.set(RewriteWindowTopK.EnabledKey, "false")
-    spark.experimental.extraOptimizations = savedOpts :+ RewriteWindowTopK
-    try {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_custkey")).orderBy(col("o_totalprice").desc)
-      val df = graft.Tables.orders(spark, Sf)
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-      assert(!df.queryExecution.optimizedPlan.toString.contains("TopKPerGroup"))
-    } finally spark.experimental.extraOptimizations = savedOpts
-  }
-
   test("property: random data parity with the window form, heap and fallback paths") {
     val rnd = new scala.util.Random(7)
     // trial 3 forces the external-sort fallback via the tiny row bound
@@ -267,24 +211,5 @@ class TopKSpec extends SparkSpec {
         case None => spark.conf.unset(TopKPerGroupExec.MaxBufferedRowsKey)
       }
     }
-  }
-
-  test("rewrite leaves non-matching windows alone (rank(), conjunct filters)") {
-    TopK.registerRewrite(spark)
-    try {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_custkey")).orderBy(col("o_totalprice").desc)
-      // rank() is not row_number: must NOT rewrite
-      val r1 = graft.Tables.orders(spark, Sf)
-        .withColumn("rk", rank().over(w)).filter(col("rk") <= 3)
-      assert(!r1.queryExecution.optimizedPlan.toString.contains("TopKPerGroup"))
-      // a disjunctive filter cannot be split into a pure rank limit:
-      // must NOT rewrite (a conjunct WOULD split, push down, and then
-      // legitimately rewrite)
-      val r2 = graft.Tables.orders(spark, Sf)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3 || col("o_totalprice") < 0)
-      assert(!r2.queryExecution.optimizedPlan.toString.contains("TopKPerGroup"))
-    } finally TopK.unregisterRewrite(spark)
   }
 }

@@ -17,8 +17,10 @@ import scala.collection.mutable
   *
   * Scope: exactly the statement shapes Spark's JDBC relation sends —
   * schema probe (`WHERE 1=0`), `CREATE TABLE`, batched `INSERT` with
-  * parameters inside a transaction, and full-table `SELECT` (incl. the
-  * `SELECT 1` count shape). Anything else throws loudly with the
+  * parameters inside a transaction, full-table `SELECT` (incl. the
+  * `SELECT 1` count shape), and the slot-range `WHERE` the ingest
+  * guard pushes down (a conjunction of `IS NOT NULL`, `>=` and `<=`
+  * against integer literals). Anything else throws loudly with the
   * method/SQL in the message, so a Spark-version drift surfaces as a
   * named gap, never a silent wrong answer.
   */
@@ -33,7 +35,11 @@ object MockPg {
   private val tables = mutable.Map.empty[String, Table]
   private val lock = new Object
 
-  def reset(): Unit = lock.synchronized(tables.clear())
+  /** Every filtering WHERE a SELECT evaluated, in arrival order. */
+  private val wheres = mutable.ArrayBuffer.empty[String]
+
+  def reset(): Unit = lock.synchronized { tables.clear(); wheres.clear() }
+  def pushedWheres: Seq[String] = lock.synchronized(wheres.toSeq)
   def rowCount(table: String): Int =
     lock.synchronized(tables.get(table).map(_.rows.size).getOrElse(0))
 
@@ -89,6 +95,40 @@ object MockPg {
   private val InsertRe =
     """(?is)\s*INSERT\s+INTO\s+(\S+)\s*\((.*?)\)\s*VALUES\s*\((.*?)\)\s*""".r
 
+  private def colIndex(t: Table, n: String): Int = {
+    val i = t.cols.indexWhere(_.name == n)
+    if (i < 0) throw new SQLException(s"""column "$n" does not exist""", "42703")
+    i
+  }
+
+  /** One conjunct of the pushed slot-range filter: `("c" IS NOT NULL)`,
+    * `("c" >= <integer>)` or `("c" <= <integer>)`. */
+  private val NotNullRe = """(?i)\(?\s*"?(\w+)"?\s+IS\s+NOT\s+NULL\s*\)?""".r
+  private val CompareRe = """\(?\s*"?(\w+)"?\s*(>=|<=)\s*(-?\d+)\s*\)?""".r
+
+  /** Row predicate for a pushed WHERE over `t`'s columns; any shape but
+    * the slot-range conjunction fails with the SQL in the message. */
+  private def rowFilter(t: Table, where: String, sql: String): Array[Any] => Boolean = {
+    val preds: Seq[Array[Any] => Boolean] =
+      where.split("(?i)\\s+AND\\s+").toSeq.map(_.trim).map {
+        case NotNullRe(c) =>
+          val i = colIndex(t, c); (r: Array[Any]) => r(i) != null
+        case CompareRe(c, op, v) =>
+          val i = colIndex(t, c); val bound = v.toLong
+          val cmp: Long => Boolean =
+            if (op == ">=") _ >= bound else _ <= bound
+          (r: Array[Any]) => r(i) match {
+            case null => false
+            case n: Number => cmp(n.longValue())
+            case other => throw new SQLException(
+              s"MockPg: integer comparison on ${other.getClass.getSimpleName} in: $sql", "0A000")
+          }
+        case _ =>
+          throw new SQLException(s"MockPg: unsupported WHERE in: $sql", "0A000")
+      }
+    r => preds.forall(_(r))
+  }
+
   /** A result: column metadata + materialized rows. */
   final case class Result(cols: Seq[Col], rows: Seq[Array[Any]])
 
@@ -98,24 +138,22 @@ object MockPg {
         val table = stripQuotes(rawTable)
         val t = tables.getOrElse(table, missing(table))
         val noRows = where != null && where.replaceAll("\\s", "") == "1=0"
-        val cl = colList.trim
-        if (where != null && !noRows)
-          throw new SQLException(s"MockPg: unsupported WHERE in: $sql", "0A000")
-        if (cl == "*")
-          Result(t.cols, if (noRows) Nil else t.rows.toSeq.map(_.clone()))
-        else if (cl == "1")
-          Result(Seq(Col("1", Types.INTEGER)),
-            if (noRows) Nil else t.rows.toSeq.map(_ => Array[Any](1)))
-        else {
-          val names = splitTop(cl).map(stripQuotes)
-          val idx = names.map { n =>
-            val i = t.cols.indexWhere(_.name == n)
-            if (i < 0) throw new SQLException(
-              s"""column "$n" does not exist""", "42703")
-            i
+        val rows =
+          if (noRows) Nil
+          else if (where == null) t.rows.toSeq
+          else {
+            val keep = rowFilter(t, where, sql)
+            wheres += where
+            t.rows.toSeq.filter(keep)
           }
-          Result(idx.map(t.cols),
-            if (noRows) Nil else t.rows.toSeq.map(r => idx.map(r).toArray[Any]))
+        val cl = colList.trim
+        if (cl == "*")
+          Result(t.cols, rows.map(_.clone()))
+        else if (cl == "1")
+          Result(Seq(Col("1", Types.INTEGER)), rows.map(_ => Array[Any](1)))
+        else {
+          val idx = splitTop(cl).map(stripQuotes).map(colIndex(t, _))
+          Result(idx.map(t.cols), rows.map(r => idx.map(r).toArray[Any]))
         }
       case other =>
         throw new SQLException(s"MockPg: unsupported query: $other", "0A000")
@@ -246,6 +284,8 @@ object MockPg {
         case null => Boolean.box(false)
         case b: java.lang.Boolean => b
       }
+      case ("getTimestamp", Array(c)) => cell(c).asInstanceOf[java.sql.Timestamp]
+      case ("getDate", Array(c)) => cell(c).asInstanceOf[java.sql.Date]
       case ("getObject", Array(c)) => cell(c).asInstanceOf[AnyRef]
       case ("isClosed", _) => Boolean.box(false)
       case ("close", _) => null
@@ -282,6 +322,10 @@ object MockPg {
         case ("setBoolean", Array(p, v)) =>
           params(p.asInstanceOf[Number].intValue()) = v; null
         case ("setObject", Array(p, v)) =>
+          params(p.asInstanceOf[Number].intValue()) = v; null
+        case ("setTimestamp", Array(p, v)) =>
+          params(p.asInstanceOf[Number].intValue()) = v; null
+        case ("setDate", Array(p, v)) =>
           params(p.asInstanceOf[Number].intValue()) = v; null
         case ("setNull", Array(p, _)) =>
           params(p.asInstanceOf[Number].intValue()) = null; null

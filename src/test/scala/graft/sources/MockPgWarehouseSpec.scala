@@ -49,4 +49,28 @@ class MockPgWarehouseSpec extends SparkSpec {
     assert(back.orderBy("slot").collect().map(_.getString(1)).toSeq ==
       Seq("a", "b", "c"))
   }
+
+  test("guarded backfill against Postgres semantics: an overlapping replay " +
+      "lands each event_id once, equal to one backfill of the union") {
+    import graft.ingest.Backfill
+    MockPg.reset()
+    val sink = Backfill.JdbcSink(freshWh("events"))
+    Backfill.runTo(spark, 1L, 61L, 2, sink)
+    Backfill.runTo(spark, 31L, 91L, 2, sink)
+    // the replay's guard read pushed its slot span to the engine
+    assert(MockPg.pushedWheres.exists(w => w.contains("slot") && w.contains("31")),
+      MockPg.pushedWheres)
+    val got = sink.readIfAny(spark).get
+    assert(got.count() == got.select("event_id").distinct().count())
+    val once = Backfill.JdbcSink(freshWh("events_once"))
+    Backfill.runTo(spark, 1L, 91L, 2, once)
+    val want = once.readIfAny(spark).get
+    assert(got.count() == want.count() && want.count() > 0)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    // any other WHERE shape still fails loudly, naming the gap
+    val e = intercept[Exception](
+      got.filter(org.apache.spark.sql.functions.col("event_type") === "x").count())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("unsupported WHERE")), e)
+  }
 }

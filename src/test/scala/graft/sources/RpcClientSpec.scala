@@ -217,6 +217,40 @@ class RpcClientSpec extends SparkSpec {
     }
   }
 
+  test("backfill verb's fetcher: SOLANA_RPC_URL routes every slot through " +
+      "the endpoint; unset, the result equals a synthetic backfill") {
+    val requested = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    // the stub's chain skips every third slot, so its rows differ from
+    // the synthetic blocks'
+    val stubBlock: Backfill.BlockFetcher =
+      s => if (s % 3 == 0) None else Backfill.syntheticBlock(s)
+    withStub {
+      case ("getBlock", Some(s), _) =>
+        requested.add(s)
+        Right(stubBlock(s).getOrElse("null"))
+      case other => fail(s"unexpected: $other")
+    } { url =>
+      val base = java.nio.file.Files.createTempDirectory("rpc_verb").toString
+      def backfill(name: String, env: Map[String, String]) = {
+        Backfill.runTo(spark, 90L, 110L, 4, Backfill.FileSink(s"$base/$name"),
+          graft.Main.fetcherFor(env))
+        spark.read.parquet(s"$base/$name").drop("block_date")
+      }
+      // rows as sorted strings: a multiset compare (exceptAll over the
+      // deduplicated parse fails to bind in Spark's planner)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      def parsed(fetcher: Backfill.BlockFetcher) = rows(graft.ingest.Parse.parse(
+        Backfill.fetchRange(spark, 90L, 110L, 4, fetcher)))
+      val live = rows(backfill("live", Map("SOLANA_RPC_URL" -> url)))
+      assert(requested.size == 20)
+      assert(live.nonEmpty && live == parsed(stubBlock))
+      val synthetic = rows(backfill("synthetic", Map.empty))
+      assert(requested.size == 20, "no endpoint configured, yet the stub was called")
+      assert(synthetic.size > live.size && synthetic == parsed(Backfill.syntheticBlock))
+    }
+  }
+
   test("incremental-blocks over live RPC: streaming DSv2 + endpoint drains " +
       "to the tip through the idempotent sink (429s healed mid-stream)") {
     withStub {
