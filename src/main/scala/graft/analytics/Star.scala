@@ -15,9 +15,8 @@ import org.apache.spark.sql.functions._
   * table (min/max/count — partial-aggregable, one shuffle), and every
   * enrichment join broadcasts the dim against the fact scan (J1). The
   * dims here are small by construction (distinct wallets/programs/
-  * tokens ≪ events); at 100 TB the same build runs incrementally per
-  * ingest batch and the joins stay broadcast until the dim outgrows the
-  * threshold, where AQE flips to shuffle join.
+  * tokens ≪ events); the joins stay broadcast until the dim outgrows
+  * the threshold, where AQE flips to shuffle join.
   */
 object Star extends QueryModule {
 
@@ -54,67 +53,6 @@ object Star extends QueryModule {
         expr("min(ts) div 1000").as("first_seen_us"),
         expr("max(ts) div 1000").as("last_seen_us"),
         count(lit(1)).as("transfer_count"))
-
-  /** Incremental dim maintenance (the schema rationale's "updated via
-    * materialized views or scheduled jobs", SCHEMA.md:204): fold a new
-    * batch's dim into the existing dim WITHOUT rescanning history.
-    * Every dim_wallets aggregate is a semigroup (min/max/sum), so
-    * merge = union + one grouped re-aggregation over (|dim| + |delta|)
-    * rows — at 100 TB this is the difference between touching the full
-    * fact table per batch and touching only the batch. Associativity is
-    * pinned by StarSpec: incremental over any split ≡ one-shot build. */
-  def mergeDimWallets(existing: DataFrame, batch: DataFrame): DataFrame =
-    existing.unionByName(dimWallets(batch))
-      .groupBy(col("user_id"))
-      .agg(
-        min(col("first_seen_ns")).as("first_seen_ns"),
-        max(col("last_seen_ns")).as("last_seen_ns"),
-        sum(col("total_transactions")).as("total_transactions"),
-        sum(col("total_purchases")).as("total_purchases"))
-
-  /** Append-only delta log for the wallet dim: each ingest batch appends
-    * its own one-pass dim build; nothing rewrites history, so a crashed
-    * writer never corrupts the dim (the MetadataStore discipline applied
-    * to a semigroup aggregate instead of last-write-wins). */
-  def appendDimDelta(batch: DataFrame, path: String): Unit = {
-    // heal a torn compaction swap BEFORE appending: a fresh append would
-    // recreate `path` beside `<path>_prev`, making the interrupted-swap
-    // state (dst missing) unrecognizable — the next compaction would
-    // then delete prev, the only copy of pre-crash history
-    graft.operators.StoreOps.recoverInterrupted(batch.sparkSession, path)
-    dimWallets(batch).write.mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
-  }
-
-  /** Current dim view: one grouped re-aggregation over the delta log —
-    * correct after any number of appends because every column is a
-    * semigroup fold (see [[mergeDimWallets]]). */
-  def dimSnapshot(spark: SparkSession, path: String): DataFrame = {
-    // reads heal a torn compaction swap too (MetadataStore.snapshot
-    // discipline) — otherwise the read throws while `<path>_prev` holds
-    // the only complete copy. Grace-gated: a reader can also observe
-    // the torn state during a LIVE compaction's swap window, and must
-    // wait it out rather than heal under the compactor (StoreOps docs).
-    graft.operators.StoreOps.recoverInterrupted(spark, path,
-      graft.operators.StoreOps.ReadHealGraceMs)
-    spark.read.parquet(path)
-      .groupBy(col("user_id"))
-      .agg(
-        min(col("first_seen_ns")).as("first_seen_ns"),
-        max(col("last_seen_ns")).as("last_seen_ns"),
-        sum(col("total_transactions")).as("total_transactions"),
-        sum(col("total_purchases")).as("total_purchases"))
-  }
-
-  /** Compact the delta log back to one row per wallet (run periodically
-    * so snapshot cost stays O(|dim|), not O(batches·|dim|)) — crash-safe
-    * swap via [[graft.operators.StoreOps]], shared with the metadata
-    * store. */
-  def compactDim(spark: SparkSession, path: String): Unit = {
-    // heal a torn prior swap before READING — dimSnapshot would otherwise
-    // throw (or see nothing) while <path>_prev holds the only copy
-    graft.operators.StoreOps.recoverInterrupted(spark, path)
-    graft.operators.StoreOps.replaceWith(spark, path, dimSnapshot(spark, path))
-  }
 
   /** SCD Type-2 history of a per-program activity tier: classify each
     * (program, day) against the program's own average daily volume with

@@ -7,10 +7,9 @@ import org.apache.spark.sql.functions._
 /** The reference's `etl_checkpoints` backfill-progress table
   * (/root/reference/docs/SCHEMA.md:283-300: checkpoint_id, slot range,
   * last_processed_slot, status in_progress/completed/failed) as an
-  * append-only parquet log resolved last-write-wins per checkpoint_id —
-  * same storage discipline as [[graft.operators.MetadataStore]]: a
-  * crashed writer can never corrupt prior state, and the snapshot view
-  * is one window pass.
+  * append-only parquet log resolved last-write-wins per checkpoint_id:
+  * a crashed writer can never corrupt prior state, and the snapshot
+  * view is one window pass.
   */
 object Checkpoints {
 

@@ -1,6 +1,5 @@
 package graft.model
 
-import java.sql.Timestamp
 import org.apache.spark.sql.types._
 
 /** Data model for the ingest layer.
@@ -13,19 +12,6 @@ import org.apache.spark.sql.types._
   * (with `programId`) and `meta` (`err`, `postTokenBalances[]`).
   */
 object Schemas {
-
-  /** One row per (transaction | instruction | token transfer) occurrence —
-    * the engine's typed core (SURVEY.md §1.1). `event_id` is the
-    * deterministic sha256 idempotency key (events.rs:76-86). */
-  final case class CanonicalEvent(
-      event_id: String,
-      slot: Long,
-      block_time: Timestamp,
-      tx_signature: String,
-      program_id: Option[String],
-      instruction_index: Int,
-      event_type: String,
-      raw_payload: String)
 
   /** Token programs whose instructions classify as `token_instruction`
     * (parsers.rs:6-7,137-141). */

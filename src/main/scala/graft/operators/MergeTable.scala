@@ -27,8 +27,7 @@ import org.apache.spark.sql.types._
   *     writer won that version — surfaced as an error, not silent loss.
   *   - `_floor/` — the vacuum horizon (via [[StoreOps.replaceWith]]'s
   *     crash-safe swap): time travel below it fails loudly instead of
-  *     reading files vacuum physically deleted (same fail-loud contract
-  *     as [[MetadataStore]]'s compaction floor).
+  *     reading files vacuum physically deleted.
   *
   * Scale design (100 TB): MERGE rewrites ONLY the files whose
   * `[min_key, max_key]` span overlaps an update key — the manifest's
@@ -674,48 +673,6 @@ object MergeTable {
         cols.map(c => col(s"_ev.img.$c").as(c)): _*)
   }
 
-  /** Checkpointed incremental drain of the change feed — the consumer
-    * side of the CDC loop (the complement of the streaming MERGE sink):
-    * each call computes the feed from the consumer's recorded version
-    * to the table's latest, hands it to `process`, then records the new
-    * version in the [[MetadataStore]] at `storePath` under `consumerId`.
-    *
-    * Delivery is AT-LEAST-ONCE with the same contract as Structured
-    * Streaming's `foreachBatch`: the offset is recorded AFTER `process`
-    * returns, so a crash in between re-delivers the window on restart —
-    * `process` must be idempotent (e.g. fold into a keyed MERGE, or
-    * make the view update a deterministic overwrite). Returns the
-    * `(fromV, toV]` window processed, or None when there is nothing new
-    * (the no-new-data guard: zero jobs run).
-    *
-    * A first-time consumer starts at the table's FIRST version — it
-    * sees every change after the initial commit and bootstraps any
-    * state it needs from `snapshot(firstVersion)` (the
-    * `lake_incremental_view` pattern). Independent consumers use
-    * distinct `consumerId`s; each drains at its own pace against the
-    * same log, exactly like competing readers of a Delta CDF. At 100 TB
-    * each drain costs the rewritten-file window, never the table. */
-  def drainChanges(spark: SparkSession, root: String, key: String,
-      storePath: String, consumerId: String, preImages: Boolean = false)(
-      process: DataFrame => Unit): Option[(Long, Long)] = {
-    val vs = versions(spark, root)
-    if (vs.isEmpty) return None
-    val latest = vs.last
-    // first-time bootstrap on a vacuumed table: versions below the
-    // floor are unanswerable, so a new consumer starts AT the floor
-    // (its bootstrap snapshot is snapshot(floor)) and drains
-    // (floor, latest] — vs.head alone would make changeFeed's floor
-    // check throw on every call, forever, since the offset is only
-    // recorded after a successful drain
-    val from = MetadataStore.get(spark, storePath, s"cdc:$consumerId")
-      .map(_.toLong)
-      .getOrElse(math.max(vs.head, vacuumFloor(spark, root)))
-    if (from >= latest) return None
-    process(changeFeed(spark, root, key, from, latest, preImages))
-    MetadataStore.set(spark, storePath, s"cdc:$consumerId", latest.toString)
-    Some((from, latest))
-  }
-
   /** OPTIMIZE: fold files smaller than `smallerThan` rows into
     * ~`targetRows`-row files in ONE commit (their union removed+added
     * atomically; state provably unchanged, time travel intact). The
@@ -825,9 +782,8 @@ object MergeTable {
     * real one), and an evolving batch must still carry every declared
     * column. NOTE: append does not check key uniqueness against the
     * table — appending an existing key creates a duplicate row. Tables
-    * consumed through [[changeFeed]]/[[drainChanges]] (which diff by
-    * key) must be written via [[merge]], or append only known-fresh
-    * key ranges. */
+    * consumed through [[changeFeed]] (which diffs by key) must be
+    * written via [[merge]], or append only known-fresh key ranges. */
   def append(spark: SparkSession, root: String, df: DataFrame,
       key: String, evolveSchema: Boolean = false): Long = {
     val basis = versions(spark, root).lastOption.getOrElse(0L)

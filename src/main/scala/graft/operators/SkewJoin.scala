@@ -8,10 +8,9 @@ import org.apache.spark.sql.functions._
   *
   * First line of defense is AQE's runtime skew-join splitting
   * (`spark.sql.adaptive.skewJoin.enabled`, on by default with AQE) —
-  * free and preferred. Salting is the explicit fallback for the cases
+  * free and preferred. Salting is the explicit fallback for the case
   * AQE can't fix: a sort-merge join whose single hot key exceeds the
-  * split threshold inside ONE partition, or a shuffle whose hot key
-  * feeds an aggregation.
+  * split threshold inside ONE partition.
   */
 object SkewJoin {
 
@@ -27,19 +26,5 @@ object SkewJoin {
     val saltedDim = dim.withColumn("__graft_salt",
       explode(array((0 until salts).map(lit(_)): _*)))
     saltedFact.join(saltedDim, Seq(key, "__graft_salt")).drop("__graft_salt")
-  }
-
-  /** Two-phase (partial → final) aggregation for a skewed group-by key:
-    * count per (key, salt) first, then merge — the map-side-combine
-    * pattern made explicit for aggregates (like collect_list) that have
-    * no partial implementation. For plain count/sum Spark already plans
-    * partial aggregation; this exists for the stragglers. */
-  def saltedCount(df: DataFrame, key: String, salts: Int): DataFrame = {
-    require(salts > 0)
-    df.withColumn("__graft_salt", pmod(hash(df.columns.map(col).toIndexedSeq: _*), lit(salts)))
-      .groupBy(col(key), col("__graft_salt"))
-      .agg(count(lit(1)).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum(col("__partial")).as("cnt"))
   }
 }

@@ -3,9 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared mechanics for the append-only parquet stores (metadata KV,
-  * checkpoint log, dim delta logs): monotonic versioning and log
-  * compaction. One implementation so a fix lands everywhere.
+/** Shared mechanics for the small parquet stores: monotonic versioning
+  * (the [[graft.ingest.Checkpoints]] log) and a crash-safe directory
+  * swap with its heal ([[MergeTable]]'s vacuum floor).
   */
 object StoreOps {
 

@@ -50,24 +50,4 @@ object Upsert {
       .filter(col("__graft_rn") === 1 || col(key).isNull)
       .drop("__graft_rn")
   }
-
-  /** Merge a batch into an existing snapshot: rows whose key exists take
-    * the newer version; new keys append — the full ON CONFLICT DO UPDATE
-    * contract as one plan over `existing ∪ incoming`. */
-  def merge(existing: DataFrame, incoming: DataFrame, key: String,
-      versionCol: String): DataFrame =
-    lastWriteWins(existing.unionByName(incoming), key, versionCol)
-
-  /** The S8 sink contract on the copy-on-write [[MergeTable]]: a replay
-    * batch (possibly holding several versions of one key — retries,
-    * overlapping backfill ranges) resolves last-write-wins FIRST, then
-    * lands as one `MERGE INTO` commit. The table rewrites only files
-    * whose key span the batch touches, so re-running a day's backfill
-    * against a year's table stays a day-sized operation — the
-    * `INSERT … ON CONFLICT DO UPDATE` semantics of the reference's
-    * warehouse (warehouse.rs:220-231) with bounded, versioned rewrites
-    * instead of an in-place mutable store. */
-  def mergeIntoTable(spark: org.apache.spark.sql.SparkSession, root: String,
-      batch: DataFrame, key: String, versionCol: String): Long =
-    MergeTable.merge(spark, root, lastWriteWins(batch, key, versionCol), key)
 }

@@ -98,54 +98,6 @@ final class RpcClient(config: RpcConfig,
     if (res.isNull) None else Some(mapper.writeValueAsString(res))
   }
 
-  /** `getTransaction` (rpc.rs:139-160): single-tx lookup, the live form
-    * of the S3 point query. Null result → unknown signature → None. */
-  def getTransaction(signature: String): Option[String] = {
-    val params = s"""[${jstr(signature)},{"encoding":"jsonParsed","maxSupportedTransactionVersion":0}]"""
-    val res = call("getTransaction", params)
-    if (res.isNull) None else Some(mapper.writeValueAsString(res))
-  }
-
-  /** `getSignaturesForAddress` (rpc.rs:162-187): address-history page,
-    * the live form of the S4 keyset-paged scan — `before`/`until` ARE
-    * the keyset cursor. Non-array results read as empty, matching the
-    * reference's `as_array() … vec![]`. */
-  def getSignaturesForAddress(address: String, limit: Option[Long] = None,
-      before: Option[String] = None, until: Option[String] = None): Seq[String] = {
-    val opts = (limit.map(l => s""""limit":$l""") ++
-      before.map(b => s""""before":${jstr(b)}""") ++
-      until.map(u => s""""until":${jstr(u)}""")).mkString(",")
-    arrayCall("getSignaturesForAddress", s"[${jstr(address)},{$opts}]")
-  }
-
-  /** `getProgramAccounts` (rpc.rs:189-208): the S5 scan's live form.
-    * `filtersJson` is passed through verbatim (the reference takes an
-    * opaque Value). */
-  def getProgramAccounts(programId: String,
-      filtersJson: Option[String] = None): Seq[String] = {
-    val opts = s""""encoding":"jsonParsed"""" +
-      filtersJson.map(f => s""","filters":$f""").getOrElse("")
-    arrayCall("getProgramAccounts", s"[${jstr(programId)},{$opts}]")
-  }
-
-  /** `getBlockHeight` (rpc.rs:210-213) — the S6 probe's live form. */
-  def getBlockHeight(): Long = {
-    val res = call("getBlockHeight", "[]")
-    if (!res.canConvertToLong) throw RpcError(-1, s"invalid block height response: $res")
-    res.asLong()
-  }
-
-  private def arrayCall(method: String, params: String): Seq[String] = {
-    val res = call(method, params)
-    if (!res.isArray) Seq.empty
-    else (0 until res.size()).map(i => mapper.writeValueAsString(res.get(i)))
-  }
-
-  /** JSON string literal with proper escaping — signatures/addresses are
-    * caller input and must not be string-interpolated raw into the
-    * request body. */
-  private def jstr(s: String): String = mapper.writeValueAsString(s)
-
   /** One JSON-RPC call with pacing + bounded-exponential retry. */
   private def call(method: String, paramsJson: String): JsonNode = {
     val body = s"""{"jsonrpc":"2.0","id":1,"method":"$method","params":$paramsJson}"""

@@ -395,17 +395,4 @@ object StreamAnalytics {
     checkpointDir.foreach(d => w.option("checkpointLocation", d))
     w.start()
   }
-
-  /** Start an append-mode query into an in-memory sink (spec harness
-    * only — the declared queries drain through [[startToParquet]]). */
-  def startToMemory(agg: DataFrame, name: String,
-      checkpointDir: Option[String] = None): StreamingQuery = {
-    val w = agg.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-    checkpointDir.foreach(d => w.option("checkpointLocation", d))
-    w.start()
-  }
 }

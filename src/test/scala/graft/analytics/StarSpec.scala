@@ -28,57 +28,6 @@ class StarSpec extends SparkSpec {
     assert(fromDim == direct)
   }
 
-  test("incremental dim maintenance ≡ one-shot build over any split") {
-    import spark.implicits._
-    val e = events.withColumn("rid", col("event_id") % 3)
-    val oneShot = Star.dimWallets(events)
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    // fold three disjoint batches through mergeDimWallets
-    val incremental = (0L until 3L)
-      .map(i => e.filter(col("rid") === i).drop("rid"))
-      .foldLeft(Option.empty[org.apache.spark.sql.DataFrame]) {
-        case (None, batch) => Some(Star.dimWallets(batch))
-        case (Some(dim), batch) => Some(Star.mergeDimWallets(dim, batch))
-      }.get.as[(Long, Long, Long, Long, Long)].collect().toSet
-    assert(incremental == oneShot)
-  }
-
-  test("delta-log dim: snapshot ≡ one-shot build; compaction preserves it") {
-    import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft_dim").toString + "/dim_wallets"
-    val e = events.withColumn("rid", col("event_id") % 4)
-    (0L until 4L).foreach(i =>
-      Star.appendDimDelta(e.filter(col("rid") === i).drop("rid"), path))
-    val oneShot = Star.dimWallets(events)
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    val viaDeltas = Star.dimSnapshot(spark, path)
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    assert(viaDeltas == oneShot)
-    // compaction shrinks the log to one row per wallet, same snapshot
-    Star.compactDim(spark, path)
-    assert(spark.read.parquet(path).count() == oneShot.size)
-    val afterCompact = Star.dimSnapshot(spark, path)
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    assert(afterCompact == oneShot)
-    // and further deltas keep folding in
-    Star.appendDimDelta(events.limit(50), path)
-    assert(Star.dimSnapshot(spark, path)
-      .agg(sum("total_transactions")).as[Long].head() == events.count() + 50)
-
-    // crash between compactDim's two renames (dst gone, prev = only
-    // copy), then an APPEND arrives first: the append must heal the swap
-    // before writing — otherwise it recreates dst beside prev and the
-    // next compaction silently deletes all pre-crash history
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.fs.Path(path + "_prev")), "crash setup rename failed")
-    Star.appendDimDelta(events.limit(10), path)
-    Star.compactDim(spark, path)
-    assert(Star.dimSnapshot(spark, path)
-      .agg(sum("total_transactions")).as[Long].head() == events.count() + 60)
-  }
-
   test("wallet-cohort enrichment broadcasts the dim against one fact scan") {
     val df = SparkEntry.queries("star_wallet_cohorts")(spark, Sf)
     val p = df.queryExecution.executedPlan.toString

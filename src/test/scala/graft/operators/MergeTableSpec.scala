@@ -167,27 +167,6 @@ class MergeTableSpec extends SparkSpec {
     assert(rowsOf(MergeTable.snapshot(spark, root)) == Set((1L, "a")))
   }
 
-  test("a first-time CDC consumer on a vacuumed table bootstraps at the floor") {
-    val root = tmpRoot()
-    val store = tmpRoot()
-    val v1 = MergeTable.append(spark, root, Seq((1L, "a")).toDF("k", "v"), "k")
-    MergeTable.merge(spark, root, Seq((1L, "b")).toDF("k", "v"), "k")
-    val v3 = MergeTable.merge(spark, root, Seq((2L, "c")).toDF("k", "v"), "k")
-    MergeTable.vacuum(spark, root, horizon = v3, graceMs = 0L)
-    assert(MergeTable.vacuumFloor(spark, root) == v3)
-    MergeTable.merge(spark, root, Seq((3L, "d")).toDF("k", "v"), "k")
-    // bootstrap at vs.head = v1 would throw on the floor check forever;
-    // the consumer must start at the floor and drain (floor, latest]
-    var seen = Set.empty[(String, Long)]
-    val win = MergeTable.drainChanges(spark, root, "k", store, "c1") { feed =>
-      seen = feed.select(col("change_type"), col("k")).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSet
-    }
-    assert(win.exists(_._1 == v3), s"window should start at the floor: $win")
-    assert(seen == Set(("insert", 3L)))
-    assert(v1 < v3) // the scenario really had pre-floor history
-  }
-
   test("footer-folded commit stats match a row-scan recompute (long, string, double keys)") {
     // the commit's per-file min/max/n_rows now fold driver-side from
     // parquet footers for footer-safe key types; pin them against an
@@ -635,46 +614,6 @@ class MergeTableSpec extends SparkSpec {
       MergeTable.changeFeed(spark, root, "k", v3, v4)
     }
     assert(e.getMessage.contains("vacuum floor"))
-  }
-
-  test("drainChanges delivers once, re-delivers after a crash, idles on no-new-data") {
-    val root = tmpRoot()
-    val store = java.nio.file.Files.createTempDirectory("graft-mt-store")
-      .resolve("kv").toString
-    MergeTable.append(spark, root, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "k")
-    MergeTable.merge(spark, root, Seq((2L, "B")).toDF("k", "v"), "k")
-
-    var seen = Vector.empty[(String, Long, String)]
-    def collect(df: DataFrame): Unit =
-      seen ++= df.collect().map(r => (r.getString(0), r.getLong(1), r.getString(2)))
-
-    // a first-time consumer starts at the table's first version
-    assert(MergeTable.drainChanges(spark, root, "k", store, "c1")(collect)
-      .contains((1L, 2L)))
-    assert(seen == Vector(("update", 2L, "B")))
-
-    // no new data → process is never invoked, zero jobs
-    assert(MergeTable.drainChanges(spark, root, "k", store, "c1") { _ =>
-      fail("no-new-data must not call process")
-    }.isEmpty)
-
-    // a crash BETWEEN process and the offset record re-delivers the
-    // window on the next drain (at-least-once, the foreachBatch contract)
-    MergeTable.merge(spark, root, Seq((3L, "c")).toDF("k", "v"), "k")
-    intercept[RuntimeException] {
-      MergeTable.drainChanges(spark, root, "k", store, "c1")(_ =>
-        throw new RuntimeException("boom"))
-    }
-    assert(MergeTable.drainChanges(spark, root, "k", store, "c1")(collect)
-      .contains((2L, 3L)))
-    assert(seen.last == (("insert", 3L, "c")))
-
-    // an independent consumer drains the whole history at its own pace
-    var n2 = 0L
-    assert(MergeTable.drainChanges(spark, root, "k", store, "c2") { df =>
-      n2 = df.count()
-    }.contains((1L, 3L)))
-    assert(n2 == 2L) // update(2→B) + insert(3); key 1 never changed
   }
 
   test("a non-key-unique batch is refused") {

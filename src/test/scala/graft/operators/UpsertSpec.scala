@@ -28,40 +28,6 @@ class UpsertSpec extends SparkSpec {
     assert(results.head == Seq("zeta")) // desc tiebreak on payload
   }
 
-  test("merge implements ON CONFLICT DO UPDATE over a snapshot") {
-    val existing = Seq(
-      ("e1", 1L, "v1"), ("e2", 1L, "v1")).toDF("event_id", "updated_at", "payload")
-    val incoming = Seq(
-      ("e2", 2L, "v2"),      // conflict → update
-      ("e3", 1L, "v1"))      // new key → insert
-      .toDF("event_id", "updated_at", "payload")
-    val got = Upsert.merge(existing, incoming, "event_id", "updated_at")
-      .select("event_id", "payload").as[(String, String)].collect().toMap
-    assert(got == Map("e1" -> "v1", "e2" -> "v2", "e3" -> "v1"))
-  }
-
-  test("replay of identical batch is a no-op under merge") {
-    val batch = Seq(("e1", 1L, "a"), ("e2", 2L, "b")).toDF("event_id", "updated_at", "payload")
-    val once = Upsert.merge(batch, batch, "event_id", "updated_at")
-    assert(once.count() == 2)
-  }
-
-  test("mergeIntoTable: replayed multi-version batch lands last-write-wins on the MergeTable") {
-    val root = java.nio.file.Files.createTempDirectory("graft-up")
-      .resolve("t").toString
-    Upsert.mergeIntoTable(spark, root,
-      Seq(("e1", 1L, "v1"), ("e2", 1L, "v1")).toDF("event_id", "updated_at", "payload"),
-      "event_id", "updated_at")
-    // a retried range re-delivers e2 at two versions plus a new key
-    Upsert.mergeIntoTable(spark, root,
-      Seq(("e2", 2L, "v2"), ("e2", 3L, "v3"), ("e3", 1L, "v1"))
-        .toDF("event_id", "updated_at", "payload"),
-      "event_id", "updated_at")
-    val got = MergeTable.snapshot(spark, root)
-      .select("event_id", "payload").as[(String, String)].collect().toMap
-    assert(got == Map("e1" -> "v1", "e2" -> "v3", "e3" -> "v1"))
-  }
-
   test("lastWriteWins accepts unorderable (map) payload columns") {
     // the generic sink primitive must take every schema dropDuplicates
     // would — a direct orderBy on a map column fails analysis

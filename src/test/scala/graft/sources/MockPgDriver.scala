@@ -200,8 +200,10 @@ object MockPg {
   // ---------------------------------------------------------------
 
   /** Reflective proxy: handled methods via `pf`; primitive-returning
-    * unhandled methods get zero/false (JDBC metadata probes), object-
-    * returning ones THROW with the method name so a gap is loud. */
+    * unhandled methods get zero/false (JDBC metadata probes); unhandled
+    * `void` and object-returning ones THROW with the method name so a
+    * gap is loud. A void setter swallowed here would drop its parameter
+    * and store a shifted row. */
   private def proxy[T](iface: Class[T])(
       pf: PartialFunction[(String, Array[AnyRef]), AnyRef]): T =
     Proxy.newProxyInstance(iface.getClassLoader, Array[Class[_]](iface),
@@ -215,7 +217,6 @@ object MockPg {
             case "hashCode" => Int.box(System.identityHashCode(p))
             case "equals" => Boolean.box(a.headOption.exists(_ eq p))
             case "getWarnings" => null
-            case _ if m.getReturnType == java.lang.Void.TYPE => null
             case _ if m.getReturnType == java.lang.Boolean.TYPE => Boolean.box(false)
             case _ if m.getReturnType == java.lang.Integer.TYPE => Int.box(0)
             case _ if m.getReturnType == java.lang.Long.TYPE => Long.box(0L)

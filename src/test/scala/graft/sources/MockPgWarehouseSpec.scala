@@ -70,7 +70,23 @@ class MockPgWarehouseSpec extends SparkSpec {
     // any other WHERE shape still fails loudly, naming the gap
     val e = intercept[Exception](
       got.filter(org.apache.spark.sql.functions.col("event_type") === "x").count())
-    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .exists(c => String.valueOf(c.getMessage).contains("unsupported WHERE")), e)
+    assert(mentions(e, "unsupported WHERE"), e)
   }
+
+  test("an unbindable column fails the append naming the setter, storing no row") {
+    import spark.implicits._
+    MockPg.reset()
+    for ((df, setter) <- Seq(
+        Seq((1L, 1.5f)).toDF("slot", "x") -> "setFloat",
+        Seq((1L, BigDecimal("1.25"))).toDF("slot", "x") -> "setBigDecimal")) {
+      val table = s"typed_$setter"
+      val e = intercept[Exception](freshWh(table).append(df))
+      assert(mentions(e, s"PreparedStatement.$setter"), e)
+      assert(MockPg.rowCount(table) == 0)
+    }
+  }
+
+  private def mentions(e: Throwable, text: String): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains(text))
 }

@@ -143,37 +143,6 @@ class RpcClientSpec extends SparkSpec {
     assert(e.code == 599 && sleeps.get == 2)
   }
 
-  test("full RPC surface parity: getTransaction / signatures page / " +
-      "program accounts / block height (rpc.rs:139-213)") {
-    withStub {
-      case ("getTransaction", _, _) => Right("""{"slot":5,"meta":{"err":null}}""")
-      case ("getSignaturesForAddress", _, _) =>
-        Right("""[{"signature":"s1"},{"signature":"s2"}]""")
-      case ("getProgramAccounts", _, _) => Right("""[{"pubkey":"p1"}]""")
-      case ("getBlockHeight", _, _) => Right("98765")
-      case other => fail(s"unexpected: $other")
-    } { url =>
-      val c = new RpcClient(cfg(url), sleep = _ => ())
-      assert(c.getTransaction("sig_with\"quote").get.contains("\"slot\":5"))
-      val sigs = c.getSignaturesForAddress("addr", limit = Some(2),
-        before = Some("s0"))
-      assert(sigs.map(s => s.contains("signature")) == Seq(true, true))
-      assert(c.getProgramAccounts("prog").head.contains("p1"))
-      assert(c.getBlockHeight() == 98765L)
-    }
-    // null transaction → unknown signature → None (reference contract);
-    // non-array page results read as empty, not a crash
-    withStub {
-      case ("getTransaction", _, _) => Right("null")
-      case ("getSignaturesForAddress", _, _) => Right("null")
-      case other => fail(s"unexpected: $other")
-    } { url =>
-      val c = new RpcClient(cfg(url), sleep = _ => ())
-      assert(c.getTransaction("unknown").isEmpty)
-      assert(c.getSignaturesForAddress("addr").isEmpty)
-    }
-  }
-
   test("config from env: reference names and defaults (config.rs:41-52)") {
     val c = RpcConfig.fromEnv(Map("SOLANA_RPC_URL" -> "http://h/"))
     assert(c.maxRetries == 5 && c.timeoutSeconds == 30L && c.ratePerSec == 50.0)

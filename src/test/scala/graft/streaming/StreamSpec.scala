@@ -24,6 +24,17 @@ class StreamSpec extends SparkSpec {
       lines.mkString("\n").getBytes("UTF-8"))
   }
 
+  /** Drain `agg` into an in-memory table named `name` (append mode,
+    * AvailableNow), for specs that read the result back as a table. */
+  private def startToMemory(agg: org.apache.spark.sql.DataFrame,
+      name: String): org.apache.spark.sql.streaming.StreamingQuery =
+    agg.writeStream
+      .outputMode("append")
+      .format("memory")
+      .queryName(name)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+
   test("tumbling window counts complete when the watermark passes") {
     val src = Files.createTempDirectory("graft_stream").toString
     writeEvents(src, "b1", Seq(
@@ -36,7 +47,7 @@ class StreamSpec extends SparkSpec {
       (5L, "2024-01-01T14:00:00Z", "view", 1.0)))
 
     val stream = spark.readStream.schema(schema).json(src)
-    val q = StreamAnalytics.startToMemory(
+    val q = startToMemory(
       StreamAnalytics.windowedVolume(stream, watermark = "1 hour"), "win_out")
     q.awaitTermination()
 
@@ -61,7 +72,7 @@ class StreamSpec extends SparkSpec {
       (5L, "2024-01-01T16:00:00Z", "purchase", 0.0)))
 
     val stream = spark.readStream.schema(schema).json(src)
-    val q = StreamAnalytics.startToMemory(
+    val q = startToMemory(
       StreamAnalytics.sessionActivity(stream, keyCol = "event_type",
         gap = "30 minutes", watermark = "1 hour"), "sess_out")
     q.awaitTermination()
@@ -157,7 +168,7 @@ class StreamSpec extends SparkSpec {
       (1L, "2024-01-01T10:02:00Z", "purchase", 1.0))) // replay again
 
     val stream = spark.readStream.schema(schema).json(src)
-    val q = StreamAnalytics.startToMemory(
+    val q = startToMemory(
       StreamAnalytics.dedupedStream(stream), "dedup_out")
     q.awaitTermination()
 
@@ -189,7 +200,7 @@ class StreamSpec extends SparkSpec {
       (6L, "2024-01-01T11:30:00Z", 2L, "click")))  // other user
 
     val stream = spark.readStream.schema(uschema).json(src)
-    val q = StreamAnalytics.startToMemory(
+    val q = startToMemory(
       StreamAnalytics.purchaseClickJoin(stream), "ssjoin_out")
     q.awaitTermination()
 
@@ -580,7 +591,7 @@ class StreamSpec extends SparkSpec {
     }
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).json(src)
-    val q = StreamAnalytics.startToMemory(
+    val q = startToMemory(
       StreamAnalytics.dedupedStream(stream, watermark = "1 hour"), "metrics_dedup")
     q.awaitTermination()
     val progress = q.recentProgress.filter(_.stateOperators.nonEmpty)
@@ -625,7 +636,7 @@ class StreamSpec extends SparkSpec {
       (31L, 9L, "2024-01-03T10:00:00Z", "click")))
     val stream = spark.readStream.schema(ojSchema)
       .option("maxFilesPerTrigger", 1).json(src)
-    val q = StreamAnalytics.startToMemory(
+    val q = startToMemory(
       StreamAnalytics.purchaseClickJoin(stream, watermark = "1 hour",
         joinType = "left_outer"), "oj_out")
     q.awaitTermination()
@@ -678,7 +689,7 @@ class StreamSpec extends SparkSpec {
       }
       val stream = spark.readStream.schema(ojSchema)
         .option("maxFilesPerTrigger", 1).json(src)
-      val q = StreamAnalytics.startToMemory(
+      val q = startToMemory(
         StreamAnalytics.purchaseClickJoin(stream, watermark = "1 hour",
           joinType = joinType), s"ojs_$joinType")
       q.awaitTermination()
