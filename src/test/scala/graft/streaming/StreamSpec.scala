@@ -4,6 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Event-time streaming semantics: windowed aggregation under a
   * watermark, and watermarked dedup — driven by file sources with
@@ -875,21 +876,25 @@ class StreamSpec extends SparkSpec {
   test("stageChunks stages one file per chunk and fails on chunk values outside [from, n)") {
     def frame(chunk: org.apache.spark.sql.Column) =
       spark.range(0, 30).select(col("id").as("event_id"), chunk.as("chunk"))
+    def files(dir: String) =
+      new java.io.File(dir).list().filter(_.endsWith(".parquet")).sorted.toSeq
+    def mtime(dir: String, name: String) = new java.io.File(dir, name).lastModified()
+    val baseMs = 1700000000000L
     val ok = Files.createTempDirectory("graft_stage_ok").toString
-    StreamQueries.stageChunks(spark, frame(col("id") % 3), ok, n = 3, baseMs = 0L)
-    val staged = new java.io.File(ok).list().filter(_.endsWith(".parquet")).sorted.toSeq
+    StreamQueries.stageChunks(spark, frame(col("id") % 3), ok, baseMs, chunks = 0 until 3)
+    val staged = files(ok)
     assert(staged == Seq("chunk-0000.parquet", "chunk-0001.parquet", "chunk-0002.parquet"))
+    assert(staged.map(mtime(ok, _)) == (0 until 3).map(c => baseMs + c * 60000L))
     assert(spark.read.parquet(ok).count() == 30)
 
     val bad = frame(when(col("id") === 29, 5L).when(col("id") === 28, lit(null))
       .otherwise(col("id") % 3))
     val e = intercept[IllegalArgumentException](StreamQueries.stageChunks(spark, bad,
-      Files.createTempDirectory("graft_stage_bad").toString, n = 3, baseMs = 0L))
-    assert(e.getMessage.contains("5, __HIVE_DEFAULT_PARTITION__ fall outside [0, 3)"),
-      e.getMessage)
+      Files.createTempDirectory("graft_stage_bad").toString, baseMs, chunks = 0 until 3))
+    assert(e.getMessage.contains("5, NULL fall outside [0, 3)"), e.getMessage)
     val below = intercept[IllegalArgumentException](StreamQueries.stageChunks(spark,
       frame(col("id") % 3), Files.createTempDirectory("graft_stage_from").toString,
-      n = 3, baseMs = 0L, from = 1))
+      baseMs, chunks = 1 until 3))
     assert(below.getMessage.contains("values 0 fall outside [1, 3)"), below.getMessage)
 
     // an empty chunk (1 here) still stages one file, empty and of the
@@ -897,11 +902,97 @@ class StreamSpec extends SparkSpec {
     val evals = spark.sparkContext.longAccumulator("stage-evals")
     val counted = udf { (c: Long) => evals.add(1); c }
     val gap = Files.createTempDirectory("graft_stage_gap").toString
-    StreamQueries.stageChunks(spark, frame(counted(col("id") % 2 * 2)), gap, n = 3, baseMs = 0L)
-    assert(new java.io.File(gap).list().filter(_.endsWith(".parquet")).sorted.toSeq == staged)
+    StreamQueries.stageChunks(spark, frame(counted(col("id") % 2 * 2)), gap, baseMs,
+      chunks = 0 until 3)
+    assert(files(gap) == staged)
     val empty = spark.read.parquet(s"$gap/chunk-0001.parquet")
     assert(empty.count() == 0 && empty.columns.toSeq == Seq("event_id"))
     assert(spark.read.parquet(gap).count() == 30)
     assert(evals.value == 30L, s"frame evaluated ${evals.value} times for 30 rows")
+
+    // extras: each position in [0, Chunks] present stages ONE `extra-c`
+    // file half a chunk before base chunk c, absent positions stage
+    // nothing, and the frame is evaluated once
+    val extrasEvals = spark.sparkContext.longAccumulator("stage-extras-evals")
+    val countedExtras = udf { (c: Long) => extrasEvals.add(1); c }
+    val extras = Files.createTempDirectory("graft_stage_extras").toString
+    StreamQueries.stageChunks(spark, frame(countedExtras(col("id") % 2 * 4)), extras,
+      baseMs, chunks = 0 to 4, extras = true)
+    assert(files(extras) == Seq("extra-0000.parquet", "extra-0004.parquet"))
+    assert(files(extras).map(mtime(extras, _)) == Seq(baseMs - 30000L, baseMs + 210000L))
+    assert(spark.read.parquet(extras).count() == 30)
+    assert(extrasEvals.value == 30L,
+      s"extras frame evaluated ${extrasEvals.value} times for 30 rows")
+    // a NULL or out-of-range extras position fails naming the value
+    val nullPos = intercept[IllegalArgumentException](StreamQueries.stageChunks(spark,
+      frame(when(col("id") === 7, lit(null)).otherwise(lit(4L))),
+      Files.createTempDirectory("graft_stage_extras_null").toString, baseMs,
+      chunks = 0 to 4, extras = true))
+    assert(nullPos.getMessage.contains("values NULL fall outside [0, 4]"), nullPos.getMessage)
+    val outPos = intercept[IllegalArgumentException](StreamQueries.stageChunks(spark,
+      frame(when(col("id") === 7, lit(5L)).when(col("id") === 8, lit(-1L))
+        .otherwise(lit(0L))),
+      Files.createTempDirectory("graft_stage_extras_out").toString, baseMs,
+      chunks = 0 to 4, extras = true))
+    assert(outPos.getMessage.contains("values -1, 5 fall outside [0, 4]"), outPos.getMessage)
+  }
+
+  test("hardlinked staged files: queries sharing cache keys leave the cached bytes, lengths and mtimes unchanged and link the same inodes") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import java.nio.file.{Path, Paths}
+    def listed(dir: Path): Seq[Path] = {
+      val it = Files.list(dir)
+      try it.iterator().asScala.filterNot(_.getFileName.toString.startsWith(".")).toList
+      finally it.close()
+    }
+    def inode(p: Path): AnyRef = Files.getAttribute(p, "unix:ino")
+    // the running query's staging files, name → inode, captured as its
+    // stream starts: onQueryStarted runs synchronously inside start(),
+    // after the links and before the run's temp-dir cleanup
+    val linked = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, AnyRef]]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = {
+        val runs = listed(graft.Scratch.base)
+          .filter(d => d.getFileName.toString.startsWith("graft-stream") &&
+            Files.isDirectory(d.resolve("staging")))
+        if (runs.nonEmpty) {
+          val newest = runs.maxBy(d => Files.getLastModifiedTime(d).toMillis)
+          linked.add(listed(newest.resolve("staging"))
+            .map(f => f.getFileName.toString -> inode(f)).toMap)
+        }
+      }
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    // the cached files of the keys both queries share
+    def cachedFiles: Seq[Path] = Seq("events", "events_sentinel").flatMap(k =>
+      listed(Paths.get(StreamQueries.stagedCache.get((Sf, k)).dir)))
+    def snapshot: Map[String, (Long, Long, Long, AnyRef)] = cachedFiles.map { f =>
+      val crc = new java.util.zip.CRC32()
+      crc.update(Files.readAllBytes(f))
+      f.getFileName.toString ->
+        (crc.getValue, Files.size(f), Files.getLastModifiedTime(f).toMillis, inode(f))
+    }.toMap
+    def runAndCheck(name: String): Map[String, (Long, Long, Long, AnyRef)] = {
+      linked.clear()
+      graft.SparkEntry.queries(name)(spark, Sf)
+      val snap = snapshot
+      assert(snap.keySet == Set("chunk-0000.parquet", "chunk-0001.parquet",
+        "chunk-0002.parquet", "chunk-0003.parquet", "extra-0004.parquet"), snap.keySet)
+      // the run's cleanup unlinked its copies and touched nothing else
+      cachedFiles.foreach(f =>
+        assert(Files.getAttribute(f, "unix:nlink") == 1, s"$f still linked after $name"))
+      assert(linked.size == 1, s"$name: expected one stream start, saw ${linked.size}")
+      assert(linked.peek() == snap.map { case (n, v) => n -> v._4 },
+        s"$name linked other inodes than the cached files: ${linked.peek()} vs $snap")
+      snap
+    }
+    spark.streams.addListener(listener)
+    try {
+      val first = runAndCheck("stream_hopping_volume")
+      val second = runAndCheck("stream_sessionize")
+      assert(second == first, "a run changed a cached staged file")
+    } finally spark.streams.removeListener(listener)
   }
 }
