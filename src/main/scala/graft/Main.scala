@@ -39,14 +39,30 @@ object Main {
         "(parquet | orc | json | postgres | jdbc)")
     }
 
+  /** The live RPC config both ingest verbs fetch with: present when
+    * `SOLANA_RPC_URL` is set, absent (synthetic blocks) otherwise. */
+  private def rpcConfigFor(env: Map[String, String]): Option[sources.RpcConfig] =
+    if (env.contains("SOLANA_RPC_URL")) Some(sources.RpcConfig.fromEnv(env))
+    else None
+
   /** The backfill verb's block source: live RPC when `SOLANA_RPC_URL`
-    * is set (the presence rule `incremental-blocks` uses), the
-    * deterministic synthetic block otherwise. */
+    * is set, the deterministic synthetic block otherwise. */
   private[graft] def fetcherFor(
       env: Map[String, String]): ingest.Backfill.BlockFetcher =
-    if (env.contains("SOLANA_RPC_URL"))
-      sources.RpcClient.fetcher(sources.RpcConfig.fromEnv(env))
-    else ingest.Backfill.syntheticBlock
+    rpcConfigFor(env).fold[ingest.Backfill.BlockFetcher](
+      ingest.Backfill.syntheticBlock)(sources.RpcClient.fetcher)
+
+  /** The incremental-blocks verb's source options, the stream twin of
+    * [[fetcherFor]]: `SPARK_GRAFT_CPUS` partition readers, at most
+    * `ETL_BATCH_SIZE` slots per micro-batch (one micro-batch is one
+    * idempotent sink commit, so the reference's events-per-flush cap,
+    * incremental.rs:68, becomes the per-trigger slot admission), and
+    * the RPC config backfill fetches with. */
+  private[graft] def blockStreamOptions(
+      env: Map[String, String]): Map[String, String] =
+    Map("workers" -> env.getOrElse("SPARK_GRAFT_CPUS", "4"),
+      "maxSlotsPerTrigger" -> EtlConfig(env).batchSize.toString) ++
+      rpcConfigFor(env).fold(Map.empty[String, String])(sources.RpcConfig.toOptions)
 
   /** The analytics verb's fact, read through the sink the ingest verbs
     * wrote. An absent fact fails naming it: a refresh over nothing
@@ -110,26 +126,21 @@ object Main {
     // offsets (no drop-directory needed) — parse + idempotent sink are
     // the same foreachBatch tail as the file path. With SOLANA_RPC_URL
     // set this is the fully LIVE path: tipSlot `auto` probes getSlot
-    // (the reference's chain-tip read, incremental.rs:30-ish), and the
-    // endpoint rides into every partition reader.
+    // (the reference's chain-tip read, incremental.rs:30-ish), and
+    // every partition reader fetches with backfill's RPC config.
     case "incremental-blocks" :: start :: tip :: sink :: ckpt :: Nil =>
       val startL = num("incremental-blocks", "startSlot", start)(_.toLong)
-      val endpoint = sys.env.get("SOLANA_RPC_URL")
-      val tipL = tipSlotArg(tip, endpoint.nonEmpty,
+      val tipL = tipSlotArg(tip, sys.env.contains("SOLANA_RPC_URL"),
         () => new sources.RpcClient(sources.RpcConfig.fromEnv()).getSlot()) match {
         case Right(v) => v
         case Left(err) => usageExit(s"incremental-blocks: $err")
       }
       val target = sinkFor(sink, sys.env)
+      val options = blockStreamOptions(sys.env)
       val spark = session()
-      val raw0 = spark.readStream.format("graft.sources.BlockSource")
+      val raw = spark.readStream.format("graft.sources.BlockSource")
         .option("startSlot", startL).option("tipSlot", tipL)
-        .option("workers", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
-        // one micro-batch = one idempotent sink commit, so the
-        // reference's events-per-flush cap (ETL_BATCH_SIZE,
-        // incremental.rs:68) becomes the per-trigger slot admission
-        .option("maxSlotsPerTrigger", EtlConfig().batchSize)
-      val raw = endpoint.fold(raw0)(u => raw0.option("endpoint", u)).load()
+        .options(options).load()
       ingest.Incremental.startFromRaw(raw, target, ckpt,
         org.apache.spark.sql.streaming.Trigger.AvailableNow()).awaitTermination()
       println(s"incremental-blocks complete: ${sinkCount(spark, target)} events")

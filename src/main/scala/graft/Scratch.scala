@@ -32,4 +32,18 @@ private[graft] object Scratch {
       if (shmOk) shm else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
     }
   }
+
+  /** This JVM's own directory under [[base]], made on first use and
+    * deleted by one shutdown hook: the home of everything that must
+    * outlive a query but not the JVM (reliable-pin checkpoints, the
+    * lake SQL warehouse, the streaming results and staged-file cache).
+    * Being under [[base]] keeps it on the per-run temp dirs' device,
+    * so staged files hardlink into a run. */
+  lazy val jvmDir: java.nio.file.Path = {
+    val p = java.nio.file.Files.createTempDirectory(base, "graft-jvm")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      org.apache.hadoop.fs.FileUtil.fullyDelete(p.toFile); ()
+    }))
+    p
+  }
 }

@@ -20,9 +20,9 @@ import org.apache.spark.sql.DataFrame
   * survives executor loss) by setting either the session conf
   * `spark.graft.reliablePins = true` or the env var
   * `GRAFT_RELIABLE_PINS=1`; if no checkpoint dir is configured yet,
-  * one is created under the shared scratch ([[graft.Scratch]]) — a
-  * deployment points `setCheckpointDir` at durable shared storage
-  * instead. Default stays executor-local: the declared bench surface
+  * one is created in this JVM's scratch dir ([[graft.Scratch.jvmDir]],
+  * deleted at exit) — a deployment points `setCheckpointDir` at
+  * durable shared storage instead. Default stays executor-local: the declared bench surface
   * is single-node, and reliable checkpoints pay a write+read of the
   * pinned frame per pin.
   */
@@ -42,8 +42,7 @@ private[graft] object Pins {
       val sc = df.sparkSession.sparkContext
       if (sc.getCheckpointDir.isEmpty)
         sc.setCheckpointDir(
-          java.nio.file.Files.createTempDirectory(graft.Scratch.base,
-            "graft-reliable-pins").toString)
+          graft.Scratch.jvmDir.resolve("reliable-pins").toString)
       df.checkpoint(eager = false)
     }
 }

@@ -112,7 +112,7 @@ object LakeQueries extends QueryModule {
     "lake_sql_merge" -> Q(
       (s, dir) => {
         val wh = graft.plans.GraftCatalog.ensure(s,
-          s"${graft.Scratch.base}/graft_lake_sql_wh_${ProcessHandle.current().pid()}")
+          graft.Scratch.jvmDir.resolve("lake_sql_wh").toString)
         val tableRoot = s"$wh/sqlq/orders_merge"
         val fs = new org.apache.hadoop.fs.Path(tableRoot)
           .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -158,7 +158,7 @@ object LakeQueries extends QueryModule {
     "lake_sql_time_travel" -> Q(
       (s, dir) => {
         val wh = graft.plans.GraftCatalog.ensure(s,
-          s"${graft.Scratch.base}/graft_lake_sql_wh_${ProcessHandle.current().pid()}")
+          graft.Scratch.jvmDir.resolve("lake_sql_wh").toString)
         val tableRoot = s"$wh/sqlq/orders_tt"
         val fs = new org.apache.hadoop.fs.Path(tableRoot)
           .getFileSystem(s.sparkContext.hadoopConfiguration)

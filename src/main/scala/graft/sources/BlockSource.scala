@@ -8,29 +8,32 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.sources.{Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, EqualTo}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 block source — S1's cluster-scale form (SURVEY.md §2.1:
-  * "at scale a custom DataSource V2 `TableProvider` wrapping the RPC").
+/** DataSource V2 streaming block source — S1's cluster-scale form
+  * (SURVEY.md §2.1: "at scale a custom DataSource V2 `TableProvider`
+  * wrapping the RPC").
   *
-  * The slot range is the partitioning axis: `workers` input partitions
-  * each own a contiguous slot sub-range (the reference's chunk×semaphore
-  * scheme, backfill.rs:22-60, expressed as Spark partition planning), and
-  * slot predicates push INTO the source so `WHERE slot >= X` narrows the
-  * fetch range instead of filtering post-fetch — the difference between
-  * fetching and skipping a million blocks.
+  * Slots are the streaming offsets, and each micro-batch's slot range
+  * is the partitioning axis: `workers` input partitions each own a
+  * contiguous slot sub-range (the reference's chunk×semaphore scheme,
+  * backfill.rs:22-60, expressed as Spark partition planning).
   *
-  * The per-partition reader calls the block fetcher (here the
-  * deterministic synthetic RPC stand-in; a live impl constructs its HTTP
-  * client per partition, giving the reference's connection-per-worker).
+  * The per-partition reader fetches through the same
+  * [[graft.ingest.Backfill.BlockFetcher]] seam backfill uses: with an
+  * `endpoint` option, [[RpcClient.fetcher]] over the options'
+  * [[RpcConfig]] (one client per partition, so its pacing and retry are
+  * per partition, the reference's connection-per-worker); without one,
+  * the deterministic synthetic stand-in.
   *
   * Usage:
   * {{{
-  *   spark.read.format("graft.sources.BlockSource")
-  *     .option("startSlot", 1).option("endSlot", 1001).option("workers", 8)
+  *   spark.readStream.format("graft.sources.BlockSource")
+  *     .option("startSlot", 1).option("tipSlot", 1001)
+  *     .option("workers", 8).option("maxSlotsPerTrigger", 250)
+  *     .options(RpcConfig.toOptions(cfg))  // omit for synthetic blocks
   *     .load()                       // → (slot BIGINT, block_json STRING)
   * }}}
   */
@@ -52,182 +55,31 @@ private[sources] class BlockTable extends Table with SupportsRead {
   override def name(): String = "graft_blocks"
   override def schema(): StructType = Schemas.rawBlockSchema
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new BlockScanBuilder(
+    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val scan = new BlockScan(
       options.getLong("startSlot", 0L),
-      options.getLong("endSlot", 0L),
       options.getInt("workers", 4),
       options.getLong("tipSlot", 0L),
       options.getLong("maxSlotsPerTrigger", 1000L),
-      FetchPolicy(
-        options.getDouble("ratePerSec", 0.0),
-        options.getInt("maxRetries", 3),
-        options.getLong("retryBaseMs", 10L),
-        Option(options.get("endpoint"))))
-}
-
-/** Per-partition fetch pacing + retry config (the reference's
-  * rate-limited RPC client, rpc.rs:48-52: req/s ceiling; rpc.rs:61-108:
-  * bounded exponential backoff). `ratePerSec` ≤ 0 disables pacing —
-  * note the ceiling is PER PARTITION, so the cluster-wide request rate
-  * is workers × ratePerSec, exactly the reference's
-  * per-worker-connection scheme. */
-/** `endpoint`: a JSON-RPC URL switches the reader from the synthetic
-  * stand-in to the live [[RpcClient]] — same pacing/retry envelope,
-  * real getBlock. Absent ⇒ deterministic synthetic blocks (tests, CI).
-  */
-private[sources] case class FetchPolicy(
-    ratePerSec: Double, maxRetries: Int, retryBaseMs: Long,
-    endpoint: Option[String] = None) {
-  /** The single-attempt fetch this policy's reader wraps with ITS OWN
-    * limiter+retry (one permit per attempt, rpc.rs:48-108). The live
-    * client therefore runs with retries/pacing DISABLED internally —
-    * double-wrapping would square the backoff schedule and halve the
-    * effective rate. Lazy + one client per reader = the reference's
-    * connection-per-worker (backfill.rs:46-48). */
-  def rawFetcher(): Long => Option[String] = endpoint match {
-    case None => Backfill.syntheticBlock
-    case Some(url) => LiveClients.forEndpoint(url).getBlock
+      RpcConfig.fromOptions(options))
+    () => scan
   }
 }
 
-/** Executor-local cache of live RPC clients, one per endpoint URL.
-  * Building a client per PartitionReader — per partition per
-  * micro-batch — also builds a fresh JDK HttpClient each time, whose
-  * selector thread and socket pool are reclaimed only by GC; under a
-  * long-running ProcessingTime stream that is a steady leak of OS
-  * resources. One client per (executor JVM × endpoint) is the stable
-  * form; connection reuse across micro-batches is also what a paced
-  * long-lived poller wants from the transport.
-  *
-  * Safe to SHARE across concurrent partition readers only because the
-  * cached clients are built with internal pacing and retries DISABLED
-  * (the reader's own per-partition RateLimiter + FetchRetry wrap every
-  * attempt): with `ratePerSec = 0` the client's internal limiter is a
-  * no-op touching no state, and HttpClient/ObjectMapper are
-  * thread-safe. Do not cache a client with a live internal limiter —
-  * RateLimiter is single-threaded by contract. */
-private[sources] object LiveClients {
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, RpcClient]()
-  def forEndpoint(url: String): RpcClient =
-    cache.computeIfAbsent(url, u =>
-      new RpcClient(RpcConfig(url = u, maxRetries = 0, ratePerSec = 0.0)))
-}
-
-/** Nanotime token bucket: each `acquire` claims the next free slot on a
-  * fixed `1/ratePerSec` cadence and parks until it arrives. Single-
-  * threaded per partition reader (DSv2 contract), so no locking. */
-private[sources] final class RateLimiter(ratePerSec: Double,
-    nanoTime: () => Long = () => System.nanoTime(),
-    park: Long => Unit = java.util.concurrent.locks.LockSupport.parkNanos) {
-  private val intervalNanos: Long =
-    if (ratePerSec <= 0) 0L else (1e9 / ratePerSec).toLong
-  private var nextFree: Long = Long.MinValue
-  /** Blocks until a permit is free; returns the nanos waited (observable
-    * for tests). Parks in a loop — parkNanos may return spuriously, and
-    * the pacing contract is at-LEAST 1/rate between permits. */
-  def acquire(): Long = {
-    if (intervalNanos == 0L) return 0L
-    val now = nanoTime()
-    val deadline = if (nextFree == Long.MinValue) now else nextFree
-    val wait = math.max(0L, deadline - now)
-    nextFree = math.max(now, deadline) + intervalNanos
-    var t = now
-    while (t < deadline) { park(deadline - t); t = nanoTime() }
-    wait
-  }
-}
-
-/** Bounded exponential backoff: attempt n sleeps base·2ⁿ ms, up to
-  * `maxRetries` re-attempts, then rethrows (rpc.rs:61-108 semantics —
-  * transient RPC failures are retried, persistent ones surface). Only
-  * NonFatal failures retry: task interrupts (Spark cancelling a stage)
-  * and VM errors must surface immediately, not sit out a backoff
-  * schedule. */
-private[sources] object FetchRetry {
-  /** Retryability default: any NonFatal — EXCEPT an [[RpcError]] that
-    * declares itself permanent (bad params, method not found;
-    * rpc.rs:85-104 retries only 429/5xx). Retrying a deterministic
-    * failure burns `maxRetries` rate-limiter permits to reach the same
-    * exception. */
-  def defaultRetryable(e: Throwable): Boolean = e match {
-    case r: RpcError => r.retryable
-    case e => scala.util.control.NonFatal(e)
-  }
-
-  def withRetry[T](maxRetries: Int, baseDelayMs: Long,
-      sleep: Long => Unit = Thread.sleep,
-      retryOn: Throwable => Boolean = defaultRetryable)(f: => T): T = {
-    var attempt = 0
-    while (true) {
-      try return f
-      catch {
-        case e: Throwable if retryOn(e) && attempt < maxRetries =>
-          sleep(baseDelayMs << attempt)
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-}
-
-private[sources] class BlockScanBuilder(var start: Long, var end: Long, workers: Int,
-    tip: Long, maxSlotsPerTrigger: Long,
-    policy: FetchPolicy = FetchPolicy(0.0, 3, 10L))
-    extends ScanBuilder with SupportsPushDownFilters {
-
-  private var pushed: Array[Filter] = Array.empty
-
-  /** Slot range predicates narrow [start, end) at the source. */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (accepted, rejected) = filters.partition {
-      case GreaterThanOrEqual("slot", v: Long) => start = math.max(start, v); true
-      case GreaterThan("slot", v: Long) => start = math.max(start, v + 1); true
-      case LessThan("slot", v: Long) => end = math.min(end, v); true
-      case LessThanOrEqual("slot", v: Long) => end = math.min(end, v + 1); true
-      case EqualTo("slot", v: Long) => start = math.max(start, v); end = math.min(end, v + 1); true
-      case _ => false
-    }
-    pushed = accepted
-    rejected
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def build(): Scan =
-    new BlockScan(start, end, workers, tip, maxSlotsPerTrigger, policy)
-}
-
-private[sources] class BlockScan(start: Long, end: Long, workers: Int,
-    tip: Long, maxSlotsPerTrigger: Long,
-    policy: FetchPolicy = FetchPolicy(0.0, 3, 10L))
-    extends Scan with Batch {
+private[sources] class BlockScan(start: Long, workers: Int, tip: Long,
+    maxSlotsPerTrigger: Long, rpc: Option[RpcConfig]) extends Scan {
   override def readSchema(): StructType = Schemas.rawBlockSchema
-  override def toBatch: Batch = this
   override def description(): String =
-    s"graft_blocks slots=[$start,$end) workers=$workers"
+    s"graft_blocks slots=[$start,$tip) workers=$workers"
 
-  /** Streaming form: OFFSETS ARE SLOTS (SURVEY §2.9 ST2 — the
-    * `last_confirmed_slot` checkpoint row becomes the engine-managed
-    * streaming offset). `tipSlot` plays the chain tip (S2); a live
-    * source would call get_slot() here. `maxSlotsPerTrigger` is the
-    * reference's batch-size throttle (S7/ST5) as a source option. */
+  /** OFFSETS ARE SLOTS (SURVEY §2.9 ST2 — the `last_confirmed_slot`
+    * checkpoint row becomes the engine-managed streaming offset).
+    * `tipSlot` plays the chain tip (S2); a live source would call
+    * get_slot() here. `maxSlotsPerTrigger` is the reference's
+    * batch-size throttle (S7/ST5) as a source option. */
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new BlockMicroBatchStream(start, tip, workers, maxSlotsPerTrigger, policy)
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val total = math.max(0L, end - start)
-    if (total == 0) return Array.empty
-    val n = math.min(workers.toLong, total).toInt
-    val step = (total + n - 1) / n
-    (0 until n).map { i =>
-      val lo = start + i * step
-      SlotRangePartition(lo, math.min(lo + step, end)): InputPartition
-    }.toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new BlockReaderFactory(policy)
+    new BlockMicroBatchStream(start, tip, workers, maxSlotsPerTrigger, rpc)
 }
 
 private[sources] case class SlotRangePartition(lo: Long, hi: Long) extends InputPartition
@@ -238,7 +90,7 @@ private[sources] case class SlotOffset(slot: Long) extends Offset {
 }
 
 private[sources] class BlockMicroBatchStream(start: Long, tip: Long, workers: Int,
-    maxSlotsPerTrigger: Long, policy: FetchPolicy = FetchPolicy(0.0, 3, 10L))
+    maxSlotsPerTrigger: Long, rpc: Option[RpcConfig])
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   override def initialOffset(): Offset = SlotOffset(start)
@@ -275,37 +127,37 @@ private[sources] class BlockMicroBatchStream(start: Long, tip: Long, workers: In
     }
   }
 
+  /** The micro-batch planner: [lo, hi) split into at most `workers`
+    * contiguous slot ranges of equal size (the last one shorter). */
   override def planInputPartitions(startOff: Offset, endOff: Offset): Array[InputPartition] = {
     val lo = startOff.asInstanceOf[SlotOffset].slot
     val hi = endOff.asInstanceOf[SlotOffset].slot
-    new BlockScan(lo, hi, workers, tip, maxSlotsPerTrigger, policy).planInputPartitions()
+    val total = math.max(0L, hi - lo)
+    if (total == 0) return Array.empty
+    val n = math.min(workers.toLong, total).toInt
+    val step = (total + n - 1) / n
+    (0 until n).map { i =>
+      val from = lo + i * step
+      SlotRangePartition(from, math.min(from + step, hi)): InputPartition
+    }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new BlockReaderFactory(policy)
+    new BlockReaderFactory(rpc)
   override def commit(end: Offset): Unit = ()  // checkpoint log owns durability
   override def stop(): Unit = ()
 }
 
-private[sources] class BlockReaderFactory(policy: FetchPolicy = FetchPolicy(0.0, 3, 10L))
+private[sources] class BlockReaderFactory(rpc: Option[RpcConfig])
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val SlotRangePartition(lo, hi) = p.asInstanceOf[SlotRangePartition]
+    // a fetcher per reader, as backfill's is per task: the live client
+    // (built on first fetch) paces and retries for this partition only
+    val fetch: Backfill.BlockFetcher =
+      rpc.fold[Backfill.BlockFetcher](Backfill.syntheticBlock)(RpcClient.fetcher)
     new PartitionReader[InternalRow] {
-      // the rate-limited RPC client, one per partition
-      // (backfill.rs:46-48 connection-per-worker): EVERY attempt —
-      // including each retry — takes a token-bucket permit before
-      // fetching, so the configured req/s ceiling holds even while the
-      // endpoint is failing (retries must not multiply the rate,
-      // rpc.rs:48-108)
-      private val limiter = new RateLimiter(policy.ratePerSec)
-      private val fetch = policy.rawFetcher()
-      private val slots = Iterator.range(lo, hi).flatMap { s =>
-        FetchRetry.withRetry(policy.maxRetries, policy.retryBaseMs) {
-          limiter.acquire()
-          fetch(s)
-        }.map(j => (s, j))
-      }
+      private val slots = Iterator.range(lo, hi).flatMap(s => fetch(s).map(j => (s, j)))
       private var current: (Long, String) = _
       override def next(): Boolean =
         if (slots.hasNext) { current = slots.next(); true } else false

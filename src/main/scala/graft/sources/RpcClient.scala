@@ -5,6 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Live JSON-RPC source config — the reference's `AlchemyConfig`
   * (/root/reference/src/config.rs:13-18,41-52): same env names, same
@@ -37,6 +38,27 @@ object RpcConfig {
     // throttled — must not reach the live client as "hammer freely"
     ratePerSec = math.max(1.0,
       env.get("ALCHEMY_RATE_LIMIT").flatMap(_.toDoubleOption).getOrElse(50.0)))
+
+  /** The block source's RPC options: `endpoint` plus one option per
+    * remaining field, under the field's name. */
+  def toOptions(c: RpcConfig): Map[String, String] = Map(
+    "endpoint" -> c.url,
+    "maxRetries" -> c.maxRetries.toString,
+    "timeoutSeconds" -> c.timeoutSeconds.toString,
+    "ratePerSec" -> c.ratePerSec.toString,
+    "retryBaseMs" -> c.retryBaseMs.toString)
+
+  /** Reads [[toOptions]] back; an absent field takes the case class
+    * default. No `endpoint` ⇒ None: the source reads synthetic blocks. */
+  def fromOptions(o: CaseInsensitiveStringMap): Option[RpcConfig] =
+    Option(o.get("endpoint")).map { url =>
+      val d = RpcConfig(url)
+      RpcConfig(url,
+        maxRetries = o.getInt("maxRetries", d.maxRetries),
+        timeoutSeconds = o.getLong("timeoutSeconds", d.timeoutSeconds),
+        ratePerSec = o.getDouble("ratePerSec", d.ratePerSec),
+        retryBaseMs = o.getLong("retryBaseMs", d.retryBaseMs))
+    }
 }
 
 /** A JSON-RPC failure. `retryable` mirrors the reference's retry set —
@@ -51,8 +73,10 @@ final case class RpcError(code: Long, message: String)
 
 /** Rate-limited, retrying Solana JSON-RPC client
   * (/root/reference/src/rpc.rs:40-137) on `java.net.http` — the live
-  * implementation of the [[graft.ingest.Backfill.BlockFetcher]] seam
-  * and the DSv2 [[FetchPolicy]] endpoint.
+  * implementation of the [[graft.ingest.Backfill.BlockFetcher]] seam,
+  * which backfill and the DSv2 block source's `endpoint` option both
+  * fetch through. `call` is the engine's one retry loop and this
+  * client its one [[RateLimiter]].
   *
   * Concurrency model: ONE client per fetch partition (the reference's
   * connection-per-worker, backfill.rs:46-48), so `ratePerSec` is a
@@ -159,5 +183,29 @@ object RpcClient {
       @transient private lazy val client = new RpcClient(cfg)
       def apply(slot: Long): Option[String] = client.getBlock(slot)
     }
+  }
+}
+
+/** Nanotime token bucket: each `acquire` claims the next free slot on a
+  * fixed `1/ratePerSec` cadence and parks until it arrives. Single-
+  * threaded: one client per fetch partition, so no locking. */
+private[sources] final class RateLimiter(ratePerSec: Double,
+    nanoTime: () => Long = () => System.nanoTime(),
+    park: Long => Unit = java.util.concurrent.locks.LockSupport.parkNanos) {
+  private val intervalNanos: Long =
+    if (ratePerSec <= 0) 0L else (1e9 / ratePerSec).toLong
+  private var nextFree: Long = Long.MinValue
+  /** Blocks until a permit is free; returns the nanos waited (observable
+    * for tests). Parks in a loop — parkNanos may return spuriously, and
+    * the pacing contract is at-LEAST 1/rate between permits. */
+  def acquire(): Long = {
+    if (intervalNanos == 0L) return 0L
+    val now = nanoTime()
+    val deadline = if (nextFree == Long.MinValue) now else nextFree
+    val wait = math.max(0L, deadline - now)
+    nextFree = math.max(now, deadline) + intervalNanos
+    var t = now
+    while (t < deadline) { park(deadline - t); t = nanoTime() }
+    wait
   }
 }

@@ -66,15 +66,9 @@ object StreamQueries extends QueryModule {
     * staged-corpus cache. The per-run temp dir (staging files,
     * checkpoints, table roots) is deleted as each query finishes, but
     * the query's RESULT parquet must outlive that cleanup — the
-    * returned DataFrame reads it lazily — so results live here and are
-    * reclaimed once, at JVM exit. */
-  private lazy val resultsRoot: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory(scratchBase, "graft-stream-results")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      org.apache.hadoop.fs.FileUtil.fullyDelete(p.toFile); ()
-    }))
-    p
-  }
+    * returned DataFrame reads it lazily — so results live in
+    * [[graft.Scratch.jvmDir]] and are reclaimed once, at JVM exit. */
+  private lazy val resultsRoot: java.nio.file.Path = graft.Scratch.jvmDir
 
   /** Build the staged chunk files + checkpoint + table root under one
     * temp dir, run `body`, land its bounded result as parquet under

@@ -1,42 +1,22 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.ingest.{Backfill, Parse}
-import org.apache.spark.sql.functions._
+import graft.ingest.Backfill
 
 class BlockSourceSpec extends SparkSpec {
 
-  private def blocks(start: Long, end: Long, workers: Int = 4) =
-    spark.read.format("graft.sources.BlockSource")
-      .option("startSlot", start).option("endSlot", end)
-      .option("workers", workers).load()
-
   test("reads the slot range with workers-way partitioning") {
-    val df = blocks(1, 101, workers = 4)
-    assert(df.rdd.getNumPartitions == 4)
-    // every 97th slot missing by design (only slot 97 in 1..100)
-    assert(df.count() == 99L)
-    assert(df.columns.toSeq == Seq("slot", "block_json"))
-  }
-
-  test("slot predicates push into the source (fetch-range narrowing)") {
-    val df = blocks(1, 1000001, workers = 4).filter(col("slot") >= 999990L)
-    // if the filter did NOT push down, this would fetch a million blocks;
-    // pushed down, it reads ~11 — assert on both the plan and the speed
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("slots=[999990,1000001)"), plan)
-    val t0 = System.nanoTime()
-    assert(df.count() > 0)
-    assert((System.nanoTime() - t0) / 1e9 < 10.0, "pushdown did not narrow the fetch")
-  }
-
-  test("DSv2 source feeds the parse pipeline identically to fetchRange") {
-    val viaSource = Parse.parse(blocks(1, 51))
-    val viaRange = Parse.parse(Backfill.fetchRange(spark, 1, 51, workers = 4))
-    assert(viaSource.count() == viaRange.count())
-    val a = viaSource.select("event_id").collect().map(_.getString(0)).sorted
-    val b = viaRange.select("event_id").collect().map(_.getString(0)).sorted
-    assert(a.sameElements(b))
+    // plan only: the micro-batch planner splits [1, 101) into 4
+    // contiguous ranges that cover it exactly
+    val stream = new BlockMicroBatchStream(1L, 101L, 4, 1000L, None)
+    val parts = stream.planInputPartitions(SlotOffset(1L), SlotOffset(101L))
+      .map(_.asInstanceOf[SlotRangePartition]).toSeq
+    assert(parts == Seq(SlotRangePartition(1, 26), SlotRangePartition(26, 51),
+      SlotRangePartition(51, 76), SlotRangePartition(76, 101)))
+    // a range narrower than `workers` plans one partition per slot, an
+    // empty one none
+    assert(stream.planInputPartitions(SlotOffset(5L), SlotOffset(7L)).length == 2)
+    assert(stream.planInputPartitions(SlotOffset(9L), SlotOffset(9L)).isEmpty)
   }
 
   test("RateLimiter enforces the 1/rate cadence between fetches") {
@@ -56,35 +36,52 @@ class BlockSourceSpec extends SparkSpec {
     assert((1 to 5).map(_ => off.acquire()).forall(_ == 0L))
   }
 
-  test("FetchRetry: transient failures back off exponentially, then succeed") {
-    val sleeps = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var calls = 0
-    val out = FetchRetry.withRetry(maxRetries = 3, baseDelayMs = 10, sleeps += _) {
-      calls += 1
-      if (calls <= 2) throw new RuntimeException("transient RPC error")
-      "block"
-    }
-    assert(out == "block" && calls == 3)
-    assert(sleeps.toSeq == Seq(10L, 20L)) // base·2ⁿ
-    // persistent failure: retries exhausted → the error surfaces
-    val sleeps2 = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val e = intercept[RuntimeException] {
-      FetchRetry.withRetry(maxRetries = 2, baseDelayMs = 5, sleeps2 += _) {
-        throw new RuntimeException("down")
-      }
-    }
-    assert(e.getMessage == "down")
-    assert(sleeps2.toSeq == Seq(5L, 10L))
-  }
-
   test("rate-limited read returns identical rows and actually paces") {
-    // 1000 req/s over 99 slots on 1 worker → ≥ ~98ms of enforced pacing
-    val limited = spark.read.format("graft.sources.BlockSource")
-      .option("startSlot", 1).option("endSlot", 101)
-      .option("workers", 1).option("ratePerSec", 1000.0).load()
-    val t0 = System.nanoTime()
-    assert(limited.count() == 99L)
-    val elapsed = (System.nanoTime() - t0) / 1e9
-    assert(elapsed >= 0.09, s"pacing not enforced: ${elapsed}s for 99 fetches at 1000/s")
+    // 1 worker at 100 req/s over the stub: every HTTP attempt, a 429'd
+    // first attempt included, waits for its own 10 ms permit. (A loopback
+    // round trip can take ~2 ms, so at a 1 ms permit the limiter would
+    // never bind and this test could not tell pacing from none.)
+    val intervalMs = 10L
+    val slots = 1L until 41L
+    val throttled = slots.filter(_ % 4 == 0).toSet
+    val arrivals = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]
+    RpcStub.withStub {
+      case ("getBlock", Some(s), n) =>
+        arrivals.add(System.nanoTime())
+        if (n == 0 && throttled(s)) Left(429 -> "busy")
+        else Right(Backfill.syntheticBlock(s).getOrElse("null"))
+      case other => fail(s"unexpected: $other")
+    } { url =>
+      val raw = spark.readStream.format("graft.sources.BlockSource")
+        .option("startSlot", slots.head).option("tipSlot", slots.last + 1)
+        .option("workers", 1)
+        .options(RpcConfig.toOptions(RpcConfig(url, maxRetries = 1,
+          ratePerSec = 1000.0 / intervalMs, retryBaseMs = 0L)))
+        .load()
+      val t0 = System.nanoTime()
+      raw.writeStream.format("memory").queryName("paced_blocks")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+      val elapsedMs = (System.nanoTime() - t0) / 1e6
+      // the client re-serializes each block, so compare JSON trees
+      val json = new com.fasterxml.jackson.databind.ObjectMapper
+      val got = spark.table("paced_blocks").collect()
+        .map(r => r.getLong(0) -> json.readTree(r.getString(1))).sortBy(_._1).toSeq
+      assert(got == slots.flatMap(s =>
+        Backfill.syntheticBlock(s).map(b => s -> json.readTree(b))))
+      val attempts = slots.size + throttled.size
+      assert(arrivals.size == attempts)
+      assert(elapsedMs >= (attempts - 1) * intervalMs,
+        f"pacing not enforced: $elapsedMs%.0f ms for $attempts attempts")
+      // the same bound at the stub, where Spark's own overhead cannot
+      // pad it: from the 2nd arrival (the 1st pays connection set-up)
+      // to the last, one interval of slack for arrival jitter. Retries
+      // riding free would land one interval short per throttled slot.
+      val arr = arrivals.toArray.map(_.asInstanceOf[java.lang.Long].longValue).sorted
+      val spanMs = (arr.last - arr(1)) / 1e6
+      assert(spanMs >= (attempts - 3) * intervalMs,
+        f"attempts not paced one permit each: $spanMs%.0f ms between " +
+          s"${attempts - 1} arrivals at $intervalMs ms")
+    }
   }
 }

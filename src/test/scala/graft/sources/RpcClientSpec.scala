@@ -3,51 +3,18 @@ package graft.sources
 import java.net.InetSocketAddress
 import java.util.concurrent.atomic.AtomicInteger
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpServer
 import graft.SparkSpec
 import graft.ingest.Backfill
+import RpcStub.withStub
 
 /** Live JSON-RPC fetcher (rpc.rs:40-137 parity) against a local stub
   * server — no real network: the stub scripts 429/5xx/permanent-error/
   * null-result behaviors and counts attempts, proving the retry, pacing
   * and None-propagation contracts end-to-end THROUGH Spark (backfill
-  * and the DSv2 source), including fetcher-closure serialization to
+  * and the DSv2 stream), including fetcher-closure serialization to
   * executor tasks. */
 class RpcClientSpec extends SparkSpec {
-
-  /** One scripted stub per test: `script(method, slot, attempt)` returns
-    * either Left(httpStatus -> body) or Right(resultJson). Attempt
-    * numbers are PER SLOT for getBlock, global for getSlot. */
-  private def withStub[T](
-      script: (String, Option[Long], Int) => Either[(Int, String), String])(
-      body: String => T): T = {
-    // JDK HttpServer leaves Nagle on → ~40ms delayed-ACK stalls per
-    // loopback request (measured in ProfileRpcBackfill); irrelevant to
-    // correctness but it makes the Spark end-to-end tests crawl
-    System.setProperty("sun.net.httpserver.nodelay", "true")
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    val perKey = new java.util.concurrent.ConcurrentHashMap[String, AtomicInteger]
-    server.createContext("/", { (ex: HttpExchange) =>
-      val req = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
-      val method = """"method":"(\w+)"""".r.findFirstMatchIn(req).get.group(1)
-      val slot = """"params":\[(\d+)""".r.findFirstMatchIn(req).map(_.group(1).toLong)
-      val n = perKey.computeIfAbsent(s"$method:${slot.getOrElse(-1L)}",
-        _ => new AtomicInteger).getAndIncrement()
-      val (status, resp) = script(method, slot, n) match {
-        case Right(result) =>
-          (200, s"""{"jsonrpc":"2.0","id":1,"result":$result}""")
-        case Left((code, b)) => (code, b)
-      }
-      val bytes = resp.getBytes("UTF-8")
-      ex.getResponseHeaders.add("Content-Type", "application/json")
-      ex.sendResponseHeaders(status, bytes.length)
-      ex.getResponseBody.write(bytes)
-      ex.close()
-    })
-    server.start()
-    try body(s"http://127.0.0.1:${server.getAddress.getPort}/")
-    finally server.stop(0)
-  }
 
   private def cfg(url: String, retries: Int = 5) =
     RpcConfig(url, maxRetries = retries, ratePerSec = 0.0, retryBaseMs = 1L)
@@ -186,13 +153,24 @@ class RpcClientSpec extends SparkSpec {
     }
   }
 
+  // the verb tests' stub chain skips every third slot, so its rows
+  // differ from the synthetic blocks'
+  private val stubBlock: Backfill.BlockFetcher =
+    s => if (s % 3 == 0) None else Backfill.syntheticBlock(s)
+
+  // rows as sorted strings: a multiset compare (exceptAll over the
+  // deduplicated parse fails to bind in Spark's planner)
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** Slots [90, 110) of `fetcher`'s chain, parsed: what either ingest
+    * verb must land from it. */
+  private def parsed(fetcher: Backfill.BlockFetcher) = rows(graft.ingest.Parse.parse(
+    Backfill.fetchRange(spark, 90L, 110L, 4, fetcher)))
+
   test("backfill verb's fetcher: SOLANA_RPC_URL routes every slot through " +
       "the endpoint; unset, the result equals a synthetic backfill") {
     val requested = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-    // the stub's chain skips every third slot, so its rows differ from
-    // the synthetic blocks'
-    val stubBlock: Backfill.BlockFetcher =
-      s => if (s % 3 == 0) None else Backfill.syntheticBlock(s)
     withStub {
       case ("getBlock", Some(s), _) =>
         requested.add(s)
@@ -205,16 +183,47 @@ class RpcClientSpec extends SparkSpec {
           graft.Main.fetcherFor(env))
         spark.read.parquet(s"$base/$name").drop("block_date")
       }
-      // rows as sorted strings: a multiset compare (exceptAll over the
-      // deduplicated parse fails to bind in Spark's planner)
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(_.toString).sorted.toSeq
-      def parsed(fetcher: Backfill.BlockFetcher) = rows(graft.ingest.Parse.parse(
-        Backfill.fetchRange(spark, 90L, 110L, 4, fetcher)))
       val live = rows(backfill("live", Map("SOLANA_RPC_URL" -> url)))
       assert(requested.size == 20)
       assert(live.nonEmpty && live == parsed(stubBlock))
       val synthetic = rows(backfill("synthetic", Map.empty))
+      assert(requested.size == 20, "no endpoint configured, yet the stub was called")
+      assert(synthetic.size > live.size && synthetic == parsed(Backfill.syntheticBlock))
+    }
+  }
+
+  test("incremental-blocks verb's stream: SOLANA_RPC_URL and ALCHEMY_* reach " +
+      "the reader's RpcConfig; unset, the drain equals a synthetic one") {
+    val requested = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    withStub {
+      case ("getBlock", Some(s), _) =>
+        requested.add(s)
+        Right(stubBlock(s).getOrElse("null"))
+      case other => fail(s"unexpected: $other")
+    } { url =>
+      val env = Map("SOLANA_RPC_URL" -> url, "ALCHEMY_MAX_RETRIES" -> "2",
+        "ALCHEMY_TIMEOUT_SECONDS" -> "5", "ALCHEMY_RATE_LIMIT" -> "9")
+      // what BlockSource's scan builder reads from the verb's options
+      def readerConfig(env: Map[String, String]) = RpcConfig.fromOptions(
+        new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+          scala.jdk.CollectionConverters.MapHasAsJava(
+            graft.Main.blockStreamOptions(env)).asJava))
+      assert(readerConfig(env) == Some(RpcConfig(url, maxRetries = 2,
+        timeoutSeconds = 5L, ratePerSec = 9.0)))
+      assert(readerConfig(Map.empty).isEmpty)
+      val base = java.nio.file.Files.createTempDirectory("rpc_inc_verb").toString
+      def drain(name: String, env: Map[String, String]) = {
+        val raw = spark.readStream.format("graft.sources.BlockSource")
+          .option("startSlot", 90L).option("tipSlot", 110L)
+          .options(graft.Main.blockStreamOptions(env)).load()
+        graft.ingest.Incremental.startFromRaw(raw, s"$base/$name",
+          s"$base/$name-ckpt").awaitTermination()
+        rows(spark.read.parquet(s"$base/$name").drop("block_date"))
+      }
+      val live = drain("live", env)
+      assert(requested.size == 20)
+      assert(live.nonEmpty && live == parsed(stubBlock))
+      val synthetic = drain("synthetic", Map.empty)
       assert(requested.size == 20, "no endpoint configured, yet the stub was called")
       assert(synthetic.size > live.size && synthetic == parsed(Backfill.syntheticBlock))
     }
@@ -232,8 +241,7 @@ class RpcClientSpec extends SparkSpec {
       val raw = spark.readStream.format("graft.sources.BlockSource")
         .option("startSlot", 1L).option("tipSlot", 61L)
         .option("workers", 2).option("maxSlotsPerTrigger", 20L)
-        .option("endpoint", url)
-        .option("maxRetries", 3).option("retryBaseMs", 1L)
+        .options(RpcConfig.toOptions(cfg(url, retries = 3)))
         .load()
       val q = graft.ingest.Incremental.startFromRaw(raw, s"$base/sink", s"$base/ckpt")
       q.awaitTermination()
@@ -243,27 +251,6 @@ class RpcClientSpec extends SparkSpec {
       assert(got.count() == expect.count())
       assert(got.select("slot").distinct().count() ==
         (1L until 61L).count(_ % 97 != 0))
-    }
-  }
-
-  test("DSv2 endpoint option: batch read fetches via live RPC with per-attempt permits") {
-    withStub {
-      case ("getBlock", Some(s), 0) if s % 3 == 0 => Left(429 -> "busy")
-      case ("getBlock", Some(s), _) =>
-        Backfill.syntheticBlock(s).map(Right(_)).getOrElse(Right("null"))
-      case other => fail(s"unexpected: $other")
-    } { url =>
-      val df = spark.read.format("graft.sources.BlockSource")
-        .option("startSlot", 1L).option("endSlot", 21L)
-        .option("workers", 2)
-        .option("endpoint", url)
-        .option("maxRetries", 3).option("retryBaseMs", 1L)
-        .load()
-      val slots = df.select("slot").collect().map(_.getLong(0)).sorted
-      assert(slots.toSeq == (1L until 21L))
-      // payloads really came over HTTP (Jackson-normalized, still parseable)
-      val events = graft.ingest.Parse.parse(df)
-      assert(events.count() > 0)
     }
   }
 }
