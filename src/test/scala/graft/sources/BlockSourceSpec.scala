@@ -1,7 +1,8 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.ingest.Backfill
+import graft.ingest.{Backfill, Parse}
+import org.apache.spark.sql.streaming.Trigger
 
 class BlockSourceSpec extends SparkSpec {
 
@@ -17,6 +18,22 @@ class BlockSourceSpec extends SparkSpec {
     // empty one none
     assert(stream.planInputPartitions(SlotOffset(5L), SlotOffset(7L)).length == 2)
     assert(stream.planInputPartitions(SlotOffset(9L), SlotOffset(9L)).isEmpty)
+  }
+
+  test("DSv2 source feeds the parse pipeline identically to fetchRange") {
+    // drain [1, 51) through the micro-batch source, then parse it: the
+    // same events the batch fetchRange yields
+    spark.readStream.format("graft.sources.BlockSource")
+      .option("startSlot", 1).option("tipSlot", 51).option("workers", 4).load()
+      .writeStream.format("memory").queryName("dsv2_blocks")
+      .trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
+    val viaSource = Parse.parse(spark.table("dsv2_blocks"))
+    val viaRange = Parse.parse(Backfill.fetchRange(spark, 1, 51, workers = 4))
+    assert(viaSource.count() == viaRange.count())
+    val a = viaSource.select("event_id").collect().map(_.getString(0)).sorted
+    val b = viaRange.select("event_id").collect().map(_.getString(0)).sorted
+    assert(a.sameElements(b))
   }
 
   test("RateLimiter enforces the 1/rate cadence between fetches") {
@@ -60,7 +77,7 @@ class BlockSourceSpec extends SparkSpec {
         .load()
       val t0 = System.nanoTime()
       raw.writeStream.format("memory").queryName("paced_blocks")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start().awaitTermination()
       val elapsedMs = (System.nanoTime() - t0) / 1e6
       // the client re-serializes each block, so compare JSON trees
