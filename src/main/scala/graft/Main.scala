@@ -355,7 +355,8 @@ object Main {
     * exit). Single parser: delegates to [[EtlConfig.explicitLong]]. */
   private[graft] def triggerFor(argSec: Option[Long],
       env: Map[String, String]): org.apache.spark.sql.streaming.Trigger =
-    argSec.orElse(EtlConfig.explicitLong(env, "ETL_INTERVAL_SECONDS", 30L)) match {
+    argSec.orElse(EtlConfig.explicitLong(env, "ETL_INTERVAL_SECONDS",
+        EtlConfig(env).intervalSeconds)) match {
       case Some(sec) =>
         org.apache.spark.sql.streaming.Trigger.ProcessingTime(s"$sec seconds")
       case None => org.apache.spark.sql.streaming.Trigger.AvailableNow()

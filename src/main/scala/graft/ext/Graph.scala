@@ -361,9 +361,7 @@ object Graph extends QueryModule {
     * sizes are a bounded top-20 (size desc, label asc), collected to a
     * LocalRelation inside the loan like [[pageRank]]. */
   private[ext] def labelPropagation(edgeDf: DataFrame,
-      rounds: Int = LpRounds, checkpointEvery: Int = 1): DataFrame = {
-    require(checkpointEvery >= 1,
-      s"checkpointEvery must be >= 1, got $checkpointEvery")
+      rounds: Int = LpRounds): DataFrame = {
     val spark = edgeDf.sparkSession
     // both directions in one scan of the edge plan (the pageRank idiom)
     val sym = edgeDf.select(explode(array(
@@ -372,49 +370,37 @@ object Graph extends QueryModule {
       .select(col("p.src"), col("p.dst")).cache()
     try {
       // ROUND-ITERATED frame ⇒ lazy localCheckpoint + eager release
-      // every `checkpointEvery` rounds (the [[kcoreTrajectory]] idiom):
-      // plain reassignment alone would nest round N's plan inside round
-      // N+1's, so the final plan re-derives every prior round's
-      // join+argmax on each consumption — quadratic re-execution at
-      // real round counts, and plan/analysis cost growing per round.
-      // Cadence > 1 trades one node-sized materialization + job launch
-      // per skipped round against a lineage nested that many rounds
-      // deep (the round-16 A/B on sf0.1 measured the two within noise
-      // of each other — the write is NOT the bottleneck — so the
-      // default stays 1: bounded lineage every round, and the knob
-      // exists for cluster runs where barrier count dominates). One
-      // label frame (node-sized, tiny next to the edges) is live at a
-      // time; `lastCkpt` holds the newest STORED frame, which nested
-      // rounds still read until the next store lands.
+      // every round (the [[kcoreTrajectory]] idiom): plain reassignment
+      // alone would nest round N's plan inside round N+1's, so the final
+      // plan re-derives every prior round's join+argmax on each
+      // consumption — quadratic re-execution at real round counts, and
+      // plan/analysis cost growing per round. One label frame
+      // (node-sized, tiny next to the edges) is live at a time.
       var labels = sym.select(col("src").as("node")).distinct()
         .withColumn("lbl", col("node"))
         .transform(Pins.pin)
-      var lastCkpt = labels
       try {
-        for (r <- 1 to rounds) {
+        for (_ <- 1 to rounds) {
           val cnt = sym
             .join(labels.select(col("node").as("src"), col("lbl")), "src")
             .groupBy(col("dst").as("node"), col("lbl"))
             .agg(count(lit(1)).as("c"))
           // (node, lbl) is a grouping key, so the (c, -lbl) pairs are
           // distinct per node: the argmax is unambiguous, no tie seam
-          val step = cnt.groupBy(col("node"))
+          val next = cnt.groupBy(col("node"))
             .agg(expr("max_by(lbl, struct(c, -lbl))").as("lbl"))
-          if (r % checkpointEvery == 0 || r == rounds) {
-            val next = step.transform(Pins.pin)
-            // materialize the new round BEFORE releasing its ancestor
-            try next.count()
-            catch { case t: Throwable => Dedup.release(next); throw t }
-            Dedup.release(lastCkpt)
-            lastCkpt = next
-            labels = next
-          } else labels = step
+            .transform(Pins.pin)
+          // materialize the new round BEFORE releasing its ancestor
+          try next.count()
+          catch { case t: Throwable => Dedup.release(next); throw t }
+          Dedup.release(labels)
+          labels = next
         }
         val top = labels.groupBy(col("lbl").as("community"))
           .agg(count(lit(1)).as("n_members"))
           .orderBy(col("n_members").desc, col("community").asc).limit(20)
         spark.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
-      } finally Dedup.release(lastCkpt)
+      } finally Dedup.release(labels)
     } finally sym.unpersist()
   }
 

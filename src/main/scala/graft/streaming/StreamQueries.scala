@@ -484,8 +484,8 @@ object StreamQueries extends QueryModule {
       *
       * Delivery margin matters because Spark filters late rows against
       * the PREVIOUS batch's watermark while evicting against the
-      * current one (the two-watermark split of SPARK-24634; pinned
-      * empirically by WatermarkProbe): a poison delivered in batch b is
+      * current one (the two-watermark split of SPARK-24634; this row's
+      * oracle goes red if a poison leaks): a poison delivered in batch b is
       * dropped iff its window end ≤ maxEventTime(batches ≤ b−2) − delay.
       * Delivered with the sentinel, the cutoff is maxTs(chunks 0..2)−1h
       * — about two chunk spans past any first-chunk window end — so the
@@ -563,9 +563,9 @@ object StreamQueries extends QueryModule {
       * sessions per user, built incrementally across 4 ts-ordered
       * micro-batches — sessions spanning a chunk boundary exercise the
       * cross-batch session-merge state path. The oracle replays
-      * gaps-and-islands sessionization relationally with the probed
+      * gaps-and-islands sessionization relationally with the tested
       * boundary convention (events exactly `gap` apart MERGE; session
-      * end = last event + gap — SessionGapProbe pinned both). */
+      * end = last event + gap — StreamSpec's session test pins both). */
     "stream_sessionize" -> Q(
       (s, dir) => withStreamRun(s, dir) { (staging, ckpt, _) =>
         val sc = eventsCorpus(s, dir, staging)
@@ -788,12 +788,16 @@ object StreamQueries extends QueryModule {
         val sc = eventsCorpus(s, dir, staging)
         stage(s, dir, "events_sentinel", staging)(
           sc.around(sentinel(s, sc.mx, Chunks)))
-        val dim = graft.Tables.events(s, dir).filter(col("ts").isNotNull)
+        val cohorts = graft.Tables.events(s, dir).filter(col("ts").isNotNull)
           .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
           .select(col("user_id"),
             when(col("n") >= 20L, lit("heavy"))
               .when(col("n") >= 5L, lit("mid"))
               .otherwise(lit("light")).as("cohort"))
+        // derived once, before the stream starts: a batch frame would be
+        // re-planned, re-scanned and re-aggregated by every micro-batch
+        val dim = s.createDataFrame(
+          java.util.Arrays.asList(cohorts.collect(): _*), cohorts.schema)
         val stream = chunkStream(s, staging).drop("ts")
           .withColumnRenamed("tsw", "ts")
         val agg = StreamAnalytics.enrichWithDim(stream, dim, "user_id")

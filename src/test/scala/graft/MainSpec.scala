@@ -95,6 +95,9 @@ class MainSpec extends SparkSpec {
     // default rather than silently flipping to drain-and-exit
     assert(Main.triggerFor(None, Map("ETL_INTERVAL_SECONDS" -> "x"))
       == Trigger.ProcessingTime("30 seconds"))
+    // non-positive is as unusable as malformed: the same 30 s default
+    assert(Main.triggerFor(None, Map("ETL_INTERVAL_SECONDS" -> "0"))
+      == Trigger.ProcessingTime("30 seconds"))
   }
 
   test("explicitLong: presence-gated, value still default-tolerant") {

@@ -184,7 +184,8 @@ class GraphSpec extends SparkSpec {
     val out = Graph.labelPropagation(edges)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(out.toSeq == Seq((1L, 4L), (5L, 4L)))
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty) // loan released
+    // every round pins its labels and releases the previous round's
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty, "label propagation leaked its loan")
   }
 
   test("label propagation is deterministic on the oscillating path (fixed rounds)") {
@@ -197,28 +198,6 @@ class GraphSpec extends SparkSpec {
     val out = Graph.labelPropagation(edges)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(out.toSeq == Seq((2L, 2L), (1L, 1L)))
-  }
-
-  test("label propagation checkpoint cadence changes the schedule, never " +
-      "the labels (and releases its loan at any cadence)") {
-    // the same bridged-cliques graph as the convergence test: the
-    // cadence knob trades materialization for lineage depth; the
-    // result is defined by the recurrence alone. (The round-16 A/B
-    // measured cadence=2 ~2x SLOWER at sf0.1 — per-round checkpoints
-    // are the optimization, so 1 stays the default — but the knob must
-    // stay correct for cluster experimentation.)
-    val k4a = for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b)
-    val k4b = for (a <- 5L to 8L; b <- (a + 1) to 8L) yield (a, b)
-    val edges = (k4a ++ k4b ++ Seq((4L, 5L))).toDF("u", "v")
-    val want = Graph.labelPropagation(edges)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    for (cadence <- Seq(2, 3, 5)) {
-      val got = Graph.labelPropagation(edges, checkpointEvery = cadence)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      assert(got == want, s"cadence $cadence diverged")
-      assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-        s"cadence $cadence leaked its loan")
-    }
   }
 
   test("triangle joins are hash equi-joins, never all-pairs (plan gate)") {

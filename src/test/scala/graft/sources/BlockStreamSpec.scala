@@ -16,6 +16,15 @@ class BlockStreamSpec extends SparkSpec {
       .option("workers", 4).option("maxSlotsPerTrigger", maxPerTrigger)
       .load()
 
+  private def nonEmptyBatches(q: org.apache.spark.sql.streaming.StreamingQuery): Int =
+    q.recentProgress.count(_.numInputRows > 0)
+
+  private def slotsIn(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.select("slot").distinct().collect().map(_.getLong(0)).sorted.toSeq
+
+  private def presentSlots(start: Long, tip: Long): Seq[Long] =
+    (start until tip).filter(graft.ingest.Backfill.syntheticBlock(_).isDefined)
+
   test("AvailableNow drains to the tip in rate-capped batches; restart resumes from the checkpoint") {
     val base = Files.createTempDirectory("graft_bstream").toString
     val sink = s"$base/sink"; val ckpt = s"$base/ckpt"
@@ -33,6 +42,10 @@ class BlockStreamSpec extends SparkSpec {
       graft.ingest.Backfill.fetchRange(spark, 1, 51, workers = 4))
     assert(got.count() == batchEquivalent.count())
     assert(got.agg(max(col("slot"))).collect()(0).getLong(0) == 50L)
+    // admission: ceil(50 slots / 10 per trigger) non-empty micro-batches,
+    // and every present slot (the synthetic chain skips every 97th) lands
+    assert(nonEmptyBatches(q1) == 5)
+    assert(slotsIn(got) == presentSlots(1, 51))
 
     // restart with a higher tip: only the new slots are read
     val q2 = Parse.parse(stream(1, 81, maxPerTrigger = 10))
@@ -43,6 +56,10 @@ class BlockStreamSpec extends SparkSpec {
 
     val after = spark.read.parquet(sink)
     assert(after.agg(max(col("slot"))).collect()(0).getLong(0) == 80L)
+    // only the 30 new slots are admitted: ceil(30 / 10) more batches, and
+    // no seam between micro-batches or runs loses a slot
+    assert(nonEmptyBatches(q2) == 3)
+    assert(slotsIn(after) == presentSlots(1, 81))
     // no duplicated events despite the shared event-id space
     assert(after.count() == after.select("event_id").distinct().count())
   }

@@ -71,6 +71,14 @@ class StreamSpec extends SparkSpec {
       (4L, "2024-01-01T12:00:00Z", "view", 4.0),
       // watermark pusher
       (5L, "2024-01-01T16:00:00Z", "purchase", 0.0)))
+    // the gap boundary: pairs exactly the gap apart, 1 ms under, 1 ms over
+    writeEvents(src, "b2", Seq(
+      (6L, "2024-01-01T13:00:00.000Z", "exact", 1.0),
+      (7L, "2024-01-01T13:30:00.000Z", "exact", 2.0),
+      (8L, "2024-01-01T13:00:00.000Z", "under", 1.0),
+      (9L, "2024-01-01T13:29:59.999Z", "under", 2.0),
+      (10L, "2024-01-01T13:00:00.000Z", "over", 1.0),
+      (11L, "2024-01-01T13:30:00.001Z", "over", 2.0)))
 
     val stream = spark.readStream.schema(schema).json(src)
     val q = startToMemory(
@@ -82,6 +90,20 @@ class StreamSpec extends SparkSpec {
       .map(r => (r.getString(2), r.getLong(3), r.getDouble(4))).toSet
     assert(out.contains(("view", 3L, 6.0)), out)   // the merged 10:00-11:15 session
     assert(out.contains(("view", 1L, 4.0)), out)   // the isolated 12:00 session
+
+    // events exactly `gap` apart merge, and a session ends at its last
+    // event plus the gap (the `stream_sessionize` oracle replays both)
+    val bounds = spark.table("sess_out")
+      .filter(col("event_type").isin("exact", "under", "over"))
+      .select(col("event_type"), col("n_events"),
+        col("session_start").cast("string"), col("session_end").cast("string"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getString(3)))
+      .toSet
+    assert(bounds == Set(
+      ("exact", 2L, "2024-01-01 13:00:00", "2024-01-01 14:00:00"),
+      ("under", 2L, "2024-01-01 13:00:00", "2024-01-01 13:59:59.999"),
+      ("over", 1L, "2024-01-01 13:00:00", "2024-01-01 13:30:00"),
+      ("over", 1L, "2024-01-01 13:30:00.001", "2024-01-01 14:00:00.001")), bounds)
   }
 
   test("flatMapGroupsWithState carries running totals across micro-batches") {
