@@ -3,13 +3,16 @@ package graft.analytics
 import graft.SparkSpec
 import graft.ingest.{Backfill, Parse}
 import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerStageSubmitted}
+import org.apache.spark.sql.{DataFrame, Row, TestCacheManager}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
@@ -120,6 +123,30 @@ class RunnerSpec extends SparkSpec {
     pool.filter(_.isAlive)
   }
 
+  /** The session's pins: persistent RDD ids and cached plans. The session
+    * is shared across suites, so a refresh is judged against a snapshot
+    * taken before it, not against an empty cache. */
+  private def pins: (Set[Int], Int) =
+    (spark.sparkContext.getPersistentRDDs.keySet.toSet, TestCacheManager.entries(spark))
+
+  /** The session holds no pin that it did not hold at `before`. */
+  private def assertNoNewPins(before: (Set[Int], Int)): Unit = {
+    val (rdds, entries) = pins
+    assert(rdds.subsetOf(before._1), s"persistent RDDs left behind: ${rdds -- before._1}")
+    assert(entries <= before._2, s"cached plans: $entries, before: ${before._2}")
+  }
+
+  /** Each table runAll wrote under `out` equals its own function's result. */
+  private def assertTablesMatch(fact: DataFrame, out: String, counts: Map[String, Long]): Unit = {
+    val fns = tableFns(fact, None)
+    assert(counts.keySet == fns.map(_._1).toSet)
+    fns.foreach { case (name, df) =>
+      val written = spark.read.parquet(s"$out/$name").collect()
+      assert(multiset(written) == multiset(df.collect()), name)
+      assert(counts(name) == written.length.toLong, name)
+    }
+  }
+
   /** runAll under a deadline: a refresh that blocks fails the test. */
   private def runAllWithin(fact: DataFrame, out: String): Map[String, Long] =
     Await.result(Future(AnalyticsRunner.runAll(spark, fact, anchor, out)), 3.minutes)
@@ -157,16 +184,30 @@ class RunnerSpec extends SparkSpec {
     }.map(_._1)
     assert(failing == Seq("dim_tokens"))
 
+    val before = pins
     val e = intercept[Exception](runAllWithin(fact, s"$base/out"))
     assert(e.getMessage.contains("dim_tokens"), e.getMessage)
     assert(refreshThreads.isEmpty)
+    assertNoNewPins(before)
+
+    // a fact the caller pinned keeps its pin, at the caller's level,
+    // through a failed refresh
+    fact.persist(StorageLevel.DISK_ONLY)
+    try {
+      val again = intercept[Exception](runAllWithin(fact, s"$base/again"))
+      assert(again.getMessage.contains("dim_tokens"), again.getMessage)
+      assert(fact.storageLevel == StorageLevel.DISK_ONLY)
+    } finally fact.unpersist(blocking = true)
+    assertNoNewPins(before)
   }
 
   test("runAll over an empty fact counts 0 rows per table, 1 per global aggregate") {
     val base = Files.createTempDirectory("graft_runner_empty").toString
     Backfill.run(spark, 1L, 11L, workers = 2, s"$base/seed")
     spark.read.parquet(s"$base/seed").filter(lit(false)).write.parquet(s"$base/fact")
+    val before = pins
     val counts = runAllWithin(spark.read.parquet(s"$base/fact"), s"$base/out")
+    assertNoNewPins(before)
     val global = Set("analytics_transaction_volume", "analytics_token_transfers",
       "analytics_failed_transactions", "analytics_wallet_activity")
     assert(counts.size == 14)
@@ -182,10 +223,11 @@ class RunnerSpec extends SparkSpec {
     val fact = spark.read.parquet(s"$base/fact")
     val out = s"$base/out"
     // every operator of an executed plan, through adaptive plans, query
-    // stages and subqueries
+    // stages, subqueries and the plans that cached relations were built by
     def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
       case q: QueryStageExec => nodes(q.plan)
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
       case other => (other.children ++ other.subqueries).flatMap(nodes)
     })
     val (writes, outScans) = (new java.util.concurrent.atomic.AtomicInteger,
@@ -202,12 +244,74 @@ class RunnerSpec extends SparkSpec {
         }
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    // the stages that read files. A stage that reads a pin still lists
+    // the pin's own file scan among its RDDs, so a stage counts only if no
+    // persisted RDD it lists was already built by a completed stage.
+    val built = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val fileStages = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        val rdds = e.stageInfo.rddInfos
+        if (rdds.exists(_.name == "FileScanRDD") && !rdds.exists(r => built.contains(r.id)))
+          fileStages.incrementAndGet()
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        e.stageInfo.rddInfos.filter(_.storageLevel.isValid).foreach(r => built.add(r.id))
+    }
+    val before = pins
     spark.listenerManager.register(listener)
+    spark.sparkContext.addSparkListener(stages)
     try {
       AnalyticsRunner.runAll(spark, fact, anchor, out)
       org.apache.spark.TestListenerBus.drain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.sparkContext.removeSparkListener(stages)
+    }
     assert(writes.get == 14)
     assert(outScans.get == 0)
+    // one read of the fact per refresh, by one stage
+    assert(fileStages.get == 1)
+    assertNoNewPins(before)
+  }
+
+  test("concurrent refreshes of one fact pin apart, and no pin outlives its refresh") {
+    val base = Files.createTempDirectory("graft_runner_pins").toString
+    val sink = Backfill.FileSink(s"$base/fact")
+    Backfill.runTo(spark, 1L, 41L, workers = 2, sink)
+    def read = spark.read.parquet(s"$base/fact")
+    val before = pins
+    val outs = Seq(s"$base/a", s"$base/b")
+    val running = Future.sequence(outs.map(o =>
+      Future(AnalyticsRunner.runAll(spark, read, anchor, o))))
+    // while they run, no other plan over the fact matches either pin
+    val seen = Iterator.continually { val l = read.storageLevel; Thread.sleep(20); l }
+      .takeWhile(_ => !running.isCompleted).toSet
+    val counts = Await.result(running, 3.minutes)
+    assert(seen == Set(StorageLevel.NONE))
+    assertNoNewPins(before)
+    outs.zip(counts).foreach { case (o, c) => assertTablesMatch(read, o, c) }
+
+    // a further slot range lands in the fact; a refresh over a fresh read
+    // counts it, so no pin of the earlier refreshes is read in its place
+    def transactions(out: String) = spark.read
+      .parquet(s"$out/analytics_transaction_volume").head().getAs[Long]("total_transactions")
+    Backfill.runTo(spark, 41L, 61L, workers = 2, sink)
+    val appended = read.filter(col("slot") >= 41L && col("event_type") === "transaction").count()
+    assert(appended > 0)
+    AnalyticsRunner.runAll(spark, read, anchor, s"$base/c")
+    assert(transactions(s"$base/c") == transactions(s"$base/a") + appended)
+    assertNoNewPins(before)
+
+    // a fact the caller pinned is read through the caller's pin, which
+    // runAll neither re-pins nor releases
+    val mine = read.persist(StorageLevel.MEMORY_ONLY)
+    try {
+      val c = AnalyticsRunner.runAll(spark, mine, anchor, s"$base/d")
+      assert(mine.storageLevel == StorageLevel.MEMORY_ONLY)
+      assertTablesMatch(mine, s"$base/d", c)
+    } finally mine.unpersist(blocking = true)
+    assertNoNewPins(before)
+    assert(refreshThreads.isEmpty)
   }
 }
