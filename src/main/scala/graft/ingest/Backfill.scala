@@ -8,14 +8,20 @@ import org.apache.spark.sql.functions._
   *
   * The reference chunks the slot range, caps concurrency with a tokio
   * semaphore, and upserts per-chunk batches. Here the whole shape is
-  * `spark.range(start, end)` → repartition(workers) → per-partition fetch
-  * + parse → dedup on the deterministic id → date-partitioned parquet
-  * write (SURVEY.md §3.2): chunking/concurrency = partitioning, semaphore
-  * = executor cores, per-chunk connections = per-partition writers, and
-  * the per-event upsert becomes dropDuplicates + [[EventSink.write]]'s
-  * event-level anti-join against the sink's slot span before an append
-  * (the reference's is_slot_processed guard, S11/J3, as one distributed
-  * pass).
+  * `spark.range(start, end, 1, n)` (contiguous slot chunks, one per
+  * task) → fetch in a projection → parse → dedup on (slot, event_id) →
+  * date-partitioned write (SURVEY.md §3.2): chunking/concurrency =
+  * partitioning, semaphore = executor cores, per-chunk connections =
+  * per-task writers, and the per-event upsert becomes the dedup +
+  * [[EventSink.write]]'s event-level anti-join against the sink's slot
+  * span before an append (the reference's is_slot_processed guard,
+  * S11/J3, as one distributed pass).
+  *
+  * The range's slot-ordered partitioning survives the fetch, the parse
+  * and the explode, and it already clusters the dedup's (slot,
+  * event_id) key (event_id is a function of the slot), so a backfill
+  * call is one stage with no shuffle. Each task holds one contiguous
+  * slot run, so it writes one file per date its run covers.
   *
   * At cluster scale the fetcher partition count bounds concurrent RPC
   * load exactly like the reference's `--workers` (rate limiting is a
@@ -55,28 +61,31 @@ object Backfill {
   }
 
   /** Fetch a slot range as raw (slot, block_json) rows, `workers`-way
-    * parallel (backfill.rs:22-60). `chunkSize` (ETL_BACKFILL_CHUNK_SIZE,
-    * backfill.rs:22) caps the slots per task: partitions =
-    * max(workers, ceil(range / chunk)), so per-task work — and the
-    * refetch blast radius of a lost task — is bounded by the chunk
-    * while small ranges still fan out to every worker. At 100 TB the
-    * chunk is what keeps one straggling partition from owning
-    * range/workers ≫ memory-and-retry-sized work. */
+    * parallel over contiguous slot chunks (backfill.rs:22-60).
+    * `chunkSize` (ETL_BACKFILL_CHUNK_SIZE, backfill.rs:22) caps the slots
+    * per task: partitions = max(workers, ceil(range / chunk)), so
+    * per-task work — and the refetch blast radius of a lost task — is
+    * bounded by the chunk while small ranges still fan out to every
+    * worker. At 100 TB the chunk is what keeps one straggling partition
+    * from owning range/workers ≫ memory-and-retry-sized work.
+    *
+    * The fetch is a projection over the range, not a typed
+    * `mapPartitions`, so the result keeps the range's partitioning on
+    * `slot`. The fetch UDF is nondeterministic: the optimizer then never
+    * copies it into a pushed-down filter, and each slot is fetched once. */
   def fetchRange(spark: SparkSession, startSlot: Long, endSlot: Long,
       workers: Int, fetcher: BlockFetcher = syntheticBlock,
       chunkSize: Option[Long] = None): DataFrame = {
-    import spark.implicits._
     val total = math.max(0L, endSlot - startSlot)
     val n = chunkSize.filter(_ > 0) match {
       case Some(c) => math.max(workers.toLong, (total + c - 1) / c)
         .min(Int.MaxValue.toLong).toInt.max(1)
       case None => workers
     }
-    spark.range(startSlot, endSlot)
-      .repartition(n)
-      .as[Long]
-      .mapPartitions(slots => slots.flatMap(s => fetcher(s).map(j => (s, j))))
-      .toDF("slot", "block_json")
+    val fetch = udf((slot: Long) => fetcher(slot).orNull).asNondeterministic()
+    spark.range(startSlot, endSlot, 1, n)
+      .select(col("id").as("slot"), fetch(col("id")).as("block_json"))
+      .filter(col("block_json").isNotNull)
   }
 
   /** The warehouse-dispatch axis (S13, warehouse.rs:30-39's backend

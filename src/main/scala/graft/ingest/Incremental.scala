@@ -62,7 +62,7 @@ object Incremental {
         // write wins per event_id; replays converge).
         // three consumers below (date probe, anti-join, write): pin so
         // the batch's parse work runs once per trigger
-        val deduped = batch.dropDuplicates("event_id")
+        val deduped = Parse.dedupEvents(batch)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           // the guard read is PRUNED to the batch's own date span: the

@@ -122,11 +122,30 @@ object Parse {
         col("program_id"), col("instruction_index"), col("event_type"),
         col("raw_payload"))
     // dedup=false for STREAMING inputs: on an unbounded DataFrame this
-    // dropDuplicates would plan as a stateful dedup whose state (every
-    // event_id ever seen) grows without bound; streaming callers dedup
-    // per epoch in foreachBatch instead.
-    if (dedup) events.dropDuplicates("event_id") else events
+    // dedup would plan as stateful, with state (every event ever seen)
+    // that grows without bound; streaming callers dedup per epoch in
+    // foreachBatch instead.
+    if (dedup) dedupEvents(events) else events
   }
+
+  /** One row per event: duplicates collapse on (slot, event_id), and
+    * colliding ids are byte-equal replays, so which row survives does
+    * not matter. Equal ids always share a slot (the id hashes it), so
+    * the slot adds no split, but it lets a slot-clustered input (a
+    * backfill's contiguous slot chunks) dedup without a shuffle. A batch
+    * dedups with an explicit aggregate rather than `dropDuplicates`: the
+    * latter's rewrite fails at execution under an `exceptAll` against a
+    * sink read-back (`INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND`). A stream
+    * keeps the stateful `dropDuplicates`, because a streaming aggregate
+    * without a watermark cannot emit in append mode. */
+  def dedupEvents(events: DataFrame): DataFrame =
+    if (events.isStreaming) events.dropDuplicates("slot", "event_id")
+    else {
+      val cols = events.columns.toSeq
+      val firsts = cols.filterNot(Set("slot", "event_id")).map(c => first(c).as(c))
+      events.groupBy("slot", "event_id").agg(firsts.head, firsts.tail: _*)
+        .select(cols.map(col): _*)
+    }
 
   /** End-to-end: raw block rows → canonical events. */
   def parse(raw: DataFrame, dedup: Boolean = true): DataFrame =

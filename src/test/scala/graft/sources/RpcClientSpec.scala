@@ -158,8 +158,7 @@ class RpcClientSpec extends SparkSpec {
   private val stubBlock: Backfill.BlockFetcher =
     s => if (s % 3 == 0) None else Backfill.syntheticBlock(s)
 
-  // rows as sorted strings: a multiset compare (exceptAll over the
-  // deduplicated parse fails to bind in Spark's planner)
+  // rows as sorted strings: a multiset compare
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(_.toString).sorted.toSeq
 
