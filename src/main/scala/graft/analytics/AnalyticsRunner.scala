@@ -1,10 +1,9 @@
 package graft.analytics
 
 import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import scala.concurrent.Await
 import scala.concurrent.duration._
 import scala.util.control.NonFatal
@@ -226,11 +225,11 @@ object AnalyticsRunner {
     * pool). Each table's row count is an [[Observation]] on its own
     * write plan — no read-back listing, footer read or count job.
     *
-    * The fact is read once per refresh, not once per table: unless the
-    * caller pinned it, it is persisted under this refresh's id, which no
-    * other plan over the fact (a concurrent refresh, a later re-read)
-    * matches. One pass builds the pin before the writes start; writes
-    * that reached a lazy pin would each submit a job to build it.
+    * The fact is read once per refresh, not once per table: it is
+    * [[graft.ext.Pins.scoped]] for the refresh, which no other plan over
+    * the fact (a concurrent refresh, a later re-read) matches. One pass
+    * builds the pin before the writes start; writes that reached a lazy
+    * pin would each submit a job to build it.
     *
     * The first write to fail is rethrown naming its table; tables not
     * yet started are cancelled, running ones are waited for, and no
@@ -247,66 +246,59 @@ object AnalyticsRunner {
       Seq("fact_program_events" -> graft.ingest.Parse.factProgramEvents(b),
         "fact_token_transfers" -> graft.ingest.Parse.factTokenTransfers(b))
     }
-    val pin = Option.when(fact.storageLevel == StorageLevel.NONE)(
-      fact.withColumn(RefreshId, lit(refreshes.incrementAndGet())))
-    val pinned = pin.fold(fact)(_.drop(RefreshId))
-    // program_trends goes first: it is the longest table (a top-10
-    // aggregate and a broadcast semi-join), so starting it last would
-    // stretch the refresh, and its broadcast relation would still be live
-    // when the call returns instead of collectable.
-    val tables: Seq[(String, DataFrame)] =
-      ("analytics_program_trends" -> programTrends(pinned, anchor)) +: (typedFacts ++ Seq(
-      "analytics_transaction_volume" -> transactionVolume(pinned, anchor),
-      "analytics_hourly_volume" -> hourlyVolume(pinned, anchor),
-      "analytics_active_programs" -> activePrograms(pinned),
-      "analytics_token_transfers" -> tokenTransfers(pinned),
-      "analytics_top_tokens" -> topTokens(pinned),
-      "analytics_failed_transactions" -> failedTransactions(pinned),
-      "analytics_top_errors" -> topErrors(pinned),
-      "analytics_wallet_activity" -> walletActivity(pinned, anchor),
-      "analytics_top_wallets" -> topWallets(pinned),
-      "dim_wallets" -> dimWallets(pinned),
-      "dim_programs" -> dimPrograms(pinned),
-      "dim_tokens" -> dimTokens(pinned),
-      // fact_telemetry (SCHEMA.md:161-188): declared-only in the
-      // reference (its parser never emits telemetry rows). Materialized
-      // here so the warehouse surface is complete — EMPTY (schema-only)
-      // when the fact stream carries no telemetry events, exactly the
-      // state a reference deployment's table is in today; fills as soon
-      // as a Parse.parseTelemetry feed is unioned into the fact.
-      "fact_telemetry" -> factTelemetry(pinned)))
+    graft.ext.Pins.scoped(fact) { pinned =>
+      pinned.write.format("noop").mode(SaveMode.Overwrite).save()
+      // program_trends goes first: it is the longest table (a top-10
+      // aggregate and a broadcast semi-join), so starting it last would
+      // stretch the refresh, and its broadcast relation would still be live
+      // when the call returns instead of collectable.
+      val tables: Seq[(String, DataFrame)] =
+        ("analytics_program_trends" -> programTrends(pinned, anchor)) +: (typedFacts ++ Seq(
+        "analytics_transaction_volume" -> transactionVolume(pinned, anchor),
+        "analytics_hourly_volume" -> hourlyVolume(pinned, anchor),
+        "analytics_active_programs" -> activePrograms(pinned),
+        "analytics_token_transfers" -> tokenTransfers(pinned),
+        "analytics_top_tokens" -> topTokens(pinned),
+        "analytics_failed_transactions" -> failedTransactions(pinned),
+        "analytics_top_errors" -> topErrors(pinned),
+        "analytics_wallet_activity" -> walletActivity(pinned, anchor),
+        "analytics_top_wallets" -> topWallets(pinned),
+        "dim_wallets" -> dimWallets(pinned),
+        "dim_programs" -> dimPrograms(pinned),
+        "dim_tokens" -> dimTokens(pinned),
+        // fact_telemetry (SCHEMA.md:161-188): declared-only in the
+        // reference (its parser never emits telemetry rows). Materialized
+        // here so the warehouse surface is complete — EMPTY (schema-only)
+        // when the fact stream carries no telemetry events, exactly the
+        // state a reference deployment's table is in today; fills as soon
+        // as a Parse.parseTelemetry feed is unioned into the fact.
+        "fact_telemetry" -> factTelemetry(pinned)))
 
-    val threads = new AtomicInteger()
-    val pool = Executors.newFixedThreadPool(spark.sparkContext.defaultParallelism, { r =>
-      val t = new Thread(r, s"analytics-refresh-${threads.incrementAndGet()}")
-      t.setDaemon(true)
-      t
-    })
-    try {
-      pin.foreach(_.persist(StorageLevel.MEMORY_AND_DISK)
-        .write.format("noop").mode(SaveMode.Overwrite).save())
-      val done = new ExecutorCompletionService[(String, Long)](pool)
-      val writes = tables.map { case (name, df) =>
-        done.submit(() => writeCounted(name, df, s"$outDir/$name"))
-      }
-      tables.map { _ =>
-        try done.take().get()
-        catch {
-          case e: ExecutionException =>
-            writes.foreach(_.cancel(false))
-            throw e.getCause
+      val threads = new AtomicInteger()
+      val pool = Executors.newFixedThreadPool(spark.sparkContext.defaultParallelism, { r =>
+        val t = new Thread(r, s"analytics-refresh-${threads.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+      try {
+        val done = new ExecutorCompletionService[(String, Long)](pool)
+        val writes = tables.map { case (name, df) =>
+          done.submit(() => writeCounted(name, df, s"$outDir/$name"))
         }
-      }.toMap
-    } finally {
-      pool.shutdown()
-      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
-      pin.foreach(_.unpersist(blocking = true))
+        tables.map { _ =>
+          try done.take().get()
+          catch {
+            case e: ExecutionException =>
+              writes.foreach(_.cancel(false))
+              throw e.getCause
+          }
+        }.toMap
+      } finally {
+        pool.shutdown()
+        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      }
     }
   }
-
-  /** The column that tags a refresh's pin of the fact with its id. */
-  private val RefreshId = "__analytics_refresh"
-  private val refreshes = new AtomicLong()
 
   /** The longest the listener bus may take to report a finished write's
     * observed row count before the refresh fails instead of waiting on. */

@@ -115,7 +115,7 @@ object CorpusPipeline {
           lit("quality_kept").as("stage"), col("n_tok").cast("long")))
 
       use(staged)
-    } finally held.foreach(Dedup.release)
+    } finally held.foreach(Pins.release)
   }
 
   /** DuckDB mirror of [[withCleanedDocs]]'s stage chain, ending in the

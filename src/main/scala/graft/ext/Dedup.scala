@@ -572,116 +572,100 @@ object Dedup extends QueryModule {
     * the propagation-only form needed 5000 rounds for a 5000-long
     * chain, DedupProps pins the log bound). Labels decrease
     * monotonically, so the convergence flag rides the update passes.
-    * The edge list is cached once so no round recomputes the upstream
-    * pair generation, each round's labels replace the previous round's
-    * cache immediately, and EVERY cache is dropped when `use` returns
-    * (the loan discipline). The driver holds only a convergence counter
-    * per round, never the data. */
-  /** Release a loop frame's storage: the cache-manager entry AND, for a
-    * `localCheckpoint()`'d frame, the checkpoint RDD itself — Dataset
-    * .unpersist only covers the former (checkpoint storage is persisted
-    * outside the cache manager), so without this every truncation round
-    * would leak one persisted RDD past the loan scope (ExtSpec pins
-    * that no cached RDDs survive the library call). Only the plan ROOT
-    * is matched: a checkpoint frame is exactly a LogicalRDD leaf, while
-    * matching arbitrary leaves could unpersist RDDs the CALLER owns
-    * inside `pairs`' lineage. */
-  private[ext] def release(df: DataFrame): Unit = {
-    df.unpersist()
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
-  }
-
+    * The edge list is pinned once ([[Pins.scoped]]) so no round
+    * recomputes the upstream pair generation, each round's labels
+    * replace the previous round's cache immediately, and EVERY pin is
+    * dropped when `use` returns (the loan discipline). The driver holds
+    * only a convergence counter per round, never the data. */
   private[ext] def withComponents[T](pairs: DataFrame, maxIter: Int = 30)
-      (use: DataFrame => T): T = {
-    // cached: every round joins against edges, and without this each
+      (use: DataFrame => T): T =
+    // pinned: every round joins against edges, and without this each
     // count() action would recompute the full upstream pair generation
     // (for dedup_clusters that is the shingle inverted-index self-join,
     // the heaviest pipeline in the bench) once per round
-    val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-      .cache()
-    var cached = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label")).cache()
-    var labels = cached
-    // exception-path cleanup; the happy path unpersists eagerly below
-    // (a second unpersist of the same frame is a no-op)
-    val retired = scala.collection.mutable.ListBuffer[DataFrame](edges, cached)
-    try {
-      var changed = 1L
-      var iter = 0
-      while (changed > 0 && iter < maxIter) {
-        val nbrMin = edges
-          .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
-          .groupBy(col("src")).agg(min(col("label")).as("nbr"))
-        // the change flag rides along in the SAME update pass (labels
-        // only ever decrease, so changed ⟺ the label decreased) — no
-        // extra updated×labels join per round just to count convergence
-        val hooked = labels
-          .join(nbrMin.select(col("src").as("id"), col("nbr")), Seq("id"), "left")
-          .select(col("id"),
-            least(col("label"), coalesce(col("nbr"), col("label"))).as("label"),
-            (coalesce(col("nbr"), col("label")) < col("label")).as("chg"))
-        // hooked feeds BOTH sides of the compress self-join below: cache
-        // it for the round so the hook join+agg (the heavy per-round
-        // work) computes once, not once per side — released as soon as
-        // the round's result materializes. (Round-7 profile: skipping
-        // this cache and recomputing the hook per side is ~35% SLOWER
-        // at sf0.1 — the cache write/read is cheaper than the join+agg.)
-        hooked.cache()
-        retired += hooked
-        // POINTER JUMP (compress): label ← label's label. Hooking alone
-        // moves the min one hop per round — diameter-many rounds, which
-        // a 100 TB corpus with chain-shaped near-dup relations (paged
-        // documents, serial boilerplate) can make adversarially deep.
-        // Compression squares the reach of every round instead:
-        // convergence in O(log diameter) rounds total. A label is
-        // always itself a node id (init: own id; hook: min of node
-        // ids; jump: a node's label), so the lookup is an equi-join of
-        // the label table against itself — the popular-label probe side
-        // is the dimension-join shape, no skew hazard on the build
-        // side. The left join keeps nodes whose label has no row only
-        // in theory (labels ⊆ ids by the invariant), and chg picks up
-        // compression moves so the fixpoint test stays exact.
-        val updatedPlan = hooked.as("h")
-          .join(hooked.select(col("id").as("lid"), col("label").as("llabel")).as("m"),
-            col("h.label") === col("m.lid"), "left")
-          .select(col("h.id").as("id"),
-            coalesce(col("m.llabel"), col("h.label")).as("label"),
-            (col("h.chg") ||
-              coalesce(col("m.llabel"), col("h.label")) < col("h.label")).as("chg"))
-        // caching truncates RECOMPUTATION but not the LOGICAL plan, and
-        // each round references `labels` FOUR times (hook's join+agg,
-        // compress's two sides) — uncheckpointed, the nested plan would
-        // grow 4^rounds and OOM the optimizer on the driver before any
-        // data moves. localCheckpoint EVERY round cuts the lineage to
-        // an RDD leaf, keeping per-round analysis cost constant (eager,
-        // so it is materialized — and persisted — right here, exactly
-        // like the cache it replaces; executor loss would lose the
-        // truncated lineage, which local mode cannot hit and a cluster
-        // run would absorb by rerunning the component loop). LAZY, so
-        // the chg-count below materializes the checkpoint in the SAME
-        // job — eager checkpointing would run one extra full pass per
-        // round just to then count over the stored blocks.
-        val updated = updatedPlan.transform(Pins.pin)
-        retired += updated
-        // the count materializes `updated`, after which the prior
-        // round's CACHED frame (not the derived view) has no consumers —
-        // drop it NOW so one (id, label) frame is live, not diameter-many
-        changed = updated.filter(col("chg")).count()
-        release(hooked)
-        release(cached)
-        cached = updated
-        labels = updated.select(col("id"), col("label"))
-        iter += 1
-      }
-      require(changed == 0L,
-        s"connected components did not converge in $maxIter rounds")
-      use(labels)
-    } finally retired.foreach(release)
-  }
+    Pins.scoped(pairs.select(col("d1").as("src"), col("d2").as("dst"))
+      .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))) { edges =>
+      // round-iterated: each round's frame replaces the last one's, so
+      // these caches are released per round, not per scope
+      var cached = edges.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("label")).cache()
+      var labels = cached
+      // exception-path cleanup; the happy path unpersists eagerly below
+      // (a second unpersist of the same frame is a no-op)
+      val retired = scala.collection.mutable.ListBuffer[DataFrame](cached)
+      try {
+        var changed = 1L
+        var iter = 0
+        while (changed > 0 && iter < maxIter) {
+          val nbrMin = edges
+            .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
+            .groupBy(col("src")).agg(min(col("label")).as("nbr"))
+          // the change flag rides along in the SAME update pass (labels
+          // only ever decrease, so changed ⟺ the label decreased) — no
+          // extra updated×labels join per round just to count convergence
+          val hooked = labels
+            .join(nbrMin.select(col("src").as("id"), col("nbr")), Seq("id"), "left")
+            .select(col("id"),
+              least(col("label"), coalesce(col("nbr"), col("label"))).as("label"),
+              (coalesce(col("nbr"), col("label")) < col("label")).as("chg"))
+          // hooked feeds BOTH sides of the compress self-join below: cache
+          // it for the round so the hook join+agg (the heavy per-round
+          // work) computes once, not once per side — released as soon as
+          // the round's result materializes. (Round-7 profile: skipping
+          // this cache and recomputing the hook per side is ~35% SLOWER
+          // at sf0.1 — the cache write/read is cheaper than the join+agg.)
+          hooked.cache()
+          retired += hooked
+          // POINTER JUMP (compress): label ← label's label. Hooking alone
+          // moves the min one hop per round — diameter-many rounds, which
+          // a 100 TB corpus with chain-shaped near-dup relations (paged
+          // documents, serial boilerplate) can make adversarially deep.
+          // Compression squares the reach of every round instead:
+          // convergence in O(log diameter) rounds total. A label is
+          // always itself a node id (init: own id; hook: min of node
+          // ids; jump: a node's label), so the lookup is an equi-join of
+          // the label table against itself — the popular-label probe side
+          // is the dimension-join shape, no skew hazard on the build
+          // side. The left join keeps nodes whose label has no row only
+          // in theory (labels ⊆ ids by the invariant), and chg picks up
+          // compression moves so the fixpoint test stays exact.
+          val updatedPlan = hooked.as("h")
+            .join(hooked.select(col("id").as("lid"), col("label").as("llabel")).as("m"),
+              col("h.label") === col("m.lid"), "left")
+            .select(col("h.id").as("id"),
+              coalesce(col("m.llabel"), col("h.label")).as("label"),
+              (col("h.chg") ||
+                coalesce(col("m.llabel"), col("h.label")) < col("h.label")).as("chg"))
+          // caching truncates RECOMPUTATION but not the LOGICAL plan, and
+          // each round references `labels` FOUR times (hook's join+agg,
+          // compress's two sides) — uncheckpointed, the nested plan would
+          // grow 4^rounds and OOM the optimizer on the driver before any
+          // data moves. localCheckpoint EVERY round cuts the lineage to
+          // an RDD leaf, keeping per-round analysis cost constant (eager,
+          // so it is materialized — and persisted — right here, exactly
+          // like the cache it replaces; executor loss would lose the
+          // truncated lineage, which local mode cannot hit and a cluster
+          // run would absorb by rerunning the component loop). LAZY, so
+          // the chg-count below materializes the checkpoint in the SAME
+          // job — eager checkpointing would run one extra full pass per
+          // round just to then count over the stored blocks.
+          val updated = updatedPlan.transform(Pins.pin)
+          retired += updated
+          // the count materializes `updated`, after which the prior
+          // round's CACHED frame (not the derived view) has no consumers —
+          // drop it NOW so one (id, label) frame is live, not diameter-many
+          changed = updated.filter(col("chg")).count()
+          Pins.release(hooked)
+          Pins.release(cached)
+          cached = updated
+          labels = updated.select(col("id"), col("label"))
+          iter += 1
+        }
+        require(changed == 0L,
+          s"connected components did not converge in $maxIter rounds")
+        use(labels)
+      } finally retired.foreach(Pins.release)
+    }
 
   /** Fresh sink per [[clusterSummary]] call: a fixed per-process path
     * would let a second call silently invalidate the lazy frame an

@@ -59,19 +59,11 @@ object Graph extends QueryModule {
     * vocabulary — small by construction.) */
   def edges(events: DataFrame, topK: Int = 2,
       maxMembers: Int = DefaultMaxTokenMembers): DataFrame =
-    edgePlan(events, topK, maxMembers)._3
+    pairs(cap(topTokens(events, topK), maxMembers))
 
-  /** The edge construction, with its two REUSED intermediates exposed:
-    * `inc` feeds both cap stages (the broadcast `sizes` build and the
-    * thinning probe) and `capped` feeds both sides of the projection
-    * self-join — left uncached, each executes once per consumer side
-    * (for `inc` that is the full events scan + shuffle agg + per-user
-    * window, twice: the round-6 graph-family regression). Both are
-    * bounded — `inc` at topK rows per user, `capped` at maxMembers rows
-    * per token — so [[withEdges]] below loan-caches exactly these two. */
-  private def edgePlan(events: DataFrame, topK: Int, maxMembers: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val inc = topTokens(events, topK)
+  /** `topTokens` memberships capped at `maxMembers` per token: the
+    * broadcast sizes build and the thinning probe both read `inc`. */
+  private def cap(inc: DataFrame, maxMembers: Int): DataFrame = {
     val sizes = inc.groupBy(col("k")).agg(count(lit(1)).as("_ksz"))
     val ukey = Dedup.h60(col("user_id").cast("string"))
     val thinned = inc.join(broadcast(sizes), Seq("k"))
@@ -80,29 +72,32 @@ object Graph extends QueryModule {
       .select(col("user_id"), col("k"))
     val byTok = Window.partitionBy(col("k"))
       .orderBy(md5(col("user_id").cast("string")), col("user_id"))
-    val capped = thinned.withColumn("mrn", row_number().over(byTok))
+    thinned.withColumn("mrn", row_number().over(byTok))
       .filter(col("mrn") <= maxMembers)
       .select(col("user_id"), col("k"))
-    val e = capped.as("a").join(capped.as("b"), Seq("k"))
+  }
+
+  /** The projection self-join: both sides read `capped`. */
+  private def pairs(capped: DataFrame): DataFrame =
+    capped.as("a").join(capped.as("b"), Seq("k"))
       .filter(col("a.user_id") < col("b.user_id"))
       .select(col("a.user_id").as("u"), col("b.user_id").as("v"))
       .distinct()
-    (inc, capped, e)
-  }
 
-  /** Loan-scoped edge builder: caches the two bounded intermediates of
-    * [[edgePlan]], runs `f`, and unpersists them before returning —
-    * the module's queries keep the census/histogram loan discipline
-    * (no cached RDDs outlive the query). `f` must FULLY materialize
-    * whatever it returns (both query defs below return bounded local
-    * results); a lazily-returned frame would re-execute the then-
-    * uncached plan. */
+  /** Loan-scoped edge builder: [[edges]] with its two REUSED, bounded
+    * intermediates pinned for `f` — `inc` (topK rows per user) feeds
+    * both cap stages and `capped` (maxMembers rows per token) both sides
+    * of the projection; left unpinned, each executes once per consumer
+    * (for `inc` the full events scan + shuffle agg + per-user window,
+    * twice: the round-6 graph-family regression). `f` must FULLY
+    * materialize whatever it returns (both query defs below return
+    * bounded local results); a lazily-returned frame would re-execute
+    * the then-unpinned plan. */
   private[ext] def withEdges[T](events: DataFrame, topK: Int = 2,
-      maxMembers: Int = DefaultMaxTokenMembers)(f: DataFrame => T): T = {
-    val (inc, capped, e) = edgePlan(events, topK, maxMembers)
-    inc.cache(); capped.cache()
-    try f(e) finally { capped.unpersist(); inc.unpersist() }
-  }
+      maxMembers: Int = DefaultMaxTokenMembers)(f: DataFrame => T): T =
+    Pins.scoped(topTokens(events, topK)) { inc =>
+      Pins.scoped(cap(inc, maxMembers))(capped => f(pairs(capped)))
+    }
 
   /** Degree histogram: how many nodes have each degree. One pass over
     * the edge list — each edge contributes both endpoints via
@@ -129,11 +124,10 @@ object Graph extends QueryModule {
 
   /** Global triangle census: nodes, edges, wedges, triangles, and the
     * global clustering coefficient 3·triangles / wedges. The edge set
-    * is cached for the four aggregates and unpersisted before return
-    * (loan scope); each aggregate is a 1-row driver value. */
-  def triangleCensus(edgeDf: DataFrame): DataFrame = {
-    val e = edgeDf.cache()
-    try {
+    * is pinned for the four aggregates ([[Pins.scoped]]); each aggregate
+    * is a 1-row driver value. */
+  def triangleCensus(edgeDf: DataFrame): DataFrame =
+    Pins.scoped(edgeDf) { e =>
       // nodes + wedges from ONE job over the degree frame (a distinct
       // node IS a degree group, so counting groups replaces a separate
       // distinct+count action; wedges: Σ deg·(deg−1)/2, integer-exact)
@@ -151,8 +145,7 @@ object Graph extends QueryModule {
           if (wedges == 0) 0.0 else 3.0 * tri / wedges))
         .toDF("n_nodes", "n_edges", "n_wedges", "n_triangles", "clustering")
         .withColumn("clustering", round(col("clustering"), 4))
-    } finally { e.unpersist() }
-  }
+    }
 
   /** Q24 damping factor: floor(0.85 · 2^24). Derived, not a literal, so
     * the Spark plan and the oracle SQL interpolate the SAME constant. */
@@ -187,39 +180,40 @@ object Graph extends QueryModule {
     val spark = edgeDf.sparkSession
     // both directions in ONE scan of the edge plan (the degreeHistogram
     // explode idiom, not a two-scan union)
-    // src-partitioned BEFORE the cache: every iteration joins sym on
+    // src-partitioned BEFORE the pin: every iteration joins sym on
     // src and the InMemoryRelation carries the exchange's partitioning,
     // so the per-iteration sym-side shuffle (x3) and the deg
-    // aggregate's exchange collapse into the one cached repartition
+    // aggregate's exchange collapse into the one pinned repartition
     // (guide §2.4: two operations keyed the same way share one
     // exchange; here four do)
-    val sym = edgeDf.select(explode(array(
+    val bySrc = edgeDf.select(explode(array(
         struct(col("u").as("src"), col("v").as("dst")),
         struct(col("v").as("src"), col("u").as("dst")))).as("p"))
       .select(col("p.src"), col("p.dst"))
-      .repartition(col("src")).cache()
-    val deg = sym.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg")).cache()
-    try {
-      val nn = broadcast(deg.agg(count(lit(1)).as("n")))
-      var ranks = deg.crossJoin(nn) // 1-row broadcast scalar
-        .select(col("node"), col("deg"), col("n"),
-          expr(s"$PrFp div n").as("r"))
-      for (_ <- 1 to iters) {
-        val contrib = sym
-          .join(ranks.select(col("node").as("src"), col("deg"), col("r")), "src")
-          .groupBy(col("dst").as("node"))
-          .agg(sum(expr("r div deg")).as("s"))
-        ranks = deg.crossJoin(nn).join(contrib, Seq("node"), "left")
+      .repartition(col("src"))
+    Pins.scoped(bySrc) { sym =>
+      Pins.scoped(sym.groupBy(col("src").as("node"))
+          .agg(count(lit(1)).as("deg"))) { deg =>
+        val nn = broadcast(deg.agg(count(lit(1)).as("n")))
+        var ranks = deg.crossJoin(nn) // 1-row broadcast scalar
           .select(col("node"), col("deg"), col("n"),
-            (expr(s"${PrFp - PrDampingQ24} div n") +
-              expr(s"($PrDampingQ24 * coalesce(s, 0L)) div $PrFp")).as("r"))
+            expr(s"$PrFp div n").as("r"))
+        for (_ <- 1 to iters) {
+          val contrib = sym
+            .join(ranks.select(col("node").as("src"), col("deg"), col("r")), "src")
+            .groupBy(col("dst").as("node"))
+            .agg(sum(expr("r div deg")).as("s"))
+          ranks = deg.crossJoin(nn).join(contrib, Seq("node"), "left")
+            .select(col("node"), col("deg"), col("n"),
+              (expr(s"${PrFp - PrDampingQ24} div n") +
+                expr(s"($PrDampingQ24 * coalesce(s, 0L)) div $PrFp")).as("r"))
+        }
+        val top = ranks
+          .orderBy(col("r").desc, col("node").asc).limit(20)
+          .select(col("node"), col("deg").as("degree"), col("r").as("rank_q24"))
+        spark.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
       }
-      val top = ranks
-        .orderBy(col("r").desc, col("node").asc).limit(20)
-        .select(col("node"), col("deg").as("degree"), col("r").as("rank_q24"))
-      spark.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
-    } finally { deg.unpersist(); sym.unpersist() }
+    }
   }
 
   // DuckDB mirror of [[pageRank]]: the same integer recurrence with the
@@ -283,7 +277,7 @@ object Graph extends QueryModule {
     // into a flat RDD leaf in the same job, the next round's three
     // reads hit stored blocks, and per-round plan/analysis cost stays
     // constant. Prior rounds' checkpoint RDDs are released eagerly
-    // ([[Dedup.release]]) so exactly one edge frame is live at a time.
+    // ([[Pins.release]]) so exactly one edge frame is live at a time.
     var cur = edgeDf.transform(Pins.pin)
     var kept: DataFrame = null
     try {
@@ -297,9 +291,9 @@ object Graph extends QueryModule {
           .join(kept.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
           .select(col("u"), col("v")).transform(Pins.pin)
         val nEdges = try e1.count()
-          catch { case t: Throwable => Dedup.release(e1); throw t }
-        Dedup.release(kept); kept = null
-        Dedup.release(cur)
+          catch { case t: Throwable => Pins.release(e1); throw t }
+        Pins.release(kept); kept = null
+        Pins.release(cur)
         cur = e1
         (round.toLong, nKept, nEdges)
       }
@@ -307,8 +301,8 @@ object Graph extends QueryModule {
     } finally {
       // success path releases the final frame; a thrown round releases
       // whatever is still live (exactly one edge frame + maybe kept)
-      Dedup.release(cur)
-      if (kept != null) Dedup.release(kept)
+      Pins.release(cur)
+      if (kept != null) Pins.release(kept)
     }
   }
 
@@ -364,11 +358,10 @@ object Graph extends QueryModule {
       rounds: Int = LpRounds): DataFrame = {
     val spark = edgeDf.sparkSession
     // both directions in one scan of the edge plan (the pageRank idiom)
-    val sym = edgeDf.select(explode(array(
+    Pins.scoped(edgeDf.select(explode(array(
         struct(col("u").as("src"), col("v").as("dst")),
         struct(col("v").as("src"), col("u").as("dst")))).as("p"))
-      .select(col("p.src"), col("p.dst")).cache()
-    try {
+      .select(col("p.src"), col("p.dst"))) { sym =>
       // ROUND-ITERATED frame ⇒ lazy localCheckpoint + eager release
       // every round (the [[kcoreTrajectory]] idiom): plain reassignment
       // alone would nest round N's plan inside round N+1's, so the final
@@ -392,16 +385,16 @@ object Graph extends QueryModule {
             .transform(Pins.pin)
           // materialize the new round BEFORE releasing its ancestor
           try next.count()
-          catch { case t: Throwable => Dedup.release(next); throw t }
-          Dedup.release(labels)
+          catch { case t: Throwable => Pins.release(next); throw t }
+          Pins.release(labels)
           labels = next
         }
         val top = labels.groupBy(col("lbl").as("community"))
           .agg(count(lit(1)).as("n_members"))
           .orderBy(col("n_members").desc, col("community").asc).limit(20)
         spark.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
-      } finally Dedup.release(labels)
-    } finally sym.unpersist()
+      } finally Pins.release(labels)
+    }
   }
 
   // DuckDB mirror of [[labelPropagation]]: rounds unrolled as CTEs;

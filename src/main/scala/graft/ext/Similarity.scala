@@ -1714,64 +1714,63 @@ object Similarity extends QueryModule {
         val ccents = centroids(base.select(col("label"), col("v")), "label")
           .withColumnRenamed("label", "cell")
         // residual corpus: v − centroid[cell], cell kept for probing.
-        // Loan-cached: it feeds the codebook build, the encode pass, and
-        // the candidate list — uncached, the base scan + centroid agg +
-        // join would run once per consumer (the Graph.withEdges lesson);
-        // the ≤ 40-row result below is materialized eagerly inside the
-        // loan, then the cache is released.
-        val resid = base.join(broadcast(ccents), col("label") === col("cell"))
+        // Pinned for the query: it feeds the codebook build, the encode
+        // pass, and the candidate list — unpinned, the base scan +
+        // centroid agg + join would run once per consumer (the
+        // Graph.withEdges lesson); the ≤ 40-row result below is
+        // materialized inside the scope.
+        Pins.scoped(base.join(broadcast(ccents), col("label") === col("cell"))
           .select(col("vec_id"), col("cell"),
-            vsub(col("v"), col("centroid")).as("v"))
-          .cache()
-        // sub/cb pinned like annPqTop: without the pins each consumer
-        // re-ran the subvector fan-out and the full codebook training
-        // over the cached residuals
-        val sub = pqSubvectors(resid.select(col("vec_id"), col("v")))
-          .transform(Pins.pin)
-        val cb = pqTrainedCodebook(sub).transform(Pins.pin)
-        val codes = pqAssign(sub, cb)
-          .select(col("vec_id"), col("m"), col("code_id"))
-        val q = base.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("query_id"), col("v").as("qv"))
-        // rank cells per query (k cells: tiny window), keep nprobe,
-        // carry the probed cell's centroid for the query residual
-        val probed = q.join(broadcast(ccents), lit(true))
-          .withColumn("cell_sim",
-            graft.functions.VectorExpressions.vector_cosine(col("qv"), col("centroid")))
-          .withColumn("cell_rank", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-              .orderBy(col("cell_sim").desc, col("cell"))))
-          .filter(col("cell_rank") <= nprobe)
-          .select(col("query_id"), col("cell"),
-            vsub(col("qv"), col("centroid")).as("rv"))
-        // per-(query, probed cell) ADC table against the shared codebook
-        val qsub = probed.select(col("query_id"), col("cell"),
-            explode(array((0 until PqSubspaces).map(m =>
-              struct(lit(m).as("m"),
-                slice(col("rv"), m * PqSubDim + 1, PqSubDim).as("qsv"))): _*)).as("s"))
-          .select(col("query_id"), col("cell"), col("s.m").as("m"), col("s.qsv").as("qsv"))
-        val lut = qsub.join(broadcast(cb), Seq("m"))
-          .select(col("query_id"), col("cell"), col("m"), col("code_id"),
-            round(l2sq(col("qsv"), col("cv")) * FpScale).cast("long").as("pq"))
-        // candidates: members of the probed cells (codes join brings M rows)
-        val cand = resid.select(col("vec_id"), col("cell"))
-          .join(broadcast(probed.select(col("query_id"), col("cell"))), Seq("cell"))
-          .filter(col("vec_id") =!= col("query_id"))
-        val adc = cand.join(codes, Seq("vec_id"))
-          .join(broadcast(lut), Seq("query_id", "cell", "m", "code_id"))
-          .groupBy(col("query_id"), col("vec_id"))
-          .agg(sum(col("pq")).as("dsum"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            round(col("dsum").cast("double") / lit(FpScale.toDouble), 4)
-              .as("adc_dist"))
-        val ranked = graft.plans.TopK.perGroup(adc, 5, Seq("query_id"),
-            Seq(("adc_dist", true), ("neighbor_id", true)))
-          .select(col("query_id"), col("rank").cast("long").as("rank"),
-            col("neighbor_id"), col("adc_dist"))
-          .orderBy(col("query_id"), col("rank"))
-        try s.createDataFrame(
-          java.util.Arrays.asList(ranked.collect(): _*), ranked.schema)
-        finally resid.unpersist()
+            vsub(col("v"), col("centroid")).as("v"))) { resid =>
+          // sub/cb pinned like annPqTop: without the pins each consumer
+          // re-ran the subvector fan-out and the full codebook training
+          // over the cached residuals
+          val sub = pqSubvectors(resid.select(col("vec_id"), col("v")))
+            .transform(Pins.pin)
+          val cb = pqTrainedCodebook(sub).transform(Pins.pin)
+          val codes = pqAssign(sub, cb)
+            .select(col("vec_id"), col("m"), col("code_id"))
+          val q = base.filter(col("vec_id") < 8)
+            .select(col("vec_id").as("query_id"), col("v").as("qv"))
+          // rank cells per query (k cells: tiny window), keep nprobe,
+          // carry the probed cell's centroid for the query residual
+          val probed = q.join(broadcast(ccents), lit(true))
+            .withColumn("cell_sim",
+              graft.functions.VectorExpressions.vector_cosine(col("qv"), col("centroid")))
+            .withColumn("cell_rank", row_number().over(
+              org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
+                .orderBy(col("cell_sim").desc, col("cell"))))
+            .filter(col("cell_rank") <= nprobe)
+            .select(col("query_id"), col("cell"),
+              vsub(col("qv"), col("centroid")).as("rv"))
+          // per-(query, probed cell) ADC table against the shared codebook
+          val qsub = probed.select(col("query_id"), col("cell"),
+              explode(array((0 until PqSubspaces).map(m =>
+                struct(lit(m).as("m"),
+                  slice(col("rv"), m * PqSubDim + 1, PqSubDim).as("qsv"))): _*)).as("s"))
+            .select(col("query_id"), col("cell"), col("s.m").as("m"), col("s.qsv").as("qsv"))
+          val lut = qsub.join(broadcast(cb), Seq("m"))
+            .select(col("query_id"), col("cell"), col("m"), col("code_id"),
+              round(l2sq(col("qsv"), col("cv")) * FpScale).cast("long").as("pq"))
+          // candidates: members of the probed cells (codes join brings M rows)
+          val cand = resid.select(col("vec_id"), col("cell"))
+            .join(broadcast(probed.select(col("query_id"), col("cell"))), Seq("cell"))
+            .filter(col("vec_id") =!= col("query_id"))
+          val adc = cand.join(codes, Seq("vec_id"))
+            .join(broadcast(lut), Seq("query_id", "cell", "m", "code_id"))
+            .groupBy(col("query_id"), col("vec_id"))
+            .agg(sum(col("pq")).as("dsum"))
+            .select(col("query_id"), col("vec_id").as("neighbor_id"),
+              round(col("dsum").cast("double") / lit(FpScale.toDouble), 4)
+                .as("adc_dist"))
+          val ranked = graft.plans.TopK.perGroup(adc, 5, Seq("query_id"),
+              Seq(("adc_dist", true), ("neighbor_id", true)))
+            .select(col("query_id"), col("rank").cast("long").as("rank"),
+              col("neighbor_id"), col("adc_dist"))
+            .orderBy(col("query_id"), col("rank"))
+          s.createDataFrame(
+            java.util.Arrays.asList(ranked.collect(): _*), ranked.schema)
+        }
       },
       Some(s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
               |ccents AS (
@@ -2184,23 +2183,21 @@ object Similarity extends QueryModule {
     val e = e0.filter(col("vec_id").isNotNull)
       .select(col("vec_id"), vecD(col("embedding")).as("v"))
     val qv = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
-    val cands = e.filter(col("vec_id") =!= 0)
+    val top = e.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(qv))
       .select(col("vec_id").as("id"),
         round(graft.functions.VectorExpressions.vector_cosine(
           col("qv"), col("v")), 4).as("rel"), col("v"))
       .filter(col("rel").isNotNull)
       .orderBy(col("rel").desc, col("id")).limit(pool)
-      .cache() // ≤ pool rows by construction
-    try {
-      val ps = cands.select(col("id").as("ida"), col("v").as("va"))
+    // both pins are bounded: ≤ pool candidates, ≤ pool² sims
+    Pins.scoped(top) { cands =>
+      Pins.scoped(cands.select(col("id").as("ida"), col("v").as("va"))
         .join(cands.select(col("id").as("idb"), col("v").as("vb")),
           col("ida") =!= col("idb"))
         .select(col("ida"), col("idb"),
           round(graft.functions.VectorExpressions.vector_cosine(
-            col("va"), col("vb")), 4).as("s"))
-        .cache() // ≤ pool² rows
-      try {
+            col("va"), col("vb")), 4).as("s"))) { ps =>
         val picked = scala.collection.mutable.Buffer[(Long, Long, Double, Double)]()
         for (r <- 1 to k) {
           val selIds = picked.map(_._2).toSeq
@@ -2223,8 +2220,8 @@ object Similarity extends QueryModule {
               best(0).getDouble(2)))
         }
         picked.toSeq.toDF("rank", "id", "rel", "score")
-      } finally { ps.unpersist(); () }
-    } finally { cands.unpersist(); () }
+      }
+    }
   }
 
   /** DuckDB twin of [[mmrRerank]]: candidates + pairwise sims, then the

@@ -1146,7 +1146,7 @@ object TrainPrep extends QueryModule {
             .as("tokens_per_word"))
         .orderBy(col("source"))
       spark.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
-    } finally Dedup.release(fin)
+    } finally Pins.release(fin)
   }
 
   /** BPE merge-iteration body (injectable for specs — see the
@@ -1219,7 +1219,7 @@ object TrainPrep extends QueryModule {
     val spark = documents.sparkSession
     import spark.implicits._
     val (rows, fin) = bpeLoop(documents, rounds)
-    Dedup.release(fin)
+    Pins.release(fin)
     rows.toDF("round", "left_sym", "right_sym", "pair_count", "toks_after")
   }
 
@@ -1242,12 +1242,12 @@ object TrainPrep extends QueryModule {
         .orderBy(col("token_count").desc, col("symbol").asc)
         .limit(topK)
       spark.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
-    } finally Dedup.release(fin)
+    } finally Pins.release(fin)
   }
 
   /** The shared BPE training loop: returns the per-round trajectory rows
     * AND the final (word, freq, symbols) state as a live checkpointed
-    * frame the CALLER must `Dedup.release`. */
+    * frame the CALLER must `Pins.release`. */
   private def bpeLoop(documents: DataFrame, rounds: Int)
       : (Seq[(Long, String, String, Long, Long)], DataFrame) = {
     require(rounds <= MaxBpeRounds,
@@ -1315,8 +1315,8 @@ object TrainPrep extends QueryModule {
             try applied
               .agg(sum(col("freq") * size(col("s")).cast("long")).as("t"))
               .head().getLong(0)
-            catch { case t: Throwable => Dedup.release(applied); throw t }
-          Dedup.release(words)
+            catch { case t: Throwable => Pins.release(applied); throw t }
+          Pins.release(words)
           words = applied
           rows += ((r.toLong, ma, mb, cnt, toksAfter))
           r += 1
@@ -1324,7 +1324,7 @@ object TrainPrep extends QueryModule {
       }
       (rows.toSeq, words)
     } catch {
-      case t: Throwable => Dedup.release(words); throw t
+      case t: Throwable => Pins.release(words); throw t
     }
   }
 

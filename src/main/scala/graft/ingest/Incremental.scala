@@ -62,9 +62,7 @@ object Incremental {
         // write wins per event_id; replays converge).
         // three consumers below (date probe, anti-join, write): pin so
         // the batch's parse work runs once per trigger
-        val deduped = Parse.dedupEvents(batch)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
+        graft.ext.Pins.scoped(Parse.dedupEvents(batch)) { deduped =>
           // the guard read is PRUNED to the batch's own date span: the
           // sink is date-partitioned and a replayed batch re-lands on
           // its own dates, so the anti-join scans only partitions the
@@ -88,8 +86,7 @@ object Incremental {
               if (nullDates.nonEmpty) in || col("block_date").isNull else in
             }
           sink.write(deduped, prune)
-        } finally deduped.unpersist()
-        ()
+        }
       }
       .start()
 }

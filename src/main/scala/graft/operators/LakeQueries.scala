@@ -489,49 +489,47 @@ object LakeQueries extends QueryModule {
         // o_custkey joins the schema as the second ZORDER dimension;
         // pinned — the 4 stripe appends and the CDC batch would
         // otherwise each re-scan the source parquet
-        val b = Tables.orders(s, dir).select(col("o_orderkey"),
-          col("o_custkey"), col("o_orderstatus"), col("o_totalprice"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-        // interleaved key stripes: every append's file spans the whole
-        // key range, so maintenance cannot cheat via disjoint spans
-        (0L to 3L).foreach { i =>
-          MergeTable.append(s, root,
-            b.filter(pmod(col("o_orderkey"), lit(4L)) === i), "o_orderkey")
-          ()
+        graft.ext.Pins.scoped(Tables.orders(s, dir).select(col("o_orderkey"),
+          col("o_custkey"), col("o_orderstatus"), col("o_totalprice"))) { b =>
+          // interleaved key stripes: every append's file spans the whole
+          // key range, so maintenance cannot cheat via disjoint spans
+          (0L to 3L).foreach { i =>
+            MergeTable.append(s, root,
+              b.filter(pmod(col("o_orderkey"), lit(4L)) === i), "o_orderkey")
+            ()
+          }
+          MergeTable.merge(s, root, cdcBatch(b), "o_orderkey",
+            deleteCol = Some("deleted"))
+
+          val before = summarize(MergeTable.snapshot(s, root)).collect().toSeq
+          val filesBefore = MergeTable.liveFiles(s, root).count()
+          val folded = MergeTable.compactFiles(s, root, "o_orderkey")
+          // ZORDER rewrites every live file, so the entire pre-ZORDER
+          // live set becomes vacuum-eligible garbage at floor = zv
+          // (one manifest read serves both the fold count and the set)
+          val preZorder = MergeTable.liveFiles(s, root)
+            .select(col("file")).collect().map(_.getString(0)).toIndexedSeq
+          val filesAfterFold = preZorder.size.toLong
+          val zv = MergeTable.optimizeZorder(s, root, "o_orderkey",
+            "o_orderkey", "o_custkey")
+          MergeTable.vacuum(s, root, zv)
+
+          val fs = new org.apache.hadoop.fs.Path(root)
+            .getFileSystem(s.sparkContext.hadoopConfiguration)
+          val garbageGone = preZorder.forall(f =>
+            !fs.exists(new org.apache.hadoop.fs.Path(s"$root/$f")))
+          val oldReadRefused =
+            try { MergeTable.snapshot(s, root, Some(zv - 1)); false }
+            catch { case _: IllegalArgumentException => true }
+          val after = summarize(MergeTable.snapshot(s, root)).collect().toSeq
+
+          summarize(MergeTable.snapshot(s, root))
+            .withColumn("files_folded",
+              lit(folded.nonEmpty && filesAfterFold < filesBefore))
+            .withColumn("state_unchanged", lit(before == after))
+            .withColumn("old_read_refused", lit(oldReadRefused))
+            .withColumn("garbage_deleted", lit(garbageGone))
         }
-        MergeTable.merge(s, root, cdcBatch(b), "o_orderkey",
-          deleteCol = Some("deleted"))
-
-        val before = summarize(MergeTable.snapshot(s, root)).collect().toSeq
-        val filesBefore = MergeTable.liveFiles(s, root).count()
-        val folded = MergeTable.compactFiles(s, root, "o_orderkey")
-        // ZORDER rewrites every live file, so the entire pre-ZORDER
-        // live set becomes vacuum-eligible garbage at floor = zv
-        // (one manifest read serves both the fold count and the set)
-        val preZorder = MergeTable.liveFiles(s, root)
-          .select(col("file")).collect().map(_.getString(0)).toIndexedSeq
-        val filesAfterFold = preZorder.size.toLong
-        val zv = MergeTable.optimizeZorder(s, root, "o_orderkey",
-          "o_orderkey", "o_custkey")
-        MergeTable.vacuum(s, root, zv)
-
-        val fs = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val garbageGone = preZorder.forall(f =>
-          !fs.exists(new org.apache.hadoop.fs.Path(s"$root/$f")))
-        val oldReadRefused =
-          try { MergeTable.snapshot(s, root, Some(zv - 1)); false }
-          catch { case _: IllegalArgumentException => true }
-        val after = summarize(MergeTable.snapshot(s, root)).collect().toSeq
-
-        summarize(MergeTable.snapshot(s, root))
-          .withColumn("files_folded",
-            lit(folded.nonEmpty && filesAfterFold < filesBefore))
-          .withColumn("state_unchanged", lit(before == after))
-          .withColumn("old_read_refused", lit(oldReadRefused))
-          .withColumn("garbage_deleted", lit(garbageGone))
-        } finally { b.unpersist(); () }
       },
       Some(s"""WITH upd AS (
              |  SELECT o_orderkey, 'U' AS o_orderstatus,

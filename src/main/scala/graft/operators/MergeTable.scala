@@ -823,47 +823,26 @@ object MergeTable {
     * with nulls for pre-evolution files — Delta's `mergeSchema`
     * semantics. Narrowing and retyping stay refused either way.
     *
-    * CALLER CONTRACT for pre-persisted batches: merge evaluates the
-    * batch three times and relies on all three reads seeing ONE
-    * materialization (it persists MEMORY_AND_DISK itself when the
-    * batch arrives unpersisted). A caller who persists first keeps
-    * their own cache, but a MEMORY_ONLY level is only safe for
-    * DETERMINISTIC batches: under memory pressure evicted blocks
-    * recompute, and a nondeterministic source (sample,
-    * order-dependent dropDuplicates, a re-read of a mutating
-    * upstream) can then show different keys to the file-skipping pass
-    * and the survivor anti-join — the torn-merge hazard. Persist
-    * nondeterministic batches with a disk-backed level (or let merge
-    * pin them). */
+    * CALLER CONTRACT for pre-persisted batches: merge reads the batch
+    * three times and relies on one materialization; an unpersisted batch
+    * is [[graft.ext.Pins.scoped]] for the call. A caller's MEMORY_ONLY
+    * persist is only safe for DETERMINISTIC batches: evicted blocks
+    * recompute, and a nondeterministic source (sample, order-dependent
+    * dropDuplicates, a re-read of a mutating upstream) can then show
+    * different keys to the file-skipping pass and the survivor
+    * anti-join — the torn-merge hazard. Persist those with a
+    * disk-backed level, or let merge pin them. */
   def merge(spark: SparkSession, root: String, updates0: DataFrame,
       key: String, deleteCol: Option[String] = None,
       evolveSchema: Boolean = false): Long = {
-    // Pin the batch: the plan below evaluates it three times (the
-    // file-skip probe, which also carries the dup check; the survivor
-    // anti-join; the written union). A
-    // nondeterministic source (sample, order-dependent dropDuplicates,
-    // a re-read of a mutating upstream) evaluated independently could
-    // show DIFFERENT keys to the skipping pass and the anti-join —
-    // leaving a matched key unremoved while its replacement lands.
-    // Persisting makes all four consumers read one materialization
-    // (and drops the 4× recompute on the hot streaming-CDC path).
-    // A caller-persisted batch is already pinned: re-persisting at a
-    // different level would throw, and unpersisting in finally would
-    // silently drop the CALLER's cache — so persist only when the
-    // batch arrives unpersisted, and release only what merge pinned.
-    val wePin =
-      updates0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    if (wePin)
-      updates0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val v = mergePinned(spark, root, updates0, key, deleteCol, evolveSchema)
-      // after the merge landed: a table past the planning bound folds
-      // itself instead of only warning ([[maybeAutoCompact]]). The fold
-      // is a separate version on purpose — time travel to `v` (this
-      // merge's exact state) stays answerable.
-      maybeAutoCompact(spark, root, key, v)
-      v
-    } finally if (wePin) updates0.unpersist()
+    val v = graft.ext.Pins.scoped(updates0)(
+      mergePinned(spark, root, _, key, deleteCol, evolveSchema))
+    // after the merge landed: a table past the planning bound folds
+    // itself instead of only warning ([[maybeAutoCompact]]). The fold
+    // is a separate version on purpose — time travel to `v` (this
+    // merge's exact state) stays answerable.
+    maybeAutoCompact(spark, root, key, v)
+    v
   }
 
   private def mergePinned(spark: SparkSession, root: String,

@@ -359,17 +359,16 @@ object StreamAnalytics {
         // the merge). With the pin, the guard's partitions land in
         // cache and the merge's fold reads them back — each stateful
         // operator executes once per trigger (guide §1.2).
-        batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (!batch.isEmpty) {
-            graft.operators.MergeTable.merge(batch.sparkSession, root,
-              graft.operators.Upsert.lastWriteWins(batch, key, versionCol),
+        graft.ext.Pins.scoped(batch) { pinned =>
+          if (!pinned.isEmpty) {
+            graft.operators.MergeTable.merge(pinned.sparkSession, root,
+              graft.operators.Upsert.lastWriteWins(pinned, key, versionCol),
               key, deleteCol, evolveSchema = evolveSchema)
             if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
               graft.operators.MergeTable.compactFiles(
-                batch.sparkSession, root, key)
+                pinned.sparkSession, root, key)
           }
-        } finally { batch.unpersist(); () }
+        }
         ()
       }
       .trigger(trigger) // AvailableNow = drain-and-stop (batch/test);

@@ -62,6 +62,14 @@ class QueriesSpec extends SparkSpec {
     SparkEntry.oracleSql.keys.foreach(k => assert(qs.contains(k), s"oracle without query: $k"))
   }
 
+  test("queries over scoped pins leave no pin behind") {
+    Seq("lake_maintenance", "stream_cdc_snapshot", "sim_mmr_rerank").foreach { q =>
+      val before = pins
+      assert(run(q).collect().nonEmpty, q)
+      assertNoNewPins(before)
+    }
+  }
+
   test("period counts are monotone: today ≤ week ≤ month ≤ total") {
     val r = run("evt_volume_summary").collect()(0)
     val (total, today, week, month) =

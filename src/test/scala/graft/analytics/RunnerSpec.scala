@@ -4,7 +4,7 @@ import graft.SparkSpec
 import graft.ingest.{Backfill, Parse}
 import java.nio.file.Files
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerStageSubmitted}
-import org.apache.spark.sql.{DataFrame, Row, TestCacheManager}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -121,19 +121,6 @@ class RunnerSpec extends SparkSpec {
       .filter(_.getName.startsWith("analytics-refresh-"))
     pool.foreach(_.join(10000L))
     pool.filter(_.isAlive)
-  }
-
-  /** The session's pins: persistent RDD ids and cached plans. The session
-    * is shared across suites, so a refresh is judged against a snapshot
-    * taken before it, not against an empty cache. */
-  private def pins: (Set[Int], Int) =
-    (spark.sparkContext.getPersistentRDDs.keySet.toSet, TestCacheManager.entries(spark))
-
-  /** The session holds no pin that it did not hold at `before`. */
-  private def assertNoNewPins(before: (Set[Int], Int)): Unit = {
-    val (rdds, entries) = pins
-    assert(rdds.subsetOf(before._1), s"persistent RDDs left behind: ${rdds -- before._1}")
-    assert(entries <= before._2, s"cached plans: $entries, before: ${before._2}")
   }
 
   /** Each table runAll wrote under `out` equals its own function's result. */

@@ -92,12 +92,13 @@ class DedupProps extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L),
       (10L, 11L), (11L, 12L), (12L, 13L), (10L, 13L)).toDF("d1", "d2")
     spark.catalog.clearCache()
+    val before = pins
     val labels = Dedup.withComponents(pairs)(
       _.as[(Long, Long)].collect().toMap)
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L))
     // the loan unpersists every per-round cache
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assertNoNewPins(before)
   }
 
   test("connected components: diameter-5000 chain converges in O(log d) rounds") {
@@ -109,6 +110,7 @@ class DedupProps extends SparkSpec {
     // localCheckpoint lineage truncation that keeps planning flat
     val pairs = (0L until 5000L).map(i => (i, i + 1)).toDF("d1", "d2")
     spark.catalog.clearCache()
+    val before = pins
     val t0 = System.nanoTime()
     val labels = Dedup.withComponents(pairs, maxIter = 30)(
       _.as[(Long, Long)].collect().toMap)
@@ -117,8 +119,7 @@ class DedupProps extends SparkSpec {
     // log-diameter rounds + truncation keep the loop interactive
     assert(sec < 120.0, s"diameter-5000 CC took ${sec}s")
     // the loan releases every per-round cache AND checkpoint RDD
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-      s"leaked: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
+    assertNoNewPins(before)
   }
 
   test("clusterSummary stays distributed at 10^4 clusters (no driver array)") {
@@ -129,6 +130,7 @@ class DedupProps extends SparkSpec {
     // from driver rows — and the loan must still release every cache.
     val pairs = (0L until 10000L).map(i => (2 * i, 2 * i + 1)).toDF("d1", "d2")
     spark.catalog.clearCache()
+    val before = pins
     val summary = Dedup.clusterSummary(spark, pairs, maxIter = 30)
     val plan = summary.queryExecution.optimizedPlan.collectLeaves()
     assert(plan.forall(
@@ -138,8 +140,7 @@ class DedupProps extends SparkSpec {
     assert(summary.filter($"n_docs" =!= 2L).count() == 0L)
     // min-label convention: cluster_id = even member of each pair
     assert(summary.filter($"cluster_id" % 2 =!= 0L).count() == 0L)
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-      s"leaked: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
+    assertNoNewPins(before)
   }
 
   test("connected components agree with union-find ground truth on random graphs") {

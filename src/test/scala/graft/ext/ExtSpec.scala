@@ -403,11 +403,11 @@ class ExtSpec extends SparkSpec {
     // jaccard query must not outlive the call — library users don't run
     // clearCache() after every invocation
     spark.catalog.clearCache()
+    val before = pins
     CorpusPipeline.withCleanedDocs(spark, Sf)(_.count())
     run("corpus_clean_summary").collect()
     run("dedup_jaccard_pairs").collect()
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-      s"leaked cached RDDs: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
+    assertNoNewPins(before)
   }
 
   test("SQ8 codes: 0..255 integer range, constant dimension maps to 0") {

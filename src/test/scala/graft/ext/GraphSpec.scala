@@ -74,15 +74,17 @@ class GraphSpec extends SparkSpec {
   }
 
   test("census leaves no cached RDDs behind (loan-scoped cache)") {
+    val before = pins
     Graph.triangleCensus(Graph.edges(planted)).collect()
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assertNoNewPins(before)
   }
 
   test("withEdges releases its intermediate caches and matches edges()") {
+    val before = pins
     val viaLoan = Graph.withEdges(planted) { e =>
       e.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assertNoNewPins(before)
     val direct = Graph.edges(planted)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(viaLoan == direct)
@@ -132,13 +134,14 @@ class GraphSpec extends SparkSpec {
   test("pageRank on a path graph ranks the center above the leaves") {
     // 1–2–3: node 2 has both in-links; exact model agreement again
     val edges = Set((1L, 2L), (2L, 3L))
+    val before = pins
     val got = Graph.pageRank(planted.sparkSession
         .createDataFrame(edges.toSeq).toDF("u", "v"))
       .collect().map(r => (r.getLong(0), r.getLong(2)))
     val want = prModel(edges, Graph.PrIters)
     got.foreach { case (node, rq24) => assert(rq24 == want(node)) }
     assert(got.head._1 == 2L) // center ranked first
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty) // loan released
+    assertNoNewPins(before) // loan released
   }
 
   test("k-core peel removes the fringe and keeps the planted core") {
@@ -181,11 +184,12 @@ class GraphSpec extends SparkSpec {
     val k4a = for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b)
     val k4b = for (a <- 5L to 8L; b <- (a + 1) to 8L) yield (a, b)
     val edges = (k4a ++ k4b ++ Seq((4L, 5L))).toDF("u", "v")
+    val before = pins
     val out = Graph.labelPropagation(edges)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(out.toSeq == Seq((1L, 4L), (5L, 4L)))
     // every round pins its labels and releases the previous round's
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty, "label propagation leaked its loan")
+    assertNoNewPins(before)
   }
 
   test("label propagation is deterministic on the oscillating path (fixed rounds)") {

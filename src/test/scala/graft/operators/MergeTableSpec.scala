@@ -1,8 +1,12 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 
 class MergeTableSpec extends SparkSpec {
   import spark.implicits._
@@ -90,6 +94,39 @@ class MergeTableSpec extends SparkSpec {
       MergeTable.snapshot(spark, root, Some(latest - 1))
     }
     ()
+  }
+
+  test("concurrent merges of one path-backed batch pin apart, and no pin outlives its merge") {
+    val base = java.nio.file.Files.createTempDirectory("graft-mt-pins").toString
+    val staging = s"$base/staging"
+    (0L until 3000L).map(k => (k, s"u$k")).toDF("k", "v").repartition(4)
+      .write.parquet(staging)
+    def read = spark.read.parquet(staging)
+    // every other key matches a table row, the rest insert
+    val seed = (0L until 6000L by 2).map(k => (k, s"v$k")).toDF("k", "v")
+    val wh = graft.plans.GraftCatalog.ensure(spark,
+      java.nio.file.Files.createTempDirectory("graft-mt-wh").toString)
+    val (alone, a, b, c) = (s"$base/alone", s"$base/a", s"$base/b", s"$wh/pins/c")
+    Seq(alone, a, b, c).foreach(MergeTable.append(spark, _, seed, "k"))
+    def state(root: String): Map[Row, Int] = MergeTable.snapshot(spark, root)
+      .collect().groupBy(identity).map { case (r, rs) => r -> rs.length }
+    MergeTable.merge(spark, alone, read, "k")
+
+    val before = pins
+    val running = Future.sequence(Seq(
+      Future(MergeTable.merge(spark, a, read, "k")),
+      Future(MergeTable.merge(spark, b, read, "k")),
+      Future(spark.sql(
+        s"""MERGE INTO graft.pins.c AS t USING parquet.`$staging` AS s ON t.k = s.k
+           |WHEN MATCHED THEN UPDATE SET *
+           |WHEN NOT MATCHED THEN INSERT *""".stripMargin).head().getLong(0))))
+    // while they run, no other plan over the staging path matches a pin
+    val seen = Iterator.continually { val l = read.storageLevel; Thread.sleep(20); l }
+      .takeWhile(_ => !running.isCompleted).toSet
+    Await.result(running, 3.minutes)
+    assert(seen == Set(StorageLevel.NONE))
+    Seq(a, b, c).foreach(r => assert(state(r) == state(alone), r))
+    assertNoNewPins(before)
   }
 
   test("merge = update matched, insert unmatched, delete flagged") {
