@@ -28,6 +28,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      val pinned = spark.sparkContext.getPersistentRDDs.keySet
       try {
         // drop any STALE dump first: a query that fails below must read
         // as "no spark output" downstream, not as its previous run's
@@ -46,6 +47,10 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      // a pin the query left behind is a leak that clearCache would hide
+      val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !pinned(id) }
+      if (left.nonEmpty)
+        System.err.println(s"[verify] $name left persistent RDDs: ${left.values.mkString(", ")}")
       // per-query caches must not leak across entries; best-effort for
       // the same reason the query itself is — one degraded entry must
       // not abort the remaining queries' correctness dumps

@@ -26,13 +26,15 @@ import org.apache.spark.sql.functions._
   * At cluster scale the fetcher partition count bounds concurrent RPC
   * load exactly like the reference's `--workers` (rate limiting is a
   * source property, S7); replays and overlapping re-runs converge
-  * because already-loaded slots are filtered out before the write.
+  * because [[EventSink.write]] drops every event the sink already holds
+  * before the append.
   */
 object Backfill {
 
   /** Pluggable block fetcher: slot → block JSON (None ⇒ missing slot,
     * warn-and-skip semantics, backfill.rs:111-113). The live RPC client
-    * would implement this; tests use [[syntheticBlock]]. */
+    * implements it as [[graft.sources.RpcClient.fetcher]]; tests use
+    * [[syntheticBlock]]. */
   type BlockFetcher = Long => Option[String]
 
   /** Deterministic synthetic block standing in for the RPC source at

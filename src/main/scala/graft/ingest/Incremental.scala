@@ -16,9 +16,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * deliberately relaxed — its own idempotent upsert makes order
   * irrelevant, which this sink exploits for parallelism (§7.5).
   *
-  * The source here is a drop-directory of block JSON files (slot = file
-  * content); a live deployment swaps in a DataSource V2 wrapping the RPC
-  * with slots as offsets — the transform/sink pipeline is identical.
+  * [[start]] reads a drop-directory of block JSON files (slot = file
+  * content); the `incremental-blocks` verb reads the RPC through the
+  * DataSource V2 [[graft.sources.BlockSource]], slots as offsets. Both
+  * feed the same transform/sink pipeline, [[startFromRaw]].
   */
 object Incremental {
 

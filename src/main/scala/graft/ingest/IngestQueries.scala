@@ -146,7 +146,7 @@ object IngestQueries extends QueryModule {
     s.read.parquet(TelemetryPath)
   }
 
-  // DuckDB mirror of Parse.parseBlocks + the per-tx signature guard.
+  // DuckDB mirror of Parse's block (blockTime) and signed-transaction guards.
   private[graft] val dTxs =
     s"""blocks AS (
        |  SELECT slot, block_json FROM read_parquet('$RawBlocksPath/*.parquet')

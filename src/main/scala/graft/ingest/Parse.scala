@@ -7,13 +7,16 @@ import org.apache.spark.sql.functions._
 /** Block JSON → canonical events: the "T" of the reference ETL
   * (/root/reference/src/parsers.rs:10-30,44-100), Spark-first.
   *
-  * The reference walks each block imperatively; here the fan-out is three
-  * declarative explode branches over the same parsed block DataFrame —
-  * tx events, instruction events, token-transfer events — unioned by name
-  * (SURVEY.md §2.10: no UDTF needed). Catalyst prunes each branch to the
-  * columns it touches, and the whole pipeline is codegen'd; per-record
-  * tolerance (parsers.rs:22-26,83-91) comes from PERMISSIVE JSON parsing
-  * (malformed blocks/txs yield nulls that the branches filter out).
+  * Each block's JSON is parsed once ([[parseBlocks]]), and every reader
+  * starts from the same two guards, each written once: a block counts
+  * when it carries a `blockTime` ([[validBlock]], parsers.rs:33-41), a
+  * transaction when it carries a signature ([[signed]], parsers.rs:50-52).
+  * The fan-out is single-pass: each transaction's tx, instruction and
+  * token-transfer events form one concatenated array, exploded once
+  * (SURVEY.md §2.10: no UDTF needed), and the whole pipeline is
+  * codegen'd; per-record tolerance (parsers.rs:22-26,83-91) comes from
+  * PERMISSIVE JSON parsing (malformed blocks/txs yield nulls that the
+  * guards drop).
   */
 object Parse {
 
@@ -31,47 +34,58 @@ object Parse {
   def walletFromKey(k: Column): Column =
     coalesce(get_json_object(k, "$.pubkey"), k)
 
-  /** raw (slot, block_json) rows → parsed block rows. Blocks missing
-    * `blockTime` are dropped (whole-block parse error path,
-    * parsers.rs:33-41). */
+  /** raw (slot, block_json) rows → (slot, b) rows, each block parsed
+    * once. Invalid blocks stay in: the readers below drop them through
+    * [[validBlock]], and [[parseErrors]] reports them. */
   def parseBlocks(raw: DataFrame): DataFrame =
     raw.select(col("slot"), from_json(col("block_json"), blockSchema).as("b"))
-      .filter(col("b").isNotNull && col("b.blockTime").isNotNull)
 
-  /** Parsed blocks → canonical event rows (all three event families,
-    * deduplicated on the deterministic id — replay-safe by construction,
-    * warehouse.rs:227-229).
-    *
-    * SINGLE-PASS fan-out: each transaction builds its tx-event +
-    * instruction-events + transfer-events as one concatenated array,
-    * exploded once — one scan of the source, where a three-branch union
-    * would scan (and for a live RPC-backed source, re-FETCH) it three
-    * times (SURVEY.md §2.10's "single-pass fan-out" option, done with
-    * array higher-order functions instead of a custom Generator).
-    */
-  def toEvents(blocks: DataFrame, dedup: Boolean = true): DataFrame = {
-    val base = blocks.select(
-      col("slot"),
+  /** The block guard: a block missing `blockTime` is dropped whole
+    * (parsers.rs:33-41); an unparseable block has a null `b`, so its
+    * `blockTime` is null too. It is evaluated inside an explode, never
+    * in a Filter: Catalyst pushes a Filter under the parse and gives it
+    * `from_json`s of its own. */
+  private val validBlock: Column = col("b.blockTime").isNotNull
+
+  // try_element_at, not element_at — ANSI mode (Spark 4 default)
+  // throws on out-of-bounds access of an empty signatures array.
+  private def firstSig(tx: Column): Column =
+    try_element_at(tx("transaction")("signatures"), lit(1))
+
+  /** The transaction guard: a transaction must carry a signature
+    * (parsers.rs:50-52). */
+  private def signed(tx: Column): Column = tx.isNotNull && firstSig(tx).isNotNull
+
+  /** One row per transaction entry of a valid block. */
+  private def blockTxs(blocks: DataFrame): DataFrame =
+    blocks.select(col("slot"),
       timestamp_seconds(col("b.blockTime")).as("block_time"),
-      explode(col("b.transactions")).as("tx"))
-      // malformed tx tolerance: must carry a signature (parsers.rs:50-52);
-      // try_element_at, not element_at — ANSI mode (Spark 4 default)
-      // throws on out-of-bounds access of an empty signatures array.
-      .filter(col("tx").isNotNull &&
-        try_element_at(col("tx.transaction.signatures"), lit(1)).isNotNull)
+      explode(when(validBlock, col("b.transactions"))).as("tx"))
+
+  /** The per-transaction base every event and typed fact starts from:
+    * one row per signed transaction of a valid block, with its parsed
+    * struct, success flag (parsers.rs:59-62) and first-signer wallet. */
+  private def txBase(blocks: DataFrame): DataFrame =
+    blockTxs(blocks).filter(signed(col("tx")))
       .select(col("slot"), col("block_time"), col("tx"),
-        try_element_at(col("tx.transaction.signatures"), lit(1)).as("sig"),
+        firstSig(col("tx")).as("sig"),
         col("tx.meta.err").isNull.as("success"),
         walletFromKey(try_element_at(col("tx.transaction.message.accountKeys"), lit(1)))
           .as("wallet"))
 
+  /** Parsed blocks → canonical event rows (all three event families,
+    * deduplicated on the deterministic id — replay-safe by construction,
+    * warehouse.rs:227-229). The single-pass fan-out reads the source
+    * once, where a three-branch union would scan (and for a live
+    * RPC-backed source, re-FETCH) it three times (SURVEY.md §2.10). */
+  def toEvents(blocks: DataFrame, dedup: Boolean = true): DataFrame = {
     val tokenList = TokenPrograms.map(p => s"'$p'").mkString(", ")
     // tx event (parsers.rs:44-79) + instruction events classified by the
     // token-program allow-list (parsers.rs:126-161) + one event per
     // post-token-balance with a mint, index offset 10000 as the
-    // transfer-id namespace (parsers.rs:163-203). Null guards mirror the
-    // per-record tolerance of the branch form; indices are pre-filter
-    // positions so event ids are stable.
+    // transfer-id namespace (parsers.rs:163-203). Null guards give
+    // per-record tolerance; indices are pre-filter positions so event ids
+    // are stable.
     val eventsArray = expr(
       s"""concat(
          |  array(named_struct(
@@ -107,20 +121,16 @@ object Parse {
          |      'event_type', x.event_type, 'raw_payload', x.raw_payload)), array())
          |)""".stripMargin)
 
-    val events = base
+    val events = txBase(blocks)
       .select(col("slot"), col("block_time"), col("sig"),
         explode(eventsArray).as("ev"))
-      .select(col("slot"), col("block_time"), col("sig"),
-        col("ev.program_id").as("program_id"),
-        col("ev.instruction_index").as("instruction_index"),
-        col("ev.event_type").as("event_type"),
-        col("ev.raw_payload").as("raw_payload"))
       .select(
-        eventId(col("slot"), col("sig"), col("instruction_index"), col("event_type"))
+        eventId(col("slot"), col("sig"), col("ev.instruction_index"), col("ev.event_type"))
           .as("event_id"),
         col("slot"), col("block_time"), col("sig").as("tx_signature"),
-        col("program_id"), col("instruction_index"), col("event_type"),
-        col("raw_payload"))
+        col("ev.program_id").as("program_id"),
+        col("ev.instruction_index").as("instruction_index"),
+        col("ev.event_type").as("event_type"), col("ev.raw_payload").as("raw_payload"))
     // dedup=false for STREAMING inputs: on an unbounded DataFrame this
     // dedup would plan as stateful, with state (every event ever seen)
     // that grows without bound; streaming callers dedup per epoch in
@@ -138,12 +148,16 @@ object Parse {
     * sink read-back (`INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND`). A stream
     * keeps the stateful `dropDuplicates`, because a streaming aggregate
     * without a watermark cannot emit in append mode. */
-  def dedupEvents(events: DataFrame): DataFrame =
-    if (events.isStreaming) events.dropDuplicates("slot", "event_id")
+  def dedupEvents(events: DataFrame): DataFrame = dedupOn(events, "slot", "event_id")
+
+  /** One row per key, by [[dedupEvents]]' rule: an explicit first-row
+    * aggregate for a batch, `dropDuplicates` for a stream. */
+  private def dedupOn(df: DataFrame, keys: String*): DataFrame =
+    if (df.isStreaming) df.dropDuplicates(keys)
     else {
-      val cols = events.columns.toSeq
-      val firsts = cols.filterNot(Set("slot", "event_id")).map(c => first(c).as(c))
-      events.groupBy("slot", "event_id").agg(firsts.head, firsts.tail: _*)
+      val cols = df.columns.toSeq
+      val firsts = cols.filterNot(keys.toSet).map(c => first(c).as(c))
+      df.groupBy(keys.map(col): _*).agg(firsts.head, firsts.tail: _*)
         .select(cols.map(col): _*)
     }
 
@@ -153,38 +167,31 @@ object Parse {
 
   /** The reference's `etl_errors` channel (SCHEMA.md:303-320), actually
     * populated: the rows the tolerant parse DROPS, surfaced with a
-    * deterministic error_id and a reason instead of vanishing. The two
-    * branches mirror the two drop points — whole-block failures
-    * (parseBlocks' blockTime guard, parsers.rs:33-41) and
-    * per-transaction signature failures (toEvents' guard,
-    * parsers.rs:50-52). Same single-scan fan-out discipline as the
-    * happy path. */
+    * deterministic error_id and a reason instead of vanishing: one row
+    * per invalid block ([[validBlock]]) and one per unsigned transaction
+    * of a valid block ([[signed]]). Same single-scan fan-out as the happy
+    * path: each block is parsed once and yields its errors as one
+    * array, exploded once. */
   def parseErrors(raw: DataFrame): DataFrame = {
-    val parsed = raw.select(col("slot"),
-      from_json(col("block_json"), blockSchema).as("b"))
+    def err(txIndex: Column, errorType: String, message: String): Column =
+      struct(txIndex.as("tx_index"), lit(errorType).as("error_type"),
+        lit(message).as("error_message"))
     // position enters the id: two signature-less transactions in one
     // block must yield two distinct error rows (block-level errors use
     // index -1, mirroring the tx-event id convention)
-    val blockErrs = parsed
-      .filter(col("b").isNull || col("b.blockTime").isNull)
-      .select(col("slot"), lit(-1).as("tx_index"),
-        lit("block_parse_error").as("error_type"),
-        lit("missing or unparseable blockTime").as("error_message"))
-    val txErrs = parsed
-      .filter(col("b").isNotNull && col("b.blockTime").isNotNull)
-      .select(col("slot"),
-        posexplode(col("b.transactions")).as(Seq("tx_index", "tx")))
-      .filter(col("tx").isNull ||
-        try_element_at(col("tx.transaction.signatures"), lit(1)).isNull)
-      .select(col("slot"), col("tx_index"),
-        lit("tx_missing_signature").as("error_type"),
-        lit("transaction carries no signature").as("error_message"))
-    blockErrs.unionByName(txErrs)
+    val txErrs = filter(
+      transform(col("b.transactions"), (tx, i) =>
+        when(!signed(tx), err(i, "tx_missing_signature", "transaction carries no signature"))),
+      _.isNotNull)
+    parseBlocks(raw)
+      .select(col("slot"), explode(when(validBlock, txErrs).otherwise(array(
+        err(lit(-1), "block_parse_error", "missing or unparseable blockTime")))).as("e"))
       .select(
         sha2(concat_ws(":", col("slot").cast("string"),
-          col("tx_index").cast("string"), col("error_type")), 256)
+          col("e.tx_index").cast("string"), col("e.error_type")), 256)
           .as("error_id"),
-        col("slot"), col("tx_index"), col("error_type"), col("error_message"))
+        col("slot"), col("e.tx_index").as("tx_index"),
+        col("e.error_type").as("error_type"), col("e.error_message").as("error_message"))
   }
 
   /** Telemetry-event instruction_index namespace: tx events use -1,
@@ -215,7 +222,6 @@ object Parse {
     * last-write-wins) upstream.
     */
   def parseTelemetry(raw: DataFrame, dedup: Boolean = true): DataFrame = {
-    import graft.model.Schemas._
     val rec = raw
       .select(from_json(col("telemetry_json"), telemetrySchema).as("t"))
       .filter(col("t").isNotNull && col("t.ts").isNotNull &&
@@ -241,22 +247,9 @@ object Parse {
         col("t.request_id").as("request_id"),
         col("t.response_code").as("response_code"),
         col("t.latency_ms").as("latency_ms"))).as("raw_payload"))
-    if (dedup) events.dropDuplicates("event_id") else events
+    // slot is nullable and outside the id, so the key is event_id alone
+    if (dedup) dedupOn(events, "event_id") else events
   }
-
-  /** The per-transaction base slice every typed fact projection starts
-    * from: one row per signed transaction with its parsed struct. Same
-    * guards as [[toEvents]] (signature required, parsers.rs:50-52). */
-  private def txBase(blocks: DataFrame): DataFrame =
-    blocks.select(
-      col("slot"),
-      timestamp_seconds(col("b.blockTime")).as("block_time"),
-      explode(col("b.transactions")).as("tx"))
-      .filter(col("tx").isNotNull &&
-        try_element_at(col("tx.transaction.signatures"), lit(1)).isNotNull)
-      .select(col("slot"), col("block_time"),
-        try_element_at(col("tx.transaction.signatures"), lit(1)).as("sig"),
-        col("tx"))
 
   /** The first `Program log:`-prefixed entry of a transaction's log
     * messages — SCHEMA.md:105's `log_pattern_match` ("Matched log
@@ -290,7 +283,7 @@ object Parse {
     * the deterministic event_id (SCHEMA.md's PRIMARY KEY), preserving
     * the 1:1 canonical-event linkage.
     */
-  def factProgramEvents(blocks: DataFrame): DataFrame =
+  def factProgramEvents(blocks: DataFrame): DataFrame = dedupEvents(
     txBase(blocks)
       .select(col("slot"), col("block_time"), col("sig"),
         col("tx.meta.logMessages").as("log_messages"),
@@ -319,8 +312,7 @@ object Parse {
         col("log_messages"), col("log_pattern_match"),
         to_json(struct(col("ins.programId").as("programId"),
           col("ins.accounts").as("accounts"), col("ins.data").as("data")))
-          .as("raw_payload"))
-      .dropDuplicates("event_id")
+          .as("raw_payload")))
 
   /** fact_token_transfers (docs/SCHEMA.md:119-154): the typed SPL
     * transfer fact — one row per post-token-balance with a mint and an
@@ -350,39 +342,20 @@ object Parse {
     */
   def factTokenTransfers(blocks: DataFrame): DataFrame = {
     val base = txBase(blocks)
-
-    def bals(side: String) = base.select(
-      col("slot"), col("sig"),
-      explode(col(s"tx.meta.${side}TokenBalances")).as("bal"))
-      .filter(col("bal.mint").isNotNull)
-      .select(col("slot"), col("sig"),
-        col("bal.accountIndex").as("account_index"),
-        col("bal.mint").as("mint"),
-        col("bal.owner").as(s"${side}_owner"),
-        col("bal.uiTokenAmount.amount").cast("decimal(38,0)").as(s"${side}_amount"))
-
     // sender resolution: per (tx, mint), the account whose balance
     // decreased the most is the transfer's source — an equi-join +
     // bounded window over per-transaction keys (rows per key = token
     // accounts touched by ONE transaction, inherently small), so the
     // shape holds at any corpus size
-    val deltas = bals("pre")
-      .join(bals("post"), Seq("slot", "sig", "account_index", "mint"), "full_outer")
-      .select(col("slot"), col("sig"), col("account_index"), col("mint"),
-        coalesce(col("post_owner"), col("pre_owner")).as("owner"),
-        (coalesce(col("post_amount"), lit(0)) - coalesce(col("pre_amount"), lit(0)))
-          .as("delta"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("slot"), col("sig"), col("mint"))
       .orderBy(col("delta").asc, col("account_index").asc)
-    val senders = deltas.filter(col("delta") < 0)
+    val senders = balanceDeltas(base).filter(col("delta") < 0)
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("slot"), col("sig"), col("mint"), col("owner").as("from_wallet"))
 
-    base.select(
-      col("slot"), col("block_time"), col("sig"),
-      walletFromKey(try_element_at(col("tx.transaction.message.accountKeys"), lit(1)))
-        .as("authority"),
+    dedupEvents(base.select(
+      col("slot"), col("block_time"), col("sig"), col("wallet").as("authority"),
       posexplode(col("tx.meta.postTokenBalances")).as(Seq("pos", "bal")))
       .filter(col("bal.mint").isNotNull && col("bal.owner").isNotNull)
       .withColumn("mint", col("bal.mint"))
@@ -406,32 +379,40 @@ object Parse {
         to_json(struct(col("bal.mint").as("mint"),
           col("bal.owner").as("owner"),
           col("bal.uiTokenAmount.amount").as("amount"),
-          col("bal.uiTokenAmount.decimals").as("decimals"))).as("raw_payload"))
-      .dropDuplicates("event_id")
+          col("bal.uiTokenAmount.decimals").as("decimals"))).as("raw_payload")))
   }
 
-  /** Token-transfer netting the reference sketches but never implements
-    * (parsers.rs:179-182): full-outer join of pre/post balances on
-    * (signature, accountIndex, mint) with COALESCE-0 delta (SURVEY.md
-    * §2.3 J4). String-precision amounts become DecimalType(38,0) raw
-    * units — exact. */
-  def netTokenTransfers(blocks: DataFrame): DataFrame = {
-    def bals(side: String) = blocks.select(
-      col("slot"),
-      posexplode(col("b.transactions")).as(Seq("tx_index", "tx")))
-      .filter(col("tx").isNotNull)
-      .select(col("slot"),
-        try_element_at(col("tx.transaction.signatures"), lit(1)).as("sig"),
-        explode(col(s"tx.meta.${side}TokenBalances")).as("bal"))
+  /** One row per token balance with a mint on one side (`pre`/`post`)
+    * of each transaction; string-precision amounts become exact
+    * DecimalType(38,0) raw units. */
+  private def balances(txs: DataFrame, side: String): DataFrame =
+    txs.select(col("slot"), col("sig"),
+      explode(col(s"tx.meta.${side}TokenBalances")).as("bal"))
       .filter(col("bal.mint").isNotNull)
       .select(col("slot"), col("sig"),
         col("bal.accountIndex").as("account_index"), col("bal.mint").as("mint"),
+        col("bal.owner").as(s"${side}_owner"),
         col("bal.uiTokenAmount.amount").cast("decimal(38,0)").as(s"${side}_amount"))
 
-    bals("pre").join(bals("post"), Seq("slot", "sig", "account_index", "mint"), "full_outer")
+  /** Per (tx, account, mint): the account's owner and its post − pre
+    * balance delta — a full-outer join of the two sides with COALESCE-0
+    * (SURVEY.md §2.3 J4). */
+  private def balanceDeltas(txs: DataFrame): DataFrame =
+    balances(txs, "pre")
+      .join(balances(txs, "post"), Seq("slot", "sig", "account_index", "mint"), "full_outer")
       .select(col("slot"), col("sig"), col("account_index"), col("mint"),
+        coalesce(col("post_owner"), col("pre_owner")).as("owner"),
         (coalesce(col("post_amount"), lit(0)) - coalesce(col("pre_amount"), lit(0)))
-          .as("net_amount"))
+          .as("delta"))
+
+  /** Token-transfer netting the reference sketches but never implements
+    * (parsers.rs:179-182): [[balanceDeltas]] keyed on (signature,
+    * accountIndex, mint), nonzero deltas only. It nets every transaction
+    * of a valid block, signed or not. */
+  def netTokenTransfers(blocks: DataFrame): DataFrame =
+    balanceDeltas(blockTxs(blocks).filter(col("tx").isNotNull)
+      .withColumn("sig", firstSig(col("tx"))))
+      .select(col("slot"), col("sig"), col("account_index"), col("mint"),
+        col("delta").as("net_amount"))
       .filter(col("net_amount") =!= 0)
-  }
 }

@@ -1,8 +1,10 @@
 package graft.ingest
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.catalyst.plans.LeftAnti
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{QueryExecution, RangeExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
@@ -105,6 +107,31 @@ class IngestSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(collectWithSubqueries(writes.head) {
       case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
     }.size == 1, writes.head)
+  }
+
+  test("each block is parsed once per plan branch: one from_json per source scan") {
+    // (from_json calls, slot-range scans) of a frame's executed plan; a
+    // Filter on the parsed block would be pushed under the parse and add
+    // two more from_json calls per scan
+    def parsesPerScan(df: DataFrame): (Int, Int) = {
+      df.collect()
+      val p = df.queryExecution.executedPlan
+      val parses = collectWithSubqueries(p) { case n =>
+        n.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum
+      }.sum
+      (parses, collectWithSubqueries(p) { case r: RangeExec => r }.size)
+    }
+    def raw = Backfill.fetchRange(spark, 1L, 201L, workers = 4)
+    assert(parsesPerScan(Parse.parse(raw)) == (1, 1))
+    assert(parsesPerScan(Parse.parseErrors(raw)) == (1, 1))
+    assert(parsesPerScan(Parse.factProgramEvents(Parse.parseBlocks(raw))) == (1, 1))
+    // the joins scan the range once per branch (AQE drops a branch it
+    // finds empty, as the synthetic chain's sender side is)
+    for (df <- Seq(Parse.factTokenTransfers(Parse.parseBlocks(raw)),
+        Parse.netTokenTransfers(Parse.parseBlocks(raw)))) {
+      val (parses, scans) = parsesPerScan(df)
+      assert(parses == scans, (parses, scans))
+    }
   }
 
   test("each backfill task writes one file per date its slot chunk covers") {

@@ -49,23 +49,51 @@ object ParseProps extends Properties("Parse") {
       .stripMargin.replace("\n", "")
   }
 
-  private def blockJson(slot: Long, txs: Seq[GTx]): String =
-    s"""{"blockTime":${1704067200L + slot},"transactions":[${
-      txs.zipWithIndex.map { case (t, i) => txJson(slot, i, t) }.mkString(",")}]}"""
+  /** A generated block: valid, missing `blockTime` (its transactions are
+    * still well-formed), or not JSON at all. A `None` transaction is a
+    * null entry of the block's transactions array. */
+  private sealed trait Kind
+  private case object Valid extends Kind
+  private case object NoBlockTime extends Kind
+  private case object NotJson extends Kind
+  private case class GBlock(slot: Long, kind: Kind, txs: List[Option[GTx]])
 
-  private val genBlocks: Gen[List[(Long, List[GTx])]] =
-    Gen.choose(1, 4).flatMap { n =>
-      Gen.sequence[List[(Long, List[GTx])], (Long, List[GTx])](
-        (1 to n).map(s => Gen.listOfN(3, genTx).map(ts => (s.toLong, ts))))
+  private def blockJson(b: GBlock): String = {
+    val txs = b.txs.zipWithIndex.map {
+      case (Some(t), i) => txJson(b.slot, i, t)
+      case (None, _) => "null"
+    }.mkString(",")
+    b.kind match {
+      case Valid => s"""{"blockTime":${1704067200L + b.slot},"transactions":[$txs]}"""
+      case NoBlockTime => s"""{"blockhash":"bh_${b.slot}","transactions":[$txs]}"""
+      case NotJson => s"not json {${b.slot}"
     }
+  }
+
+  private val genBlocks: Gen[List[GBlock]] =
+    Gen.choose(1, 4).flatMap { n =>
+      Gen.sequence[List[GBlock], GBlock]((1 to n).map(s => for {
+        kind <- Gen.frequency(6 -> Valid, 1 -> NoBlockTime, 1 -> NotJson)
+        txs <- Gen.listOfN(3, Gen.frequency(9 -> genTx.map(Some(_)), 1 -> Gen.const(None)))
+      } yield GBlock(s.toLong, kind, txs)))
+    }
+
+  private def rawOf(blocks: List[GBlock]) = {
+    import spark.implicits._
+    blocks.map(b => (b.slot, blockJson(b))).toDF("slot", "block_json")
+  }
+
+  /** The transactions of valid blocks, null entries included. */
+  private def validTxs(blocks: List[GBlock]): List[Option[GTx]] =
+    blocks.filter(_.kind == Valid).flatMap(_.txs)
 
   property("fan-out counts, idempotency, id uniqueness") = forAll(genBlocks) { blocks =>
     import spark.implicits._
-    val raw = blocks.map { case (s, ts) => (s, blockJson(s, ts)) }.toDF("slot", "block_json")
+    val raw = rawOf(blocks)
     val parsed = Parse.parse(raw).cache()
     val n = parsed.count()
 
-    val signedTxs = blocks.flatMap(_._2).filter(_.signed)
+    val signedTxs = validTxs(blocks).flatten.filter(_.signed)
     val expected = signedTxs.size +                      // tx events
       signedTxs.map(_.nInstr).sum +                      // instruction events
       signedTxs.map(_.nBals).sum                         // transfer events
@@ -85,4 +113,21 @@ object ParseProps extends Properties("Parse") {
       (twice == n) :| "replaying input must not add events" &&
       successOk :| "success must be boolean"
   }
+
+  property("parse and parseErrors partition the blocks' transactions") =
+    forAll(genBlocks) { blocks =>
+      import spark.implicits._
+      val raw = rawOf(blocks)
+      val txEvents = Parse.parse(raw).filter($"event_type" === "transaction").count()
+      val errs = Parse.parseErrors(raw).select("error_type").as[String].collect()
+      val signed = validTxs(blocks).count(_.exists(_.signed))
+      val invalidBlocks = blocks.count(_.kind != Valid)
+      val unsigned = validTxs(blocks).size - signed
+      (txEvents == signed) :| s"tx events $txEvents != signed txs of valid blocks $signed" &&
+        (errs.count(_ == "block_parse_error") == invalidBlocks) :|
+          s"block errors ${errs.toSeq} != invalid blocks $invalidBlocks" &&
+        (errs.count(_ == "tx_missing_signature") == unsigned) :|
+          s"tx errors ${errs.toSeq} != unsigned txs $unsigned" &&
+        (errs.length == invalidBlocks + unsigned) :| "no other error rows"
+    }
 }

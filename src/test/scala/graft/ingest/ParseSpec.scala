@@ -83,6 +83,16 @@ class ParseSpec extends SparkSpec {
     val bad = """{"transactions":[]}"""
     assert(Parse.parse(rawDF(5L -> bad)).count() == 0)
     assert(Parse.parse(rawDF(5L -> "not json at all")).count() == 0)
+    // signed transactions with instructions and token balances do not
+    // save a block without blockTime, from any reader
+    val timeless = rawDF(5L -> transferBlock.replace(""""blockTime":1704067200,""", ""))
+    val blocks = Parse.parseBlocks(timeless)
+    assert(Parse.parse(timeless).count() == 0)
+    assert(Parse.factProgramEvents(blocks).count() == 0)
+    assert(Parse.factTokenTransfers(blocks).count() == 0)
+    assert(Parse.netTokenTransfers(blocks).count() == 0)
+    assert(Parse.parseErrors(timeless).select("error_type").as[String].collect()
+      .toSeq == Seq("block_parse_error"))
   }
 
   test("parseErrors surfaces exactly what the tolerant parse drops") {
@@ -261,6 +271,29 @@ class ParseSpec extends SparkSpec {
     assert(basic == Set(
       (EvProgramInstruction, null, null),
       (EvTokenInstruction, null, null)))
+  }
+
+  test("typed facts and telemetry compare with their read-back by exceptAll, both ways") {
+    // under exceptAll, a dropDuplicates dedup fails at execution with
+    // INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND
+    val dir = java.nio.file.Files.createTempDirectory("graft_parse_except").toString
+    val blocks = Parse.parseBlocks(
+      rawDF(20L -> transferBlock, 20L -> transferBlock, 10L -> basicBlock))
+    val telemetry = Seq(
+      """{"ts":1704067200,"slot":7,"user_id":"u1","api_endpoint":"/x","request_id":"r1"}""",
+      """{"ts":1704067260,"user_id":"u2","feature_name":"export","request_id":"r2"}""",
+      """{"ts":1704067260,"user_id":"u2","feature_name":"export","request_id":"r2"}""")
+      .toDF("telemetry_json")
+    for ((name, df) <- Seq(
+        "program_events" -> Parse.factProgramEvents(blocks),
+        "token_transfers" -> Parse.factTokenTransfers(blocks),
+        "telemetry" -> Parse.parseTelemetry(telemetry))) {
+      df.write.parquet(s"$dir/$name")
+      val back = spark.read.parquet(s"$dir/$name")
+      assert(back.count() > 0, name)
+      assert(df.exceptAll(back).isEmpty, name)
+      assert(back.exceptAll(df).isEmpty, name)
+    }
   }
 
   test("typed facts are replay-safe: replayed blocks collapse on event_id") {
